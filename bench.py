@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's CPU count) and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
@@ -89,7 +90,7 @@ def main() -> None:
     from delta_lake_spark.queries import QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     spark = (

@@ -2633,19 +2633,16 @@ def clear_funnel_memo(spark=None) -> None:
     """Unpersist and drop every memoized funnel stage set (one
     session's, or all sessions'). bench.py calls this between timed
     funnel runs; tests call it after plan inspection. Also drops the
-    (collected, model-sized) BPE merge memo for the same sessions."""
+    (collected, model-sized) trained-model memos for the same sessions."""
     with _FUNNEL_LOCK:
         keys = [id(spark)] if spark is not None else list(_FUNNEL_REG)
         slots = [_FUNNEL_REG.pop(k) for k in keys if k in _FUNNEL_REG]
-        for k in list(_BPE_MEMO):
-            if spark is None or k[0] == id(spark):
-                del _BPE_MEMO[k]
-        for k in list(_UNIGRAM_MEMO):
-            if spark is None or k[0] == id(spark):
-                del _UNIGRAM_MEMO[k]
-        for k in list(_WP_MEMO):
-            if spark is None or k[0] == id(spark):
-                del _WP_MEMO[k]
+        for memo in (
+            _BPE_MEMO, _UNIGRAM_MEMO, _WP_MEMO, _BYTE_BPE_MEMO, _PERCEPTRON_MEMO
+        ):
+            for k in list(memo):
+                if spark is None or k[0] == id(spark):
+                    del memo[k]
     for slot in slots:
         frames = [f for e in slot["chain"].values() for f in e["frames"]]
         frames += [f for dfs in slot["extras"].values() for f in dfs]

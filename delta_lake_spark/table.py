@@ -54,6 +54,7 @@ RETENTION_CHECK_CONF = "spark.delta_lake_spark.retentionDurationCheck.enabled"
 DV_CONF = "deletionVectors"  # table configuration key: "true" => DV deletes
 
 _ACTION_COL = "__dls_action"
+_SRC_COL = "__dls_src"
 
 
 _INT_WIDTH = {"byte": 1, "short": 2, "integer": 3, "long": 4}
@@ -86,6 +87,23 @@ def _as_column(cond: str | Column | None) -> Column | None:
     return F.expr(cond) if isinstance(cond, str) else cond
 
 
+def _first_firing(*groups: tuple[Column | None, list]) -> Column:
+    """Action id of the first clause whose guard and condition both hold,
+    over ``(guard, [(action id, clause), ...])`` groups in order; -1 = no
+    clause applies (keep the row as-is)."""
+    chain = None
+    for guard, clauses in groups:
+        for i, clause in clauses:
+            pred = _as_column(clause.get("condition"))
+            if guard is not None:
+                pred = guard if pred is None else guard & pred
+            if pred is None:
+                pred = F.lit(True)
+            branch = (pred, F.lit(i))
+            chain = F.when(*branch) if chain is None else chain.when(*branch)
+    return F.lit(-1) if chain is None else chain.otherwise(F.lit(-1))
+
+
 class MergeBuilder:
     """Accumulates WHEN MATCHED / WHEN NOT MATCHED clauses, then executes.
 
@@ -96,6 +114,18 @@ class MergeBuilder:
     Spark plans those as broadcast-nested-loop joins on its own.
     Clause order matters: the first clause whose condition holds wins,
     per Delta semantics.
+
+    A MERGE with a matched update clause runs in two passes. FIND is one
+    job: the target, with file and row ids, joined to the source; matches
+    are counted per row and folded to the largest count per file, which
+    gives the touched files and the multi-match check
+    (``MergeAmbiguityError``) in one collect. REWRITE is one outer join of
+    the touched files with the source (``left``, or ``full`` when insert
+    clauses exist); each row takes the first clause that fires among the
+    matched, by-source and insert clauses. COMMIT swaps the touched files
+    for the staged ones. Without an update clause a target row may match
+    several source rows, so the rewrite keeps each matched row once
+    through a semi join, and an anti join handles the rest.
     """
 
     def __init__(self, table: "DeltaTable", source: DataFrame, condition: str | Column):
@@ -172,14 +202,75 @@ class MergeBuilder:
             return F.col(f"{alias}.{name}")
         return self._source[name]
 
-    def _target_cols(self, schema: StructType, t_alias: str) -> list[Column]:
-        return [F.col(f"{t_alias}.{f.name}") for f in schema.fields]
+    def _output_cols(
+        self,
+        schema: StructType,
+        new_names: set[str],
+        t_alias: str,
+        clauses: list[tuple[int, dict[str, Any]]],
+        rt: bool,
+        target: bool = True,
+    ) -> list[Column]:
+        """One select list for rows whose ``_ACTION_COL`` names the clause
+        that fired (``clauses`` pairs each clause with its action id). An
+        update or insert clause sets the columns it names; every other
+        value is the target row's own: null for evolved columns, for rows
+        with no target side, and with ``target=False`` (source-only
+        frames). With row tracking, rows keep their row id and updated
+        rows take this commit's version (null materialized -> the new
+        file's default); inserted rows get fresh ids: baseRowId +
+        position."""
+        src_names = set(self._source.columns)
+        fired = {
+            i: F.col(_ACTION_COL) == i for i, c in clauses if c["kind"] != "delete"
+        }
+        cols = []
+        for f in schema.fields:
+            name, dtype = f.name, f.dataType
+            base = (
+                F.col(f"{t_alias}.{name}")
+                if target and name not in new_names
+                else F.lit(None).cast(dtype)
+            )
+            chain = None
+            for i, clause in clauses:
+                kind = clause["kind"]
+                if kind in ("update", "insert"):
+                    given = clause["set" if kind == "update" else "values"]
+                    v = _as_column(given.get(name))
+                elif kind in ("update_all", "insert_all") and name in src_names:
+                    # SET * / INSERT * map source columns; the rest keep
+                    # the target's value (an insert has none: null)
+                    v = self._source_col(name)
+                else:
+                    v = None
+                if v is None:
+                    continue
+                branch = (fired[i], v.cast(dtype))
+                chain = F.when(*branch) if chain is None else chain.when(*branch)
+            cols.append((base if chain is None else chain.otherwise(base)).alias(name))
+        if rt:
+            if target:
+                row_id = F.col(f"{t_alias}.{rowtracking.ROW_ID}")
+                commit = F.col(f"{t_alias}.{rowtracking.ROW_COMMIT}")
+                updated = [
+                    i for i, c in clauses if c["kind"] in ("update", "update_all")
+                ]
+                if updated:
+                    commit = F.when(
+                        F.col(_ACTION_COL).isin(updated), F.lit(None).cast("long")
+                    ).otherwise(commit)
+            else:
+                row_id = commit = F.lit(None).cast("long")
+            cols += [
+                row_id.alias(rowtracking.MAT_ROW_ID),
+                commit.alias(rowtracking.MAT_ROW_COMMIT),
+            ]
+        return cols
 
     def execute(self, operation_parameters: dict[str, Any] | None = None) -> int:
         t = self._table
-        spark = t.spark
-        log = t._log
-        snap = log.snapshot()
+        snap = t._log.snapshot()
         schema = schema_of(snap)
         new_fields: list = []
         if self._evolve:
@@ -194,280 +285,171 @@ class MergeBuilder:
             if new_fields:
                 schema = StructType(list(schema.fields) + new_fields)
         new_names = {f.name for f in new_fields}
-        col_names = [f.name for f in schema.fields]
         t_alias = t._alias or "target"
-        src = self._source
+        # the marker is non-null exactly on rows that have a source side
+        src = self._source.withColumn(_SRC_COL, F.lit(True))
         if t._source_alias:
             src = src.alias(t._source_alias)
         cond = _as_column(self._condition)
 
         bys = self._not_matched_by_source
-        insert_only = not self._matched and not bys
-        if not insert_only:
+        if self._matched or bys:
             # insert-only MERGE is a pure append and stays allowed
             check_append_only(snap, "MERGE with matched clauses")
         rt = rowtracking.enabled(snap)
+        # action ids: matched clauses, then by-source clauses, then inserts
+        n_m, n_b = len(self._matched), len(bys)
+        matched = list(enumerate(self._matched))
+        by_source = [(n_m + j, c) for j, c in enumerate(bys)]
+        inserts = [(n_m + n_b + k, c) for k, c in enumerate(self._not_matched)]
+        delete_ids = [i for i, c in matched + by_source if c["kind"] == "delete"]
+        # an update clause makes multi-match an error, which is what lets
+        # one outer join stand for the whole rewrite (see FIND below)
+        updates = any(c["kind"] != "delete" for c in self._matched)
+        action = F.col(_ACTION_COL)
+        bys_fire = None
+        if bys:
+            bys_fire = F.lit(False)
+            for clause in bys:
+                ci = _as_column(clause.get("condition"))
+                bys_fire = bys_fire | (ci if ci is not None else F.lit(True))
 
         touched: list[str] = []
-        if not insert_only and snap.files:
+        if (self._matched or bys) and snap.files:
             with_file = t._read_files(sorted(snap.files), with_meta=True).alias(t_alias)
             uri_to_log = {file_uri(t.path, p): p for p in snap.files}
-            touched_set: set[str] = set()
-            if self._matched:
-                # only matched clauses mutate rows that DO match the
-                # source; a by-source-only merge leaves matched rows
-                # untouched, so those files need no rewrite (and no scan)
-                touched_rows = (
-                    with_file.join(src, cond, "left_semi")
-                    .select(_FILE_COL)
-                    .distinct()
-                    .collect()
+            file_col = F.col(f"{t_alias}.{_FILE_COL}").alias(_FILE_COL)
+            if updates:
+                # FIND, one job: the matches per target row, folded to
+                # the largest per file. A file is touched when it holds a
+                # matched row (or, with by-source clauses, an unmatched
+                # row one of them fires on); any row matched twice is
+                # ambiguous under an update clause.
+                keys = [file_col, F.col(f"{t_alias}.{_ROW_COL}").alias(_ROW_COL)]
+                per_file = [F.max("n").alias("n")]
+                if bys:
+                    keys.append(F.coalesce(bys_fire, F.lit(False)).alias("fire"))
+                    unmatched_fire = F.col("fire") & (F.col("n") == 0)
+                    per_file.append(F.max(unmatched_fire).alias("fire"))
+                found = (
+                    with_file.join(src, cond, "left" if bys else "inner")
+                    .groupBy(*keys)
+                    .agg(F.count(_SRC_COL).alias("n"))
+                    .groupBy(_FILE_COL)
+                    .agg(*per_file)
                 )
-                touched_set = {uri_to_log[r[_FILE_COL]] for r in touched_rows}
-            if bys:
-                # by-source clauses mutate target rows that match NOTHING
-                # in the source, so files untouched by the semi-join may
-                # still need a rewrite: any file holding an anti-join row
-                # where some clause condition fires
-                fire = F.lit(False)
-                for clause in bys:
-                    ci = _as_column(clause.get("condition"))
-                    fire = fire | (ci if ci is not None else F.lit(True))
-                bys_rows = (
-                    with_file.join(src, cond, "left_anti")
-                    .filter(fire)
-                    .select(_FILE_COL)
-                    .distinct()
-                    .collect()
-                )
-                touched_set |= {uri_to_log[r[_FILE_COL]] for r in bys_rows}
-            touched = sorted(touched_set)
-
-        outputs: list[DataFrame] = []
-        n_update_clauses = sum(1 for c in self._matched if c["kind"] != "delete")
-
-        if touched:
-            t_touched = t._read_files(touched, with_meta=True, row_ids=rt).alias(
-                t_alias
-            )
-
-            joined = t_touched.join(src, cond, "inner")
-            # first-matching-clause disposition; -1 = no clause applies -> keep row as-is
-            action: Column = F.lit(-1)
-            chain = F.when(F.lit(False), F.lit(-1))
-            for i, clause in enumerate(self._matched):
-                ci = _as_column(clause.get("condition"))
-                chain = chain.when(ci if ci is not None else F.lit(True), F.lit(i))
-            action = chain.otherwise(F.lit(-1))
-            joined = joined.withColumn(_ACTION_COL, action)
-
-            if n_update_clauses:
-                # Delta semantics: a target row matched by >1 source row is
-                # ambiguous when an update clause exists
-                dup = (
-                    joined.groupBy(F.col(f"{t_alias}.{_FILE_COL}"), F.col(f"{t_alias}.{_ROW_COL}"))
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if dup:
+                if bys:
+                    found = found.filter((F.col("n") > 0) | F.col("fire"))
+                rows = found.collect()
+                if any(r["n"] > 1 for r in rows):
                     raise MergeAmbiguityError(
                         "MERGE: a target row matched multiple source rows "
                         "while an update clause is present"
                     )
-
-            delete_ids = [i for i, c in enumerate(self._matched) if c["kind"] == "delete"]
-            out_cols = []
-            for name in col_names:
-                base = (
-                    F.lit(None).cast(schema[name].dataType)
-                    if name in new_names  # evolved: target files lack it
-                    else F.col(f"{t_alias}.{name}")
-                )
-                val = base
-                expr_chain = None
-                for i, clause in enumerate(self._matched):
-                    if clause["kind"] == "update":
-                        upd = clause["set"].get(name)
-                        v = _as_column(upd) if upd is not None else base
-                    elif clause["kind"] == "update_all":
-                        # UPDATE SET * maps source columns; target-only
-                        # columns keep their current values
-                        v = (
-                            self._source_col(name)
-                            if name in self._source.columns
-                            else base
-                        )
-                    else:
-                        continue
-                    branch = (F.col(_ACTION_COL) == i, v.cast(schema[name].dataType))
-                    expr_chain = (
-                        F.when(*branch) if expr_chain is None else expr_chain.when(*branch)
-                    )
-                if expr_chain is not None:
-                    val = expr_chain.otherwise(base)
-                out_cols.append(val.alias(name))
-            if rt:
-                # updated rows keep their row id but take this commit's
-                # version (null materialized -> new file's default);
-                # rows kept as-is keep both
-                update_ids = [
-                    i
-                    for i, c in enumerate(self._matched)
-                    if c["kind"] in ("update", "update_all")
-                ]
-                out_cols.append(
-                    F.col(f"{t_alias}.{rowtracking.ROW_ID}").alias(
-                        rowtracking.MAT_ROW_ID
-                    )
-                )
-                rcv = F.col(f"{t_alias}.{rowtracking.ROW_COMMIT}")
-                if update_ids:
-                    rcv = F.when(
-                        F.col(_ACTION_COL).isin(update_ids),
-                        F.lit(None).cast("long"),
-                    ).otherwise(rcv)
-                out_cols.append(rcv.alias(rowtracking.MAT_ROW_COMMIT))
-
-            if n_update_clauses:
-                matched_out = joined
-                if delete_ids:
-                    matched_out = matched_out.filter(
-                        ~F.col(_ACTION_COL).isin(delete_ids)
-                    )
-                matched_out = matched_out.select(*out_cols)
+                touched = sorted(uri_to_log[r[_FILE_COL]] for r in rows)
             else:
-                # No update clause: every surviving matched row keeps its
-                # current values, so rebuild from the target side alone.
-                # left_semi emits each target row exactly once even when
-                # >1 source row matches — the inner join above would write
-                # a multiply-matched row once per matching source row.
-                matched_out = t_touched.join(src, cond, "left_semi")
+                touched_set: set[str] = set()
+                if self._matched:
+                    # only matched clauses mutate rows that DO match the
+                    # source; a by-source-only merge leaves matched rows
+                    # untouched, so those files need no rewrite (and no scan)
+                    touched_rows = (
+                        with_file.join(src, cond, "left_semi")
+                        .select(file_col)
+                        .distinct()
+                        .collect()
+                    )
+                    touched_set = {uri_to_log[r[_FILE_COL]] for r in touched_rows}
+                if bys:
+                    # by-source clauses mutate target rows that match NOTHING
+                    # in the source, so files untouched by the semi-join may
+                    # still need a rewrite: any file holding an anti-join row
+                    # where some clause condition fires
+                    bys_rows = (
+                        with_file.join(src, cond, "left_anti")
+                        .filter(bys_fire)
+                        .select(file_col)
+                        .distinct()
+                        .collect()
+                    )
+                    touched_set |= {uri_to_log[r[_FILE_COL]] for r in bys_rows}
+                touched = sorted(touched_set)
+
+        def out_cols(clauses, target=True):
+            return self._output_cols(schema, new_names, t_alias, clauses, rt, target)
+
+        def inserted(source_only: DataFrame) -> DataFrame:
+            return (
+                source_only.withColumn(_ACTION_COL, _first_firing((None, inserts)))
+                .filter(action >= 0)
+                .select(*out_cols(inserts, target=False))
+            )
+
+        outputs: list[DataFrame] = []
+        t_touched = (
+            t._read_files(touched, with_meta=True, row_ids=rt).alias(t_alias)
+            if touched
+            else None
+        )
+        if updates:
+            # REWRITE, one outer join of the touched files with the source.
+            # Once FIND has passed, each target row has at most one match
+            # and every file holding a matched row is touched, so a source
+            # row with no match in the touched files has none anywhere.
+            if t_touched is not None:
+                has_target = F.col(f"{t_alias}.{_FILE_COL}").isNotNull()
+                has_source = F.col(_SRC_COL).isNotNull()
+                rows = t_touched.join(src, cond, "full" if inserts else "left")
+                rows = rows.withColumn(
+                    _ACTION_COL,
+                    _first_firing(
+                        (has_target & has_source, matched),
+                        (~has_source, by_source),
+                        (~has_target, inserts),
+                    ),
+                )
+                keep = None
+                if inserts:  # source-only rows survive only when inserted
+                    keep = has_target | (action >= 0)
                 if delete_ids:
+                    survives = ~action.isin(delete_ids)
+                    keep = survives if keep is None else keep & survives
+                if keep is not None:
+                    rows = rows.filter(keep)
+                outputs.append(rows.select(*out_cols(matched + by_source + inserts)))
+            elif inserts:  # nothing matched: every source row is source-only
+                outputs.append(inserted(src))
+        else:
+            if t_touched is not None:
+                # No update clause, so multi-match is legal and every
+                # surviving matched row keeps its current values: rebuild
+                # from the target side alone. left_semi emits each target
+                # row exactly once even when >1 source row matches.
+                kept = t_touched.join(src, cond, "left_semi")
+                if self._matched:  # all of them deletes here
                     # drop rows where ANY matching source row fires a
-                    # delete clause (Delta allows multi-match for
-                    # delete-only merges; the result is deterministic)
+                    # delete clause (the result is deterministic)
                     del_keys = (
-                        joined.filter(F.col(_ACTION_COL).isin(delete_ids))
+                        t_touched.join(src, cond, "inner")
+                        .filter(_first_firing((None, matched)) >= 0)
                         .select(
                             F.col(f"{t_alias}.{_FILE_COL}").alias(_FILE_COL),
                             F.col(f"{t_alias}.{_ROW_COL}").alias(_ROW_COL),
                         )
                         .distinct()
                     )
-                    matched_out = matched_out.join(
-                        del_keys, [_FILE_COL, _ROW_COL], "left_anti"
-                    )
-                matched_out = matched_out.select(*out_cols)
-            outputs.append(matched_out)
-
-            anti = t_touched.join(src, cond, "left_anti")
-            if bys:
-                # first-true by-source clause per row; -1 = keep as-is
-                chain = F.when(F.lit(False), F.lit(-1))
-                for i, clause in enumerate(bys):
-                    ci = _as_column(clause.get("condition"))
-                    chain = chain.when(
-                        ci if ci is not None else F.lit(True), F.lit(i)
-                    )
-                anti = anti.withColumn(_ACTION_COL, chain.otherwise(F.lit(-1)))
-                bys_delete_ids = [
-                    i for i, c in enumerate(bys) if c["kind"] == "delete"
-                ]
-                bys_update_ids = [
-                    i for i, c in enumerate(bys) if c["kind"] == "update"
-                ]
-                unmatched_cols = []
-                for n in col_names:
-                    base = (
-                        F.lit(None).cast(schema[n].dataType)
-                        if n in new_names
-                        else F.col(f"{t_alias}.{n}")
-                    )
-                    val = base
-                    expr_chain = None
-                    for i, clause in enumerate(bys):
-                        if clause["kind"] != "update":
-                            continue
-                        upd = clause["set"].get(n)
-                        v = _as_column(upd) if upd is not None else base
-                        branch = (
-                            F.col(_ACTION_COL) == i,
-                            v.cast(schema[n].dataType),
-                        )
-                        expr_chain = (
-                            F.when(*branch)
-                            if expr_chain is None
-                            else expr_chain.when(*branch)
-                        )
-                    if expr_chain is not None:
-                        val = expr_chain.otherwise(base)
-                    unmatched_cols.append(val.alias(n))
-                if rt:
-                    unmatched_cols.append(
-                        F.col(f"{t_alias}.{rowtracking.ROW_ID}").alias(
-                            rowtracking.MAT_ROW_ID
-                        )
-                    )
-                    rcv = F.col(f"{t_alias}.{rowtracking.ROW_COMMIT}")
-                    if bys_update_ids:
-                        rcv = F.when(
-                            F.col(_ACTION_COL).isin(bys_update_ids),
-                            F.lit(None).cast("long"),
-                        ).otherwise(rcv)
-                    unmatched_cols.append(rcv.alias(rowtracking.MAT_ROW_COMMIT))
-                if bys_delete_ids:
-                    anti = anti.filter(~F.col(_ACTION_COL).isin(bys_delete_ids))
-                outputs.append(anti.select(*unmatched_cols))
-            else:
-                unmatched_cols = [
-                    F.lit(None).cast(schema[n].dataType).alias(n)
-                    if n in new_names
-                    else F.col(f"{t_alias}.{n}").alias(n)
-                    for n in col_names
-                ]
-                if rt:
-                    unmatched_cols += [
-                        F.col(f"{t_alias}.{rowtracking.ROW_ID}").alias(
-                            rowtracking.MAT_ROW_ID
-                        ),
-                        F.col(f"{t_alias}.{rowtracking.ROW_COMMIT}").alias(
-                            rowtracking.MAT_ROW_COMMIT
-                        ),
-                    ]
-                outputs.append(anti.select(*unmatched_cols))
-
-        if self._not_matched:
-            t_for_anti = t.toDF().alias(t_alias)
-            src_unmatched = src.join(t_for_anti, cond, "left_anti")
-            for clause in self._not_matched:
-                branch = src_unmatched
-                ci = _as_column(clause.get("condition"))
-                if ci is not None:
-                    branch = branch.filter(ci)
-                if clause["kind"] == "insert_all":
-                    cols = [
-                        self._source_col(n).cast(schema[n].dataType).alias(n)
-                        if n in src_unmatched.columns
-                        else F.lit(None).cast(schema[n].dataType).alias(n)
-                        for n in col_names
-                    ]
-                else:
-                    values = clause["values"]
-                    cols = [
-                        _as_column(values[n]).cast(schema[n].dataType).alias(n)
-                        if n in values
-                        else F.lit(None).cast(schema[n].dataType).alias(n)
-                        for n in col_names
-                    ]
-                if rt:
-                    # inserted rows get fresh ids: baseRowId + position
-                    cols += [
-                        F.lit(None).cast("long").alias(rowtracking.MAT_ROW_ID),
-                        F.lit(None).cast("long").alias(rowtracking.MAT_ROW_COMMIT),
-                    ]
-                outputs.append(branch.select(*cols))
+                    kept = kept.join(del_keys, [_FILE_COL, _ROW_COL], "left_anti")
+                outputs.append(kept.select(*out_cols([])))
+                unmatched = t_touched.join(src, cond, "left_anti").withColumn(
+                    _ACTION_COL, _first_firing((None, by_source))
+                )
+                if delete_ids:
+                    unmatched = unmatched.filter(~action.isin(delete_ids))
+                outputs.append(unmatched.select(*out_cols(by_source)))
+            if inserts:
+                outputs.append(
+                    inserted(src.join(t.toDF().alias(t_alias), cond, "left_anti"))
+                )
 
         if not outputs:
             return snap.version

@@ -13,7 +13,7 @@ from __future__ import annotations
 import uuid
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from delta_lake_spark import DeltaTable, read_delta, write_delta
@@ -29,6 +29,13 @@ _matched_plan = st.sampled_from(
     ["update", "delete", "cond_update_then_delete", "none"]
 )
 _insert_plan = st.booleans()
+# join conditions that all mean "same id": the equi join, and non-equi
+# forms (range, RLIKE) that Spark plans as nested-loop joins, full outer
+# join included
+_EQ = "t.id = s.id"
+_RANGE = "t.id >= s.id AND t.id < s.id + 1"
+_RLIKE = "CAST(t.id AS STRING) RLIKE CONCAT('^', CAST(s.id AS STRING), '$')"
+_condition = st.sampled_from([_EQ, _RANGE, _RLIKE])
 
 
 def _model(
@@ -77,9 +84,18 @@ def scratch_root(tmp_path_factory):
     source=_source_rows,
     matched=_matched_plan,
     insert=_insert_plan,
+    cond=_condition,
+)
+@example(
+    target={1: 5, 2: 60, 3: 7}, source={2: 70, 3: 10, 9: 1},
+    matched="cond_update_then_delete", insert=True, cond=_RANGE,
+)
+@example(
+    target={1: 5, 2: 60}, source={2: 70, 4: 80},
+    matched="update", insert=True, cond=_RLIKE,
 )
 def test_merge_matches_relational_model(
-    spark, scratch_root, target, source, matched, insert
+    spark, scratch_root, target, source, matched, insert, cond
 ):
     if matched == "none" and not insert:
         return  # empty clause set is rejected by construction elsewhere
@@ -96,7 +112,7 @@ def test_merge_matches_relational_model(
     ) if source else spark.createDataFrame([], "id long, val long")
 
     dt = DeltaTable.forPath(spark, path)
-    m = dt.alias("t").merge(source_df, "t.id = s.id", source_alias="s")
+    m = dt.alias("t").merge(source_df, cond, source_alias="s")
     if matched == "update":
         m = m.whenMatchedUpdate(set={"val": "s.val"})
     elif matched == "delete":

@@ -1,6 +1,8 @@
 """Mutation engine: DELETE / UPDATE / MERGE variants, matching the
 reference's usage shapes (SURVEY.md §2.8 M1-M7)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -146,17 +148,77 @@ def test_merge_rlike_condition(spark, tmp_table):
     assert len(got) == 1 and "bob" in got[0].value
 
 
-def test_merge_ambiguity_raises(spark, table):
+def _parquet_files(root):
+    return {
+        os.path.join(d, n)
+        for d, _dirs, names in os.walk(root)
+        for n in names
+        if n.endswith(".parquet")
+    }
+
+
+def test_merge_ambiguity_raises(spark, table, tmp_table):
+    """Multi-match under an update clause fails in FIND, before anything
+    is staged: no new version and no new parquet file."""
     dup_src = spark.createDataFrame(
-        [(1, "a"), (1, "b")], "device_id long, new_status string"
+        [(1, "a"), (1, "b"), (500, "c")], "device_id long, new_status string"
     )
+    version, files = table.version(), _parquet_files(tmp_table)
     with pytest.raises(MergeAmbiguityError):
         (
             table.alias("t")
             .merge(dup_src, "t.device_id = s.device_id", source_alias="s")
             .whenMatchedUpdate(set={"status": "s.new_status"})
+            .whenNotMatchedInsertAll()
             .execute()
         )
+    assert table.version() == version
+    assert _parquet_files(tmp_table) == files
+
+
+def test_merge_update_insert_plan_shape(spark, table, tmp_table, monkeypatch):
+    """An update + insert MERGE makes two passes: one inner join (FIND:
+    touched files and the multi-match check in one collect), then one
+    full outer join (REWRITE). No semi/anti join, no limit probe."""
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+
+    hows, limits = [], []
+    join, limit = DataFrame.join, DataFrame.limit
+
+    def spy_join(self, other, on=None, how=None):
+        hows.append(how)
+        return join(self, other, on, how)
+
+    def spy_limit(self, num):
+        limits.append(num)
+        return limit(self, num)
+
+    monkeypatch.setattr(DataFrame, "join", spy_join)
+    monkeypatch.setattr(DataFrame, "limit", spy_limit)
+    src = spark.createDataFrame(
+        [(3, 0, 1.0, "updated"), (1000, 0, 2.0, "inserted")],
+        "device_id long, p_device_id int, heartrate double, status string",
+    )
+    (
+        table.alias("t")
+        .merge(src, "t.device_id = s.device_id", source_alias="s")
+        .whenMatchedUpdate(set={"status": "s.status"})
+        .whenNotMatchedInsert(
+            values={
+                "device_id": "s.device_id",
+                "p_device_id": "s.p_device_id",
+                "heartrate": "s.heartrate",
+                "status": "s.status",
+            }
+        )
+        .execute()
+    )
+    monkeypatch.undo()
+    assert hows == ["inner", "full"]
+    assert limits == []
+    got = read_delta(spark, tmp_table)
+    assert got.count() == 101
+    assert {r.device_id for r in got.filter("status != 'new'").collect()} == {3, 1000}
 
 
 def test_merge_untouched_files_not_rewritten(spark, table):

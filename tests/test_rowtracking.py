@@ -113,6 +113,24 @@ def test_merge_preserves_updates_and_assigns_fresh_inserts(spark, rt_table):
     assert len(set(all_ids)) == len(all_ids)
     assert all(after[k][0] > 99 for k in range(100, 110))  # fresh range
 
+    # a source that matches no target row: nothing is rewritten, every
+    # source row is inserted with a fresh id, existing rows keep theirs
+    files = set(dt._log.snapshot().files)
+    src = spark.range(200, 205).select(F.col("id"), F.lit(8).alias("v"))
+    v2 = (
+        dt.merge(src.alias("s"), "target.id = s.id")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    assert files <= set(dt._log.snapshot().files)
+    final = _ids(spark, rt_table)
+    assert set(final) == set(range(110)) | set(range(200, 205))
+    assert all(final[k] == after[k] for k in after)
+    fresh = [final[k][0] for k in range(200, 205)]
+    assert len(set(fresh)) == 5 and min(fresh) > max(all_ids)
+    assert all(final[k][1] == v2 for k in range(200, 205))
+
 
 def test_optimize_and_purge_and_dv_delete_stable(spark, rt_table):
     dt = DeltaTable(spark, rt_table)

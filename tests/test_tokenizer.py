@@ -656,3 +656,24 @@ def test_wordpiece_memo_lifecycle(spark):
     assert _wp_merges(spark, sf) is first  # memo hit
     clear_funnel_memo(spark)
     assert not any(k[0] == id(spark) for k in _WP_MEMO)
+
+
+def test_clear_funnel_memo_drops_byte_bpe_and_perceptron_memos(spark):
+    from delta_lake_spark.queries.llm import (
+        _BYTE_BPE_MEMO,
+        _PERCEPTRON_MEMO,
+        clear_funnel_memo,
+    )
+
+    other = (-1, "other-session")
+    for memo in (_BYTE_BPE_MEMO, _PERCEPTRON_MEMO):
+        memo[(id(spark), "sf")] = ["trained"]
+        memo[other] = ["kept"]
+    try:
+        clear_funnel_memo(spark)
+        for memo in (_BYTE_BPE_MEMO, _PERCEPTRON_MEMO):
+            assert not any(k[0] == id(spark) for k in memo)
+            assert memo[other] == ["kept"]  # other sessions' entries stay
+    finally:
+        _BYTE_BPE_MEMO.pop(other, None)
+        _PERCEPTRON_MEMO.pop(other, None)
