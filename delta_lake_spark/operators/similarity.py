@@ -2230,8 +2230,11 @@ def ivfpq_topk(
         # MEMORY_AND_DISK (persist default) spills rather than OOMs, and
         # the registry (its own group — never evicts the tiny quantizer
         # rows) / bench memo-clearing bound its lifetime exactly like
-        # the quantizer persists
-        vres = register_persisted(vres.persist(), "ann_residual_corpus")
+        # the quantizer persists. The frame is corpus-sized, so the
+        # group keeps only the newest one
+        vres = register_persisted(
+            vres.persist(), "ann_residual_corpus", capacity=1
+        )
         # 1-row residual codebook, persisted for the same reason as
         # cells_one: it broadcasts into both the encode and the
         # per-probe ADC-map branches

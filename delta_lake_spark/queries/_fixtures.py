@@ -22,10 +22,16 @@ Sharing discipline:
     this engine's Delta log are table-relative (log.py:22), so a
     recursive copy is a fully independent, valid table.
 
-Immutability contract (mirrors the funnel memo, llm.py): the parquet
-under ``sf_dir`` is assumed immutable for the process lifetime. The
-memo key is (kind, sf_dir); artifacts live under a per-PID scratch
-root so concurrent pytest workers never share half-built state.
+Immutability contract (mirrors the session memo, operators/_cache.py):
+the parquet under ``sf_dir`` is assumed immutable for the process
+lifetime. The memo key is (kind, sf_dir); artifacts live under a
+per-PID scratch root so concurrent pytest workers never share
+half-built state. The memo is process-scoped, not per session, because
+its artifacts are directories and not session objects; its claims are
+the session memo's (``get_or_build``): a second consumer of one key
+waits for the first build, and independent artifacts (a query's corpus
+table and base index both derive from the parquet, not from each
+other; see fetch_parallel) build concurrently.
 """
 
 from __future__ import annotations
@@ -37,42 +43,13 @@ import threading
 
 from pyspark.sql import functions as F
 
+from ..operators._cache import get_or_build
+
 _FIX_ROOT = f"/tmp/dls_query_tables/fixtures_{os.getpid()}"
-# key -> {"event": Event set when the build finishes, "path": str,
-#         "err": BaseException | None}; per-key claims let INDEPENDENT
-# artifacts build concurrently (a query's corpus table and base index
-# both derive from the parquet, not from each other — see
-# fetch_parallel), while a second consumer of the SAME key waits on
-# the first build instead of duplicating it
+# (kind, sf_dir) -> claim entry whose value is the artifact directory
 _MEMO: dict[tuple[str, str], dict] = {}
 _LOCK = threading.Lock()
 _CLONES = itertools.count()
-
-# the builds drop spark.sql.shuffle.partitions to 2 (tiny multi-commit
-# fixtures: cost is per-action task latency, not data); the session
-# conf is GLOBAL, so concurrent builds reference-count the override
-# and only the outermost enter/exit touches it
-_CONF_LOCK = threading.Lock()
-_conf_depth = 0
-_conf_prev: str | None = None
-
-
-def _enter_low_parallelism(spark) -> None:
-    global _conf_depth, _conf_prev
-    with _CONF_LOCK:
-        if _conf_depth == 0:
-            _conf_prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "2")
-        _conf_depth += 1
-
-
-def _exit_low_parallelism(spark) -> None:
-    global _conf_depth, _conf_prev
-    with _CONF_LOCK:
-        _conf_depth -= 1
-        if _conf_depth == 0 and _conf_prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", _conf_prev)
-            _conf_prev = None
 
 
 def _path(kind: str, sf_dir: str) -> str:
@@ -80,40 +57,19 @@ def _path(kind: str, sf_dir: str) -> str:
     return os.path.join(_FIX_ROOT, f"{kind}_{tag}")
 
 
-def _memoized(spark, kind: str, sf_dir: str, build) -> str:
-    key = (kind, sf_dir)
-    with _LOCK:
-        entry = _MEMO.get(key)
-        if entry is None:
-            entry = {"event": threading.Event(), "path": None, "err": None}
-            _MEMO[key] = entry
-            claimed = True
-        else:
-            claimed = False
-    if not claimed:
-        entry["event"].wait()
-        if entry["err"] is not None:
-            raise entry["err"]
-        return entry["path"]
-    path = _path(kind, sf_dir)
-    try:
+def _memoized(kind: str, sf_dir: str, build) -> str:
+    def build_dir():
+        path = _path(kind, sf_dir)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path, exist_ok=True)
-        _enter_low_parallelism(spark)
         try:
             build(path)
-        finally:
-            _exit_low_parallelism(spark)
-        entry["path"] = path
-    except BaseException as e:
-        shutil.rmtree(path, ignore_errors=True)
-        entry["err"] = e
-        with _LOCK:
-            _MEMO.pop(key, None)  # let a later caller retry the build
-        raise
-    finally:
-        entry["event"].set()
-    return entry["path"]
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        return path
+
+    return get_or_build(_MEMO, _LOCK, (kind, sf_dir), build_dir)
 
 
 def fetch_parallel(*thunks):
@@ -192,7 +148,7 @@ def docs_corpus_cdf(spark, sf_dir: str) -> str:
         write_delta(docs_day2(docs), path, mode="append")  # v1
         DeltaTable.forPath(spark, path).delete("doc_id % 10 = 0")  # v2
 
-    return _memoized(spark, "docs_corpus_cdf", sf_dir, build)
+    return _memoized("docs_corpus_cdf", sf_dir, build)
 
 
 def emb_corpus_cdf(spark, sf_dir: str) -> str:
@@ -212,7 +168,7 @@ def emb_corpus_cdf(spark, sf_dir: str) -> str:
         write_delta(day2, path, mode="append")  # v1
         DeltaTable.forPath(spark, path).delete("vec_id % 10 = 0")  # v2
 
-    return _memoized(spark, "emb_corpus_cdf", sf_dir, build)
+    return _memoized("emb_corpus_cdf", sf_dir, build)
 
 
 def lsh_base_index(spark, sf_dir: str) -> str:
@@ -228,7 +184,7 @@ def lsh_base_index(spark, sf_dir: str) -> str:
             _docs(spark, sf_dir), "text", "doc_id", path, corpus_version=0
         )
 
-    return _memoized(spark, "lsh_base_index", sf_dir, build)
+    return _memoized("lsh_base_index", sf_dir, build)
 
 
 def winnow_base_index(spark, sf_dir: str) -> str:
@@ -241,7 +197,7 @@ def winnow_base_index(spark, sf_dir: str) -> str:
             _docs(spark, sf_dir), "text", "doc_id", path, corpus_version=0
         )
 
-    return _memoized(spark, "winnow_base_index", sf_dir, build)
+    return _memoized("winnow_base_index", sf_dir, build)
 
 
 def text_base_index(spark, sf_dir: str) -> str:
@@ -255,7 +211,7 @@ def text_base_index(spark, sf_dir: str) -> str:
             _docs(spark, sf_dir), "text", "doc_id", path, corpus_version=0
         )
 
-    return _memoized(spark, "text_base_index", sf_dir, build)
+    return _memoized("text_base_index", sf_dir, build)
 
 
 def pq_base_index(spark, sf_dir: str) -> str:
@@ -271,13 +227,12 @@ def pq_base_index(spark, sf_dir: str) -> str:
             n_cells=16, m=4, k_codes=16, dim=64, corpus_version=0,
         )
 
-    return _memoized(spark, "pq_base_index", sf_dir, build)
+    return _memoized("pq_base_index", sf_dir, build)
 
 
 def clear_fixture_memo() -> None:
-    """Drop every memoized fixture (bench.py calls this between timed
-    runs so repeats measure real builds; tests call it to force
-    rebuilds after conf changes)."""
+    """Drop every memoized fixture and its directory (bench.py calls
+    this between timed runs so repeats measure real builds)."""
     with _LOCK:
         _MEMO.clear()
         shutil.rmtree(_FIX_ROOT, ignore_errors=True)

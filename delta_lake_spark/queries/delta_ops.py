@@ -1532,42 +1532,37 @@ def q237_streaming_span_screen(spark, sf_dir):
         "doc_id", "text"
     )
     idx = _fresh("sss_idx")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        build_substring_index(
-            docs.filter(F.col("doc_id") >= 100), "text", "doc_id", idx, k=8
+    build_substring_index(
+        docs.filter(F.col("doc_id") >= 100), "text", "doc_id", idx, k=8
+    )
+    src = _fresh("sss_src")
+    _os.makedirs(src, exist_ok=True)
+    staging = _fresh("sss_stage")
+    batches = [
+        docs.filter(F.col("doc_id") < 50),
+        docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)),
+    ]
+    for i, b in enumerate(batches):
+        d = f"{staging}/b{i}"
+        b.coalesce(1).write.parquet(d)
+        part = next(
+            f for f in _os.listdir(d) if f.endswith(".parquet")
         )
-        src = _fresh("sss_src")
-        _os.makedirs(src, exist_ok=True)
-        staging = _fresh("sss_stage")
-        batches = [
-            docs.filter(F.col("doc_id") < 50),
-            docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)),
-        ]
-        for i, b in enumerate(batches):
-            d = f"{staging}/b{i}"
-            b.coalesce(1).write.parquet(d)
-            part = next(
-                f for f in _os.listdir(d) if f.endswith(".parquet")
-            )
-            _os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
-            # pin strictly increasing mtimes: the file source orders
-            # epochs by (mtime, path), and same-second writes would
-            # leave the batch sequencing to the path tiebreak alone
-            _os.utime(f"{src}/b{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
-        spans = stream_docs_with_span_screen(
-            spark,
-            src,
-            _fresh("sss_corpus"),
-            idx,
-            _fresh("sss_spans"),
-            _fresh("sss_ckpt"),
-            txn_app_id="q237",
-        )
-        spans = spans.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
+        # pin strictly increasing mtimes: the file source orders
+        # epochs by (mtime, path), and same-second writes would
+        # leave the batch sequencing to the path tiebreak alone
+        _os.utime(f"{src}/b{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
+    spans = stream_docs_with_span_screen(
+        spark,
+        src,
+        _fresh("sss_corpus"),
+        idx,
+        _fresh("sss_spans"),
+        _fresh("sss_ckpt"),
+        txn_app_id="q237",
+    )
+    spans = spans.localCheckpoint(eager=True)
     return spans
 
 
@@ -1649,22 +1644,17 @@ def q256_streaming_decayed_rates(spark, sf_dir):
             f"{src}/b{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i)
         )
     state = _fresh("decay_state")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream_decayed_event_state(
-            spark,
-            src,
-            state,
-            _fresh("decay_ckpt"),
-            "event_id long, ts timestamp, event_type string",
-            half_life_days=7,
-            txn_app_id="q256",
-        )
-        out = estimate_decayed_state(spark, state, horizon_halflives=40)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stream_decayed_event_state(
+        spark,
+        src,
+        state,
+        _fresh("decay_ckpt"),
+        "event_id long, ts timestamp, event_type string",
+        half_life_days=7,
+        txn_app_id="q256",
+    )
+    out = estimate_decayed_state(spark, state, horizon_halflives=40)
+    out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -1708,38 +1698,33 @@ def q284_streaming_warc_ingestion(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = _fresh("warc_src")
-        _os.makedirs(src, exist_ok=True)
-        staging = _fresh("warc_stage")
-        batches = [
-            docs.filter(F.col("doc_id") < 250),
-            docs.filter(F.col("doc_id") >= 250),
-        ]
-        for i, b in enumerate(batches):
-            d = f"{staging}/b{i}"
-            synthesize_crawl_warc_corpus(b).coalesce(1).write.parquet(d)
-            part = next(
-                f for f in _os.listdir(d) if f.endswith(".parquet")
-            )
-            _os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
-            # pin strictly increasing mtimes (file-source epoch order)
-            _os.utime(
-                f"{src}/b{i}.parquet",
-                (1_700_000_000 + i, 1_700_000_000 + i),
-            )
-        verdicts = stream_warc_ingestion(
-            spark,
-            src,
-            _fresh("warc_verdicts"),
-            _fresh("warc_ckpt"),
-            txn_app_id="q284",
+    src = _fresh("warc_src")
+    _os.makedirs(src, exist_ok=True)
+    staging = _fresh("warc_stage")
+    batches = [
+        docs.filter(F.col("doc_id") < 250),
+        docs.filter(F.col("doc_id") >= 250),
+    ]
+    for i, b in enumerate(batches):
+        d = f"{staging}/b{i}"
+        synthesize_crawl_warc_corpus(b).coalesce(1).write.parquet(d)
+        part = next(
+            f for f in _os.listdir(d) if f.endswith(".parquet")
         )
-        verdicts = verdicts.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
+        # pin strictly increasing mtimes (file-source epoch order)
+        _os.utime(
+            f"{src}/b{i}.parquet",
+            (1_700_000_000 + i, 1_700_000_000 + i),
+        )
+    verdicts = stream_warc_ingestion(
+        spark,
+        src,
+        _fresh("warc_verdicts"),
+        _fresh("warc_ckpt"),
+        txn_app_id="q284",
+    )
+    verdicts = verdicts.localCheckpoint(eager=True)
     return verdicts
 
 
@@ -1826,37 +1811,32 @@ def q310_streaming_chat_ingestion(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", F.expr(convo).alias("convo")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = _fresh("chat_src")
-        _os.makedirs(src, exist_ok=True)
-        staging = _fresh("chat_stage")
-        batches = [
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
-        ]
-        for i, b in enumerate(batches):
-            d = f"{staging}/b{i}"
-            b.coalesce(1).write.parquet(d)
-            part = next(
-                f for f in _os.listdir(d) if f.endswith(".parquet")
-            )
-            _os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
-            _os.utime(
-                f"{src}/b{i}.parquet",
-                (1_700_000_000 + i, 1_700_000_000 + i),
-            )
-        verdicts = stream_chat_ingestion(
-            spark,
-            src,
-            _fresh("chat_verdicts"),
-            _fresh("chat_ckpt"),
-            txn_app_id="q310",
+    src = _fresh("chat_src")
+    _os.makedirs(src, exist_ok=True)
+    staging = _fresh("chat_stage")
+    batches = [
+        docs.filter(F.col("doc_id") % 2 == 0),
+        docs.filter(F.col("doc_id") % 2 == 1),
+    ]
+    for i, b in enumerate(batches):
+        d = f"{staging}/b{i}"
+        b.coalesce(1).write.parquet(d)
+        part = next(
+            f for f in _os.listdir(d) if f.endswith(".parquet")
         )
-        verdicts = verdicts.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
+        _os.utime(
+            f"{src}/b{i}.parquet",
+            (1_700_000_000 + i, 1_700_000_000 + i),
+        )
+    verdicts = stream_chat_ingestion(
+        spark,
+        src,
+        _fresh("chat_verdicts"),
+        _fresh("chat_ckpt"),
+        txn_app_id="q310",
+    )
+    verdicts = verdicts.localCheckpoint(eager=True)
     return verdicts
 
 

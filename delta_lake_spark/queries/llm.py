@@ -23,6 +23,7 @@ from ..operators.multimodal import (
     documents_as_media,
     frame_sample,
 )
+from ..operators._cache import clear_session_caches, memo, register_persisted
 from ..operators.similarity import cosine_topk, ivf_topk, lsh_ann_pairs
 from ..operators.text import (
     build_vocabulary,
@@ -1968,12 +1969,7 @@ def q140_index_cdf_sync(spark, sf_dir):
         lambda: lsh_base_index(spark, sf_dir),
     )
     idx = clone_index(idx_master)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        sync_signature_index_from_cdf(spark, path, idx)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    sync_signature_index_from_cdf(spark, path, idx)
 
     corpus = read_delta(spark, path)
     probe = docs.filter(F.col("doc_id") % 5 == 0).select(
@@ -2057,12 +2053,7 @@ def q148_text_index_cdf_sync(spark, sf_dir):
         lambda: text_base_index(spark, sf_dir),
     )
     idx = clone_index(idx_master)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        sync_text_index_from_cdf(spark, path, idx)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    sync_text_index_from_cdf(spark, path, idx)
 
     queries = spark.createDataFrame(
         [
@@ -2581,110 +2572,16 @@ def _corpus_size_hint(sf_dir: str) -> bool | None:
 
 import threading
 
-# id(session) -> {"session": SparkSession,
-#                 "chain": {(sf_dir, near_dup|"__base__"): entry},
-#                 "extras": {query_name: [persisted df, ...]}}
-# The funnel stage sets are MEMOIZED per (session, sf_dir): the
-# quality -> dedup -> decontaminate chain is identical across the
-# q137-family queries, so a gate run that samples several of them pays
-# the chain once and each member only its own increment ("module-level
-# reuse"). Results are unchanged — the id sets are deterministic; the
-# memo only skips recomputation. bench.py calls clear_funnel_memo()
-# between timed runs so repeat timings measure real work. Keyed by
-# id(session) holding the session strongly (a WeakKeyDictionary can
-# never reclaim here — the stored DataFrames reference their session),
-# with stopped sessions swept on every access, cf. operators/_cache.py.
-_FUNNEL_REG: dict[int, dict] = {}
-_FUNNEL_LOCK = threading.Lock()
+# The funnel stage sets are MEMOIZED per (session, sf_dir) in the
+# session memo (operators/_cache.py): the quality -> dedup ->
+# decontaminate chain is identical across the q137-family queries, so a
+# gate run that samples several of them pays the chain once and each
+# member only its own increment ("module-level reuse"). Results are
+# unchanged — the id sets are deterministic; the memo only skips
+# recomputation. The trained-model memos below live there too.
 
-
-def _funnel_slot(spark) -> dict:
-    with _FUNNEL_LOCK:
-        for k in [
-            k
-            for k, v in _FUNNEL_REG.items()
-            if _session_stopped(v["session"])
-        ]:
-            _FUNNEL_REG.pop(k)  # cached blocks died with the session
-        return _FUNNEL_REG.setdefault(
-            id(spark),
-            {
-                "session": spark,
-                "chain": {},
-                "extras": {},
-                # serializes chain BUILDS for this session (reads stay
-                # lock-free after the double-check): two concurrent
-                # first invocations would otherwise both build the
-                # chain, and the loser's persisted frames would leak
-                # until session end
-                "build_lock": threading.Lock(),
-            },
-        )
-
-
-def _session_stopped(session) -> bool:
-    try:
-        return session._sc is None or session._sc._jsc is None
-    except Exception:
-        return True
-
-
-def clear_funnel_memo(spark=None) -> None:
-    """Unpersist and drop every memoized funnel stage set (one
-    session's, or all sessions'). bench.py calls this between timed
-    funnel runs; tests call it after plan inspection. Also drops the
-    (collected, model-sized) trained-model memos for the same sessions."""
-    with _FUNNEL_LOCK:
-        keys = [id(spark)] if spark is not None else list(_FUNNEL_REG)
-        slots = [_FUNNEL_REG.pop(k) for k in keys if k in _FUNNEL_REG]
-        for memo in (
-            _BPE_MEMO, _UNIGRAM_MEMO, _WP_MEMO, _BYTE_BPE_MEMO, _PERCEPTRON_MEMO
-        ):
-            for k in list(memo):
-                if spark is None or k[0] == id(spark):
-                    del memo[k]
-    for slot in slots:
-        frames = [f for e in slot["chain"].values() for f in e["frames"]]
-        frames += [f for dfs in slot["extras"].values() for f in dfs]
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # cache belonged to a since-stopped SparkSession
-
-
-def _release_extras(spark, name: str) -> None:
-    """Unpersist and drop query ``name``'s frames from a PREVIOUS
-    invocation. Must run BEFORE the new invocation persists its
-    replacement frames: old and new share identical logical plans
-    (same memoized upstream), and Spark's uncacheQuery matches caches
-    by plan equality — unpersisting the old set after the new one is
-    persisted would drop the fresh caches too and the returned report
-    would recompute uncached."""
-    slot = _funnel_slot(spark)
-    with _FUNNEL_LOCK:
-        old = slot["extras"].pop(name, [])
-    for df in old:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # cache belonged to a since-stopped SparkSession
-
-
-def _swap_extras(spark, name: str, frames: list) -> None:
-    """Record query ``name``'s persisted per-query frames so
-    clear_funnel_memo can release them (bounded steady state across
-    repeats — the previous invocation's frames were already released
-    by :func:`_release_extras` before these were persisted)."""
-    slot = _funnel_slot(spark)
-    with _FUNNEL_LOCK:
-        old = slot["extras"].pop(name, [])
-        slot["extras"][name] = frames
-    for df in old:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # cache belonged to a since-stopped SparkSession
+# the older name of the one clear; the benchmark harness imports it
+clear_funnel_memo = clear_session_caches
 
 
 def _funnel_core(spark, sf_dir, near_dup: str = "ngram"):
@@ -2706,30 +2603,25 @@ def _funnel_core(spark, sf_dir, near_dup: str = "ngram"):
     the sketch bound is what scales. The two variants share the
     memoized quality/exact-dedup base stages.
 
-    Memo contract: results are keyed by (sf_dir, near_dup) and ASSUME
-    the parquet under ``sf_dir`` is immutable for the session's
-    lifetime (true for the test/gate harness and for production
-    snapshot dirs; a caller that rewrites the corpus in place must
-    call :func:`clear_funnel_memo` first or use a new path). Chain
-    builds are serialized per session by the slot's build lock —
-    concurrent first invocations double-check the memo under it, so
-    only one builds and no persisted frame set can leak."""
-    slot = _funnel_slot(spark)
-    with _FUNNEL_LOCK:
-        hit = slot["chain"].get((sf_dir, near_dup))
-    if hit is not None:
-        return hit["result"]
-    with slot["build_lock"]:
-        with _FUNNEL_LOCK:
-            hit = slot["chain"].get((sf_dir, near_dup))
-        if hit is not None:
-            return hit["result"]
-        return _funnel_build(spark, slot, sf_dir, near_dup)
+    Memo contract: results are memoized per session under
+    ("funnel", sf_dir, near_dup), with the shared quality/exact-dedup
+    base under ("funnel_base", sf_dir), and ASSUME the parquet under
+    ``sf_dir`` is immutable for the session's lifetime (true for the
+    test/gate harness and for production snapshot dirs; a caller that
+    rewrites the corpus in place must call :func:`clear_funnel_memo`
+    first or use a new path). Concurrent first invocations of one key
+    run one build; the others wait for it, so no persisted frame set
+    can leak."""
+    return memo(
+        spark,
+        ("funnel", sf_dir, near_dup),
+        lambda: _funnel_build(spark, sf_dir, near_dup),
+    )
 
 
-def _funnel_build(spark, slot, sf_dir, near_dup):
-    """Build + memoize one funnel chain. Caller holds slot's
-    build_lock (NOT _FUNNEL_LOCK — Spark jobs run here)."""
+def _funnel_build(spark, sf_dir, near_dup):
+    """Build one funnel chain: returns (result, owned frames) for the
+    session memo. Spark jobs run here."""
     from ..operators.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
@@ -2742,9 +2634,7 @@ def _funnel_build(spark, slot, sf_dir, near_dup):
     eval_df = all_docs.filter(F.col("doc_id") < 25)
     raw = all_docs.filter(F.col("doc_id") >= 25)
 
-    with _FUNNEL_LOCK:
-        base = slot["chain"].get((sf_dir, "__base__"))
-    if base is None:
+    def build_base():
         # min_stopwords calibrated to the synthetic corpus (its
         # vocabulary carries ~1 Gopher function word per doc); every
         # other rule keeps the published Gopher defaults (min_words=50
@@ -2779,10 +2669,9 @@ def _funnel_build(spark, slot, sf_dir, near_dup):
         base_frame.count()
         passes = base_frame.select("doc_id")
         keepers = base_frame.filter("__keep").select("doc_id")
-        base = {"result": (passes, keepers), "frames": [base_frame]}
-        with _FUNNEL_LOCK:
-            slot["chain"][(sf_dir, "__base__")] = base
-    passes, keepers = base["result"]
+        return (passes, keepers), [base_frame]
+
+    passes, keepers = memo(spark, ("funnel_base", sf_dir), build_base)
     # keepers is a subset of passes by construction (keepers are
     # elected among quality passers), so the stage-2 survivor set is
     # raw ∩ keepers directly — the chained raw ∩ passes ∩ keepers
@@ -2843,12 +2732,7 @@ def _funnel_build(spark, slot, sf_dir, near_dup):
         ("decontaminated", hits, "anti"),
     ]
     result = (raw, s4, eval_df, stages, [passes, keepers, canon, hits])
-    with _FUNNEL_LOCK:
-        slot["chain"][(sf_dir, near_dup)] = {
-            "result": result,
-            "frames": [canon, hits],
-        }
-    return result
+    return result, [canon, hits]
 
 
 def _semantic_dirty_all(spark, sf_dir):
@@ -2865,17 +2749,7 @@ def _semantic_dirty_all(spark, sf_dir):
     stage (independent Spark jobs from two threads)."""
     from ..operators.similarity import semantic_decontaminate
 
-    slot = _funnel_slot(spark)
-    key = (sf_dir, "__semantic__")
-    with _FUNNEL_LOCK:
-        hit = slot["chain"].get(key)
-    if hit is not None:
-        return hit["result"]
-    with slot["build_lock"]:
-        with _FUNNEL_LOCK:
-            hit = slot["chain"].get(key)
-        if hit is not None:
-            return hit["result"]
+    def build():
         emb = _emb(spark, sf_dir)
         sdirty = (
             semantic_decontaminate(
@@ -2885,9 +2759,9 @@ def _semantic_dirty_all(spark, sf_dir):
             .select(F.col("vec_id").alias("doc_id"))
         ).persist()
         sdirty.count()
-        with _FUNNEL_LOCK:
-            slot["chain"][key] = {"result": sdirty, "frames": [sdirty]}
-        return sdirty
+        return sdirty, [sdirty]
+
+    return memo(spark, ("funnel_semantic", sf_dir), build)
 
 
 def _semantic_dirty_async(spark, sf_dir):
@@ -2943,8 +2817,8 @@ def q137_pretrain_funnel(spark, sf_dir):
     replays the identical pipeline relationally (recursive CTE for the
     components), value-checking the whole composition end to end.
 
-    The survivor-set caches live in the session-scoped funnel memo
-    (bounded: one chain per (session, sf_dir, near-dup variant)),
+    The survivor-set caches live in the session memo (bounded: one
+    chain per (session, sf_dir, near-dup variant)),
     shared with the q147/q159/q170 extensions; bench.py clears the
     memo between timed runs so repeat timings measure real work."""
     out, _ = _pretrain_funnel_frames(spark, sf_dir)
@@ -3117,14 +2991,11 @@ def q147_pretrain_funnel_full(spark, sf_dir):
     outgrows the broadcast threshold); the semantic stage is a map-only
     projection behind the broadcast eval-set row (q143). Survivors
     still propagate as ids-only semi/anti joins; the two new survivor
-    sets persist in the same session-scoped cache registry as
-    canon/hits."""
+    sets persist in the session-scoped cache registry beside the
+    memoized canon/hits."""
     from ..operators.text import unigram_lm_score
 
     raw, s4, _, stages, caches = _funnel_core(spark, sf_dir)
-    # release the PREVIOUS invocation's frames before persisting the
-    # new (plan-identical) ones — see _release_extras
-    _release_extras(spark, "q147")
     # the semantic pass is independent of the LM stage (per-row flags
     # against the broadcast eval set — see _semantic_dirty_all) and
     # shared with q159, so it stages CONCURRENTLY on a worker thread
@@ -3161,7 +3032,10 @@ def q147_pretrain_funnel_full(spark, sf_dir):
             ("semantic_decontaminated", sdirty, "anti"),
         ],
     )
-    _swap_extras(spark, "q147", [s4ids, keep])
+    # the registry keeps this invocation's pair and releases the
+    # previous one's without uncaching the plan-identical new frames
+    for df in (s4ids, keep):
+        register_persisted(df, "q147", capacity=2)
     return out
 
 
@@ -3238,7 +3112,6 @@ def q159_pretrain_funnel_bigram(spark, sf_dir):
     from ..operators.text import bigram_lm_score
 
     raw, s4, _, stages, caches = _funnel_core(spark, sf_dir)
-    _release_extras(spark, "q159")
     # shared + concurrent semantic pass — see q147 / _semantic_dirty_all
     sem_join = _semantic_dirty_async(spark, sf_dir)
     # s4's id set == canon minus hits (s3 ids are exactly canon, the
@@ -3269,7 +3142,10 @@ def q159_pretrain_funnel_bigram(spark, sf_dir):
             ("semantic_decontaminated", sdirty, "anti"),
         ],
     )
-    _swap_extras(spark, "q159", [s4ids, keep])
+    # the registry keeps this invocation's pair and releases the
+    # previous one's without uncaching the plan-identical new frames
+    for df in (s4ids, keep):
+        register_persisted(df, "q159", capacity=2)
     return out
 
 
@@ -4589,19 +4465,13 @@ def q146_pq_index_cdf_sync(spark, sf_dir):
     # shared fixtures (_fixtures.py): the v0->v1->v2 embeddings corpus
     # is built once per process and READ-ONLY here; the frozen-quantizer
     # base index is a clone-on-write copy — only the sync tail runs per
-    # invocation (gate-cost fix; the operators themselves never touch
-    # the conf). Independent artifacts -> concurrent first-touch build.
+    # invocation. Independent artifacts -> concurrent first-touch build.
     path, idx_master = fetch_parallel(
         lambda: emb_corpus_cdf(spark, sf_dir),
         lambda: pq_base_index(spark, sf_dir),
     )
     idx = clone_index(idx_master)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        sync_pq_index_from_cdf(spark, path, idx)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    sync_pq_index_from_cdf(spark, path, idx)
 
     corpus = read_delta(spark, path)
     queries = corpus.filter(F.col("vec_id") < 5)
@@ -5105,12 +4975,7 @@ def q196_winnow_index_cdf_sync(spark, sf_dir):
         lambda: winnow_base_index(spark, sf_dir),
     )
     idx = clone_index(idx_master)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        sync_winnow_index_from_cdf(spark, path, idx)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    sync_winnow_index_from_cdf(spark, path, idx)
     probe = docs.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 200000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" appended")).alias("text"),
@@ -5223,33 +5088,18 @@ FROM agg
 
 _BPE_N_MERGES = 8
 
-# learned-merge memo, (id(session), sf_dir) -> list[Row] — model-sized
-# (8 rows); same immutable-parquet contract as the funnel memo, cleared
-# alongside it (clear_funnel_memo)
-_BPE_MEMO: dict = {}
-
-# learned WordPiece-merge memo, same contract as _BPE_MEMO
-_WP_MEMO: dict = {}
-
-
 def _bpe_merges(spark, sf_dir):
+    """The learned merges (model-sized: 8 rows), trained once per
+    (session, sf_dir) in the session memo; same immutable-parquet
+    contract as the funnel chain."""
     from ..operators.tokenizer import train_bpe_merges
 
-    key = (id(spark), sf_dir)
-    # fast path without the lock; the slow path trains OUTSIDE the lock
-    # (Spark jobs run there) and claims the slot under it —
-    # setdefault keeps the first writer's rows, so two concurrent
-    # first-callers at worst train twice and agree (deterministic),
-    # never interleave partial state (cf. the funnel chain's
-    # get-or-claim discipline)
-    rows = _BPE_MEMO.get(key)
-    if rows is None:
-        trained = train_bpe_merges(
-            _docs(spark, sf_dir), "text", n_merges=_BPE_N_MERGES
-        ).collect()
-        with _FUNNEL_LOCK:
-            rows = _BPE_MEMO.setdefault(key, trained)
-    return rows
+    def train():
+        docs = _docs(spark, sf_dir)
+        merges = train_bpe_merges(docs, "text", n_merges=_BPE_N_MERGES)
+        return merges.collect(), []
+
+    return memo(spark, ("bpe", sf_dir), train)
 
 
 def _bpe_duck_layer(prev: str, r: int) -> str:
@@ -5482,29 +5332,20 @@ def q199_pagerank_trade_graph(spark, sf_dir):
     from ..operators.graph import pagerank
 
     edges = _trade_edges(spark, sf_dir)
-    # node-count-sized iteration state: the 32-partition default pays
-    # pure scheduling latency here (same pattern as the index syncs)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        # one lineage cut at iteration 3: with the fold-zeros iteration
-        # shape (one join + one agg) the 5-deep plan needs exactly one
-        # truncation — measured 5.1-5.4 s vs 5.9 (every 2) and 6.9-8.7
-        # (never) at sf0.1; checkpoint cadence only changes execution,
-        # never values
-        ranks = pagerank(
-            edges, iterations=_PR_ITERATIONS, damping=0.85,
-            checkpoint_every=3,
-        )
-        out = (
-            ranks.select("node", F.round("rank", 9).alias("rank"))
-            .orderBy(F.col("rank").desc(), "node")
-            .limit(20)
-        )
-        out = out.localCheckpoint(eager=True)  # materialize under the 4-part conf
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+    # one lineage cut at iteration 3: with the fold-zeros iteration
+    # shape (one join + one agg) the 5-deep plan needs exactly one
+    # truncation — measured 5.1-5.4 s vs 5.9 (every 2) and 6.9-8.7
+    # (never) at sf0.1; checkpoint cadence only changes execution,
+    # never values
+    ranks = pagerank(
+        edges, iterations=_PR_ITERATIONS, damping=0.85,
+        checkpoint_every=3,
+    )
+    return (
+        ranks.select("node", F.round("rank", 9).alias("rank"))
+        .orderBy(F.col("rank").desc(), "node")
+        .limit(20)
+    )
 
 
 def _q199_sql() -> str:
@@ -5604,8 +5445,6 @@ def _trade_edges(spark, sf_dir):
     """Symmetrized customer <-> supplier edge list from orders x
     lineitem (shared by the graph-family queries); the numeric pair
     relation is persisted before the two-way union."""
-    from ..operators._cache import register_persisted
-
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey"
     )
@@ -5647,17 +5486,12 @@ def q201_label_propagation(spark, sf_dir):
             F.col("n_regionkey").cast("long").alias("label"),
         )
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = (
-            label_propagation(edges, seeds, iterations=_LPA_ITERATIONS)
-            .filter(F.col("node").startswith("s"))
-            .orderBy("node")
-        )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    out = (
+        label_propagation(edges, seeds, iterations=_LPA_ITERATIONS)
+        .filter(F.col("node").startswith("s"))
+        .orderBy("node")
+    )
+    out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -6521,21 +6355,16 @@ def q218_personalized_pagerank(spark, sf_dir):
         .filter(F.col("n_regionkey") == 0)
         .select(F.concat(F.lit("c"), F.col("c_custkey")).alias("node"))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        ranks = pagerank(
-            edges, iterations=_PPR_ITERATIONS, damping=0.85, teleport=seeds
-        )
-        out = (
-            ranks.filter(F.col("node").startswith("s"))
-            .select("node", F.round("rank", 9).alias("rank"))
-            .orderBy(F.col("rank").desc(), "node")
-            .limit(15)
-        )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    ranks = pagerank(
+        edges, iterations=_PPR_ITERATIONS, damping=0.85, teleport=seeds
+    )
+    out = (
+        ranks.filter(F.col("node").startswith("s"))
+        .select("node", F.round("rank", 9).alias("rank"))
+        .orderBy(F.col("rank").desc(), "node")
+        .limit(15)
+    )
+    out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -6857,28 +6686,23 @@ _UNI_SEED = 160
 _UNI_ITERS = 2
 _UNI_LEN = 4
 
-# trained-model memo, (id(session), sf_dir) -> list[Row] — model-sized
-# (<= _UNI_VOCAB rows), same contract and lock discipline as _BPE_MEMO
-_UNIGRAM_MEMO: dict = {}
-
-
 def _unigram_model(spark, sf_dir):
+    """The trained vocabulary (model-sized: <= _UNI_VOCAB rows), memoized
+    like :func:`_bpe_merges`."""
     from ..operators.tokenizer import train_unigram
 
-    key = (id(spark), sf_dir)
-    rows = _UNIGRAM_MEMO.get(key)
-    if rows is None:
-        trained = train_unigram(
+    def train():
+        model = train_unigram(
             _docs(spark, sf_dir),
             "text",
             vocab_size=_UNI_VOCAB,
             n_iters=_UNI_ITERS,
             max_piece_len=_UNI_LEN,
             seed_size=_UNI_SEED,
-        ).collect()
-        with _FUNNEL_LOCK:
-            rows = _UNIGRAM_MEMO.setdefault(key, trained)
-    return rows
+        )
+        return model.collect(), []
+
+    return memo(spark, ("unigram", sf_dir), train)
 
 
 def q224_unigram_train(spark, sf_dir):
@@ -7580,24 +7404,19 @@ def q236_substring_index_probe(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     os.makedirs("/tmp/dls_query_tables", exist_ok=True)
     idx = tempfile.mkdtemp(dir="/tmp/dls_query_tables", prefix="subidx_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        build_substring_index(
-            docs.filter(F.col("doc_id") >= 100), "text", "doc_id", idx, k=8
-        )
-        update_substring_index(
-            docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)),
-            "text",
-            "doc_id",
-            idx,
-        )
-        out = spans_against_index(
-            docs.filter(F.col("doc_id") < 50), "text", "doc_id", idx
-        )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    build_substring_index(
+        docs.filter(F.col("doc_id") >= 100), "text", "doc_id", idx, k=8
+    )
+    update_substring_index(
+        docs.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 100)),
+        "text",
+        "doc_id",
+        idx,
+    )
+    out = spans_against_index(
+        docs.filter(F.col("doc_id") < 50), "text", "doc_id", idx
+    )
+    out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -7687,17 +7506,15 @@ _WP_MAXW = 24
 
 
 def _wp_merges(spark, sf_dir):
+    """The learned WordPiece merges, memoized like :func:`_bpe_merges`."""
     from ..operators.tokenizer import train_wordpiece_merges
 
-    key = (id(spark), sf_dir)
-    rows = _WP_MEMO.get(key)
-    if rows is None:
-        trained = train_wordpiece_merges(
-            _docs(spark, sf_dir), "text", n_merges=_WP_N_MERGES
-        ).collect()
-        with _FUNNEL_LOCK:
-            rows = _WP_MEMO.setdefault(key, trained)
-    return rows
+    def train():
+        docs = _docs(spark, sf_dir)
+        merges = train_wordpiece_merges(docs, "text", n_merges=_WP_N_MERGES)
+        return merges.collect(), []
+
+    return memo(spark, ("wordpiece", sf_dir), train)
 
 
 def _wp_duck_layer(prev: str, r: int) -> str:
@@ -9458,23 +9275,18 @@ FROM t JOIN sb USING (doc_id, track_idx)
 """
 
 
-# learned byte-level-merge memo, same contract as _BPE_MEMO
-_BYTE_BPE_MEMO: dict = {}
-
-
 def _byte_bpe_merges(spark, sf_dir):
+    """The learned byte-level merges, memoized like :func:`_bpe_merges`."""
     from ..operators.tokenizer import train_bpe_merges
 
-    key = (id(spark), sf_dir)
-    rows = _BYTE_BPE_MEMO.get(key)
-    if rows is None:
-        trained = train_bpe_merges(
+    def train():
+        merges = train_bpe_merges(
             _docs(spark, sf_dir), "text", n_merges=_BPE_N_MERGES,
             alphabet="byte",
-        ).collect()
-        with _FUNNEL_LOCK:
-            rows = _BYTE_BPE_MEMO.setdefault(key, trained)
-    return rows
+        )
+        return merges.collect(), []
+
+    return memo(spark, ("byte_bpe", sf_dir), train)
 
 
 def q268_byte_bpe_train(spark, sf_dir):
@@ -10008,23 +9820,18 @@ FROM v GROUP BY registered_domain
 """
 
 
-# trained-perceptron memo, same contract as _BPE_MEMO
-_PERCEPTRON_MEMO: dict = {}
-
-
 def _perceptron_weights(spark, sf_dir):
+    """The trained perceptron weights, memoized like :func:`_bpe_merges`."""
     from ..operators.stats import perceptron_train
 
-    key = (id(spark), sf_dir)
-    rows = _PERCEPTRON_MEMO.get(key)
-    if rows is None:
-        trained = perceptron_train(
+    def train():
+        weights = perceptron_train(
             _docs(spark, sf_dir).withColumn("is_en", F.col("lang") == "en"),
             "text", "is_en", "doc_id", dim=64, epochs=3,
-        ).collect()
-        with _FUNNEL_LOCK:
-            rows = _PERCEPTRON_MEMO.setdefault(key, trained)
-    return rows
+        )
+        return weights.collect(), []
+
+    return memo(spark, ("perceptron", sf_dir), train)
 
 
 _Q278_FEATS_CTE = """
@@ -10690,14 +10497,9 @@ def q288_host_pagerank(spark, sf_dir):
         "registered_domain", "dst"
     )
     edges = links.filter(F.col("src") != F.col("dst")).select("src", "dst")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        ranks = pagerank(edges, iterations=_PR_ITERATIONS, damping=0.85)
-        out = ranks.select("node", F.round("rank", 9).alias("rank"))
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    ranks = pagerank(edges, iterations=_PR_ITERATIONS, damping=0.85)
+    out = ranks.select("node", F.round("rank", 9).alias("rank"))
+    out = out.localCheckpoint(eager=True)
     return out
 
 

@@ -180,8 +180,7 @@ def main():
     # pipeline the one-time shared fixture builds (corpus tables +
     # base indexes, _fixtures.py) behind the early cheap queries: a
     # daemon thread builds them in a CLONED session (independent
-    # SQLConf, shared context — the builds' low-parallelism override
-    # never touches the main session), and the memo hands the
+    # SQLConf, shared context), and the memo hands the
     # late-registry consumers (q129/q140/q146/q148/q151) finished
     # artifacts. Same work, overlapped — exactly how a production
     # harness stages shared infrastructure.

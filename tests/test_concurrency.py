@@ -318,14 +318,14 @@ def test_commit_store_seam_is_pluggable(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Funnel memo concurrency + cache-retention contracts (queries/llm.py).
-# These pin the two round-8 review findings: (1) a repeat q147
-# invocation must NOT lose its fresh report caches to the unpersist of
-# the previous invocation's plan-identical frames (uncacheQuery matches
-# by plan equality, so ordering matters), and (2) two concurrent FIRST
-# invocations of the shared funnel chain must build it exactly once —
-# the loser of the old unguarded race leaked its persisted frames until
-# session end.
+# Session-state registry concurrency + cache-retention contracts
+# (operators/_cache.py, used by the funnel in queries/llm.py). These pin
+# the two round-8 review findings: (1) a repeat q147 invocation must NOT
+# lose its fresh report caches to the release of the previous
+# invocation's plan-identical frames (uncacheQuery matches by plan
+# equality), and (2) two concurrent FIRST invocations of the shared
+# funnel chain must build it exactly once — the loser of the old
+# unguarded race leaked its persisted frames until session end.
 # ---------------------------------------------------------------------------
 
 from tests.conftest import SF_DIR
@@ -335,23 +335,23 @@ def test_q147_repeat_invocation_keeps_fresh_caches(spark):
     """Invoke q147 twice in one session: the second run must return
     identical rows AND its per-query report frames must still be
     cached afterwards (storageLevel reflects the live CacheManager
-    state — if _swap_extras unpersisted the old frames AFTER the new
-    plan-identical ones were persisted, these would read NONE and the
-    report would recompute uncached)."""
-    from delta_lake_spark.queries.llm import (
-        _funnel_slot,
-        clear_funnel_memo,
-        q147_pretrain_funnel_full,
+    state — if the registry unpersisted the first run's frames, which
+    share the new frames' plans, these would read NONE and the report
+    would recompute uncached)."""
+    from delta_lake_spark.operators._cache import (
+        _REGISTRY,
+        clear_session_caches,
     )
+    from delta_lake_spark.queries.llm import q147_pretrain_funnel_full
 
-    clear_funnel_memo(spark)
+    clear_session_caches(spark)
     try:
         first = q147_pretrain_funnel_full(spark, SF_DIR).collect()
         second_df = q147_pretrain_funnel_full(spark, SF_DIR)
         second = second_df.collect()
         assert sorted(map(tuple, first)) == sorted(map(tuple, second))
-        frames = _funnel_slot(spark)["extras"]["q147"]
-        assert frames, "second invocation registered no report frames"
+        frames = _REGISTRY[id(spark)]["groups"]["q147"]
+        assert len(frames) == 2, "the group must hold one invocation's pair"
         for f in frames:
             lvl = f.storageLevel
             assert lvl.useMemory or lvl.useDisk, (
@@ -359,27 +359,28 @@ def test_q147_repeat_invocation_keeps_fresh_caches(spark):
                 f"invocation's unpersist: {lvl}"
             )
     finally:
-        clear_funnel_memo(spark)
+        clear_session_caches(spark)
 
 
 def test_funnel_concurrent_first_invocations_build_once(spark):
-    """Two threads race the FIRST _funnel_core invocation: the
-    double-checked memo under the slot's build lock must run exactly
-    one build, hand both callers the same memoized result tuple, and
-    leave no orphaned persisted frames behind (the persistent-RDD
-    census returns to its pre-test size once the memo is cleared)."""
+    """Two threads race the FIRST _funnel_core invocation: the session
+    memo's per-key claim must run exactly one build, hand both callers
+    the same memoized result tuple, and leave no orphaned persisted
+    frames behind (the persistent-RDD census returns to its pre-test
+    size once the memo is cleared)."""
     import threading
 
+    from delta_lake_spark.operators._cache import clear_session_caches
     from delta_lake_spark.queries import llm
 
-    llm.clear_funnel_memo(spark)
+    clear_session_caches(spark)
     persistent_before = len(spark.sparkContext._jsc.getPersistentRDDs())
     builds = []
     orig = llm._funnel_build
 
-    def counting_build(spark_, slot, sf_dir, near_dup):
+    def counting_build(spark_, sf_dir, near_dup):
         builds.append(near_dup)
-        return orig(spark_, slot, sf_dir, near_dup)
+        return orig(spark_, sf_dir, near_dup)
 
     llm._funnel_build = counting_build
     results = [None, None]
@@ -404,9 +405,103 @@ def test_funnel_concurrent_first_invocations_build_once(spark):
         assert results[0] is results[1], "callers got different chains"
     finally:
         llm._funnel_build = orig
-        llm.clear_funnel_memo(spark)
+        clear_session_caches(spark)
     persistent_after = len(spark.sparkContext._jsc.getPersistentRDDs())
     assert persistent_after == persistent_before, (
         f"leaked persisted frames: {persistent_before} -> "
         f"{persistent_after}"
     )
+
+
+def test_memo_claims_one_build_and_retries_after_failure():
+    """get_or_build, the claim code behind the session memo and the
+    fixture memo: a second caller of a key that is being built waits
+    for that ONE build and gets its value; a build that raises
+    re-raises in the caller waiting on it, and the next call builds
+    again instead of serving the failure."""
+    import sys
+    import threading
+
+    from delta_lake_spark.operators._cache import get_or_build
+
+    table: dict = {}
+    lock = threading.Lock()
+    builds = []
+
+    def race(key, result):
+        """Run two callers of ``key`` with the second one provably
+        waiting on the first one's build; return what each got."""
+        started, release, waiting = (threading.Event() for _ in range(3))
+
+        def build():
+            builds.append(key)
+            started.set()
+            release.wait(10)
+            if isinstance(result, BaseException):
+                raise result
+            return result
+
+        class SignalingEvent(threading.Event):
+            def wait(self, timeout=None):
+                waiting.set()
+                return super().wait(timeout)
+
+        got = [None, None]
+
+        def call(i):
+            try:
+                got[i] = get_or_build(table, lock, key, build)
+            except RuntimeError as e:
+                got[i] = e
+
+        owner = threading.Thread(target=call, args=(0,))
+        owner.start()
+        assert started.wait(10)
+        table[key]["event"] = SignalingEvent()
+        waiter = threading.Thread(target=call, args=(1,))
+        waiter.start()
+        assert waiting.wait(10), "the second caller did not wait"
+        release.set()
+        owner.join(10)
+        waiter.join(10)
+        assert not owner.is_alive() and not waiter.is_alive()
+        return got
+
+    assert race("k", "value") == ["value", "value"]
+    assert builds == ["k"], f"one key built {len(builds)} times"
+
+    failure = RuntimeError("build failed")
+    assert race("bad", failure) == [failure, failure]
+    assert builds == ["k", "bad"]
+    assert "bad" not in table, "a failed build must release its claim"
+    assert get_or_build(table, lock, "bad", lambda: "retried") == "retried"
+
+    # stress: many more callers than cores over a few keys, with a short
+    # switch interval; every key is built exactly once
+    stress: dict = {}
+    built, served = [], []
+
+    def counted(key):
+        built.append(key)
+        return key
+
+    def hammer(i):
+        key = i % 4
+        value = get_or_build(stress, lock, key, lambda: counted(key))
+        served.append((key, value))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        callers = [
+            threading.Thread(target=hammer, args=(i,)) for i in range(32)
+        ]
+        for t in callers:
+            t.start()
+        for t in callers:
+            t.join(10)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in callers)
+    assert sorted(built) == [0, 1, 2, 3]
+    assert sorted(served) == sorted((i % 4, i % 4) for i in range(32))

@@ -1524,7 +1524,9 @@ def test_bm25_single_scan_summary_and_fallback_parity(spark):
     queries = spark.createDataFrame(
         [(1, "apple banana"), (2, "kiwi fig")], "query_id long, qtext string"
     )
-    slot = _REGISTRY.setdefault(id(spark), {"session": spark, "groups": {}})
+    slot = _REGISTRY.setdefault(
+        id(spark), {"session": spark, "groups": {}, "memo": {}}
+    )
     slot["groups"]["bm25"] = []  # isolate this test
     out = bm25_topk(docs, queries, "text", "doc_id", k=10)
     cached = slot["groups"]["bm25"][0]
@@ -1542,9 +1544,15 @@ def test_bm25_single_scan_summary_and_fallback_parity(spark):
     # dropped the first call's cache (its plan may not have run yet)
     assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
     # ...but the registry stays bounded: 4 more single-scan calls push
-    # the first summary past capacity and it is evicted oldest-first
+    # the first summary past capacity and it is evicted oldest-first.
+    # Each call has its own query terms, so its summary has its own
+    # plan: an evicted summary whose plan a live one shares stays
+    # cached (one cache entry serves both)
     for i in range(4):
-        bm25_topk(docs, queries, "text", "doc_id", k=2 + i)
+        other_terms = spark.createDataFrame(
+            [(1, f"apple term{i}")], "query_id long, qtext string"
+        )
+        bm25_topk(docs, other_terms, "text", "doc_id", k=2)
     assert len(slot["groups"]["bm25"]) == 4
     assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)
 
@@ -3289,9 +3297,10 @@ def test_mixture_domain_cardinality_guard(spark):
 
 def test_cache_registry_sweeps_stopped_sessions(spark):
     """Entries whose session is stopped are dropped (and best-effort
-    unpersisted) on the next register call — the WeakKeyDictionary
+    unpersisted) on the next registry access — the WeakKeyDictionary
     could never reclaim them because the cached DataFrames strongly
-    reference their session."""
+    reference their session. That covers memo entries too, so a reused
+    ``id(session)`` can never be served a dead session's model."""
     from delta_lake_spark.operators import _cache
 
     class FakeDF:
@@ -3304,19 +3313,60 @@ def test_cache_registry_sweeps_stopped_sessions(spark):
     class StoppedSession:
         _sc = None
 
-    dead = FakeDF()
-    _cache._REGISTRY[id(StoppedSession)] = {
-        "session": StoppedSession, "groups": {"g": [dead]},
-    }
+    def stopped_slot(dead, memo_frame):
+        return {
+            "session": StoppedSession,
+            "groups": {"g": [dead]},
+            "memo": {
+                ("model", "sf"): {"value": ("model", [memo_frame])},
+            },
+        }
+
+    dead, dead_memo = FakeDF(), FakeDF()
+    _cache._REGISTRY[id(StoppedSession)] = stopped_slot(dead, dead_memo)
     live = spark.range(3).persist()
     try:
         _cache.register_persisted(live, "sweep-test", capacity=2)
         assert id(StoppedSession) not in _cache._REGISTRY
-        assert dead.unpersisted
+        assert dead.unpersisted and dead_memo.unpersisted
         assert live in _cache._REGISTRY[id(spark)]["groups"]["sweep-test"]
+
+        # the memo call sweeps as well
+        _cache._REGISTRY[id(StoppedSession)] = stopped_slot(
+            FakeDF(), FakeDF()
+        )
+        assert _cache.memo(spark, "sweep-test", lambda: (7, [])) == 7
+        assert id(StoppedSession) not in _cache._REGISTRY
     finally:
         live.unpersist()
         _cache._REGISTRY[id(spark)]["groups"].pop("sweep-test", None)
+        _cache._REGISTRY[id(spark)]["memo"].pop("sweep-test", None)
+
+
+def test_cache_registry_eviction_keeps_plan_identical_live_frame(spark):
+    """Evicting a frame whose plan equals a live registered frame's must
+    not unpersist it: Spark keeps one cache entry per plan, so that
+    unpersist would also uncache the live frame (a repeat call registers
+    exactly such a frame)."""
+    from delta_lake_spark.operators import _cache
+
+    capacity = 2
+    frames = [
+        spark.range(7).selectExpr("id * 3 AS x").persist()
+        for _ in range(capacity + 1)
+    ]
+    try:
+        for df in frames:
+            _cache.register_persisted(df, "plan-equal-test", capacity)
+        newest = frames[-1]
+        newest.count()
+        level = newest.storageLevel
+        assert level.useMemory or level.useDisk, level
+        held = _cache._REGISTRY[id(spark)]["groups"]["plan-equal-test"]
+        assert held == frames[1:]
+    finally:
+        _cache._REGISTRY[id(spark)]["groups"].pop("plan-equal-test", None)
+        frames[-1].unpersist()
 
 
 def test_query_registry_hard_fails_on_broken_submodule():
@@ -3395,14 +3445,13 @@ def test_funnel_report_matches_bruteforce_on_random_stages(spark):
 def test_funnel_memo_reuses_and_clears(spark):
     """_funnel_core must return the SAME stage frames on a second call
     (session memo hit — the gate-rotation speedup contract) and drop
-    them after clear_funnel_memo, so bench repeats measure real work."""
-    from delta_lake_spark.queries.llm import (
-        _funnel_core,
-        clear_funnel_memo,
-    )
+    them after clear_session_caches, so bench repeats measure real
+    work."""
+    from delta_lake_spark.operators._cache import clear_session_caches
+    from delta_lake_spark.queries.llm import _funnel_core
 
     sf = "/root/testdata/sf0.001"
-    clear_funnel_memo(spark)
+    clear_session_caches(spark)
     try:
         _, _, _, stages1, caches1 = _funnel_core(spark, sf)
         _, _, _, stages2, caches2 = _funnel_core(spark, sf)
@@ -3419,12 +3468,12 @@ def test_funnel_memo_reuses_and_clears(spark):
             return "InMemoryTableScan" in plan
 
         assert all(_served_from_cache(df) for df in caches1)
-        clear_funnel_memo(spark)
+        clear_session_caches(spark)
         assert not any(df.storageLevel.useMemory for df in caches1)
         _, _, _, _, caches3 = _funnel_core(spark, sf)
         assert [id(a) for a in caches3] != [id(a) for a in caches1]
     finally:
-        clear_funnel_memo(spark)
+        clear_session_caches(spark)
 
 
 def test_tiny_wav_matches_stdlib_wave_writer():

@@ -281,18 +281,54 @@ def test_driver_reference_is_pure(spark):
     ]
 
 
-def test_bpe_memo_lifecycle(spark):
-    """The learned-merge memo must key on this session, serve repeat
-    callers without retraining, and clear with the funnel memo."""
-    from delta_lake_spark.queries import llm
+@pytest.mark.parametrize(
+    "fn, module, trainer",
+    [
+        ("_bpe_merges", "tokenizer", "train_bpe_merges"),
+        ("_byte_bpe_merges", "tokenizer", "train_bpe_merges"),
+        ("_unigram_model", "tokenizer", "train_unigram"),
+        ("_wp_merges", "tokenizer", "train_wordpiece_merges"),
+        ("_perceptron_weights", "stats", "perceptron_train"),
+    ],
+    ids=["bpe", "byte_bpe", "unigram", "wordpiece", "perceptron"],
+)
+def test_model_memo_lifecycle(spark, monkeypatch, fn, module, trainer):
+    """Each query-side model trains once per (session, sf_dir), is served
+    from the session memo on repeat, is dropped by
+    clear_funnel_memo(spark), and another session's entry survives that
+    clear."""
+    import importlib
 
-    sf = "/root/testdata/sf0.001"
+    from delta_lake_spark.queries import llm
+    from tests.conftest import SF_DIR
+
+    mod = importlib.import_module(f"delta_lake_spark.operators.{module}")
+    real = getattr(mod, trainer)
+    trained = []
+
+    def counting(*args, **kwargs):
+        trained.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, trainer, counting)
+    model = getattr(llm, fn)
+    sf = SF_DIR
+    other = spark.newSession()
     llm.clear_funnel_memo(spark)
-    first = llm._bpe_merges(spark, sf)
-    assert (id(spark), sf) in llm._BPE_MEMO
-    assert llm._bpe_merges(spark, sf) is first  # served from the memo
-    llm.clear_funnel_memo(spark)
-    assert (id(spark), sf) not in llm._BPE_MEMO
+    try:
+        first = model(spark, sf)
+        assert model(spark, sf) is first  # served from the memo
+        assert len(trained) == 1
+        kept = model(other, sf)
+        assert len(trained) == 2  # one entry per session
+        llm.clear_funnel_memo(spark)
+        assert model(other, sf) is kept  # the other session's entry stays
+        again = model(spark, sf)
+        assert len(trained) == 3 and again is not first  # dropped, retrained
+        assert again == first
+    finally:
+        llm.clear_funnel_memo(spark)
+        llm.clear_funnel_memo(other)
 
 
 # ---------------------------------------------------------------------------
@@ -457,22 +493,6 @@ def test_unigram_contract_errors(spark):
         train_unigram(docs, "text", max_piece_len=0)
     with pytest.raises(ValueError, match="strategy"):
         train_unigram(docs, "text", strategy="magic")
-
-
-def test_unigram_memo_lifecycle(spark):
-    from delta_lake_spark.queries.llm import (
-        _UNIGRAM_MEMO,
-        _unigram_model,
-        clear_funnel_memo,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    clear_funnel_memo(spark)
-    first = _unigram_model(spark, sf)
-    assert (id(spark), sf) in _UNIGRAM_MEMO
-    assert _unigram_model(spark, sf) is first  # memo hit, no retrain
-    clear_funnel_memo(spark)
-    assert (id(spark), sf) not in _UNIGRAM_MEMO
 
 
 # ---------------------------------------------------------------------------
@@ -640,40 +660,3 @@ def test_wordpiece_contract_errors(spark):
         wordpiece_encode(docs, "text", "doc_id", ["a"], max_word_len=0)
     with pytest.raises(ValueError, match="continuation"):
         _wp_merged("a", "b")
-
-
-def test_wordpiece_memo_lifecycle(spark):
-    from delta_lake_spark.queries.llm import (
-        _WP_MEMO,
-        _wp_merges,
-        clear_funnel_memo,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    clear_funnel_memo(spark)
-    assert not any(k[0] == id(spark) for k in _WP_MEMO)
-    first = _wp_merges(spark, sf)
-    assert _wp_merges(spark, sf) is first  # memo hit
-    clear_funnel_memo(spark)
-    assert not any(k[0] == id(spark) for k in _WP_MEMO)
-
-
-def test_clear_funnel_memo_drops_byte_bpe_and_perceptron_memos(spark):
-    from delta_lake_spark.queries.llm import (
-        _BYTE_BPE_MEMO,
-        _PERCEPTRON_MEMO,
-        clear_funnel_memo,
-    )
-
-    other = (-1, "other-session")
-    for memo in (_BYTE_BPE_MEMO, _PERCEPTRON_MEMO):
-        memo[(id(spark), "sf")] = ["trained"]
-        memo[other] = ["kept"]
-    try:
-        clear_funnel_memo(spark)
-        for memo in (_BYTE_BPE_MEMO, _PERCEPTRON_MEMO):
-            assert not any(k[0] == id(spark) for k in memo)
-            assert memo[other] == ["kept"]  # other sessions' entries stay
-    finally:
-        _BYTE_BPE_MEMO.pop(other, None)
-        _PERCEPTRON_MEMO.pop(other, None)

