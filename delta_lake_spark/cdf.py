@@ -35,6 +35,7 @@ import os
 
 from .errors import VersionNotFoundError
 from .log import AddFile, DeltaLog
+from .reader import scan_adds
 from .writer import schema_of
 
 
@@ -42,15 +43,6 @@ def _to_change_millis(ts: str | int) -> int:
     from .reader import _to_millis
 
     return _to_millis(ts)
-
-
-def _read_files_df(spark, table_path, adds, snap) -> DataFrame:
-    """Explicit-file scan of one commit's files with the snapshot's
-    schema, deletion vectors applied (same resolution as read_delta) —
-    so a DV-delete commit diffs as exactly the newly-deleted rows."""
-    from .reader import scan_adds
-
-    return scan_adds(spark, table_path, adds, snap)
 
 
 def table_changes(
@@ -137,14 +129,10 @@ def table_changes(
             removed = []
         schema_snap = log.snapshot(v)
 
-        add_df = (
-            _read_files_df(spark, path, added, schema_snap)
-            if added
-            else None
-        )
-        rem_df = (
-            _read_files_df(spark, path, removed, prev) if removed else None
-        )
+        # scan_adds applies deletion vectors, so a DV-delete commit
+        # diffs as exactly its newly deleted rows
+        add_df = scan_adds(spark, path, added, schema_snap) if added else None
+        rem_df = scan_adds(spark, path, removed, prev) if removed else None
         cols = [f.name for f in add_df.schema.fields] if add_df is not None else [
             f.name for f in rem_df.schema.fields
         ]

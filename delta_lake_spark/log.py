@@ -1059,17 +1059,12 @@ class DeltaLog:
                 return ci.get("inCommitTimestamp", ci.get("timestamp"))
         return None
 
-    def commit_next(self, actions: list[dict[str, Any]], retries: int = 0) -> int:
-        """Commit at latest_version()+1 (or 0 for a new table)."""
-        attempt = 0
-        while True:
-            try:
-                version = self.latest_version() + 1
-            except TableNotFoundError:
-                version = 0
-            try:
-                return self.commit(version, actions)
-            except ConcurrentModificationError:
-                attempt += 1
-                if attempt > retries:
-                    raise
+    def commit_next(self, actions: list[dict[str, Any]]) -> int:
+        """Commit at latest_version()+1 (or 0 for a new table). A lost
+        race raises ConcurrentModificationError: re-committing the same
+        actions at a later version would skip the conflict check."""
+        try:
+            version = self.latest_version() + 1
+        except TableNotFoundError:
+            version = 0
+        return self.commit(version, actions)

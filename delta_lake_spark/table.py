@@ -13,6 +13,12 @@ every mutation is three distributed phases —
   2. REWRITE: read ONLY the touched files, apply the change as a plain
      DataFrame transform, stage new parquet in parallel;
   3. COMMIT: one atomic log entry (remove touched + add staged).
+Every mutation pins one snapshot and reads only from it: FIND, REWRITE
+and any validation scan take that snapshot's file list, never the
+latest one. Two helpers build every commit from it: _commit_rewrite
+(MERGE, DELETE, UPDATE, replaceWhere, OPTIMIZE, PURGE) and
+_commit_schema (schema, constraint, property and feature changes). Both
+commit at the version after the pinned one, never blindly at latest+1.
 Optimistic concurrency with conflict RESOLUTION (_commit_mutation):
 a lost commit race rebases and retries only when the winner provably
 cannot invalidate this mutation (metadata unchanged, our touched files
@@ -30,7 +36,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import replace
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +53,13 @@ from .log import ICT_PROP, AddFile, CommitInfo, DeltaLog, RemoveFile, _utc_milli
 from .reader import FILE_COL as _FILE_COL
 from .reader import ROW_COL as _ROW_COL
 from .reader import file_uri, read_delta, scan_adds
-from .writer import check_append_only, enforce_constraints, schema_of, stage_files
+from .writer import (
+    check_append_only,
+    column_mapping,
+    enforce_constraints,
+    schema_of,
+    stage_files,
+)
 
 DEFAULT_RETENTION_HOURS = 168  # 7 days, matching Delta's default
 RETENTION_CHECK_CONF = "spark.delta_lake_spark.retentionDurationCheck.enabled"
@@ -55,6 +67,13 @@ DV_CONF = "deletionVectors"  # table configuration key: "true" => DV deletes
 
 _ACTION_COL = "__dls_action"
 _SRC_COL = "__dls_src"
+
+# operationMetrics names (removed, added) where Delta's differ from
+# the numRemovedFiles / numAddedFiles every other rewrite records
+_FILE_METRICS = {
+    "MERGE": ("numTargetFilesRemoved", "numTargetFilesAdded"),
+    "PURGE": ("numFilesPurged", "numFilesAdded"),
+}
 
 
 _INT_WIDTH = {"byte": 1, "short": 2, "integer": 3, "long": 4}
@@ -85,6 +104,23 @@ def _as_column(cond: str | Column | None) -> Column | None:
     if cond is None:
         return None
     return F.expr(cond) if isinstance(cond, str) else cond
+
+
+def _pruned_adds(snap, cond_str: str | None) -> list[AddFile]:
+    """The files of ``snap`` whose log stats may hold rows matching
+    ``cond_str`` (data skipping; every file when there is no SQL string).
+    Stats are keyed by PHYSICAL names, so under columnMapping a renamed
+    logical column is translated before min/max are consulted."""
+    from .skipping import prune_adds
+
+    adds, _ = prune_adds(
+        list(snap.files.values()), cond_str, colmap=column_mapping(schema_of(snap))
+    )
+    return adds
+
+
+def _keep_unmatched(df: DataFrame, match: Column) -> DataFrame:
+    return df.filter(~match)
 
 
 def _first_firing(*groups: tuple[Column | None, list]) -> Column:
@@ -316,7 +352,13 @@ class MergeBuilder:
 
         touched: list[str] = []
         if (self._matched or bys) and snap.files:
-            with_file = t._read_files(sorted(snap.files), with_meta=True).alias(t_alias)
+            with_file = scan_adds(
+                t.spark,
+                t.path,
+                [snap.files[p] for p in sorted(snap.files)],
+                snap,
+                with_meta=True,
+            ).alias(t_alias)
             uri_to_log = {file_uri(t.path, p): p for p in snap.files}
             file_col = F.col(f"{t_alias}.{_FILE_COL}").alias(_FILE_COL)
             if updates:
@@ -387,7 +429,14 @@ class MergeBuilder:
 
         outputs: list[DataFrame] = []
         t_touched = (
-            t._read_files(touched, with_meta=True, row_ids=rt).alias(t_alias)
+            scan_adds(
+                t.spark,
+                t.path,
+                [snap.files[p] for p in touched],
+                snap,
+                with_meta=True,
+                row_ids=rt,
+            ).alias(t_alias)
             if touched
             else None
         )
@@ -447,8 +496,9 @@ class MergeBuilder:
                     unmatched = unmatched.filter(~action.isin(delete_ids))
                 outputs.append(unmatched.select(*out_cols(by_source)))
             if inserts:
+                target = scan_adds(t.spark, t.path, list(snap.files.values()), snap)
                 outputs.append(
-                    inserted(src.join(t.toDF().alias(t_alias), cond, "left_anti"))
+                    inserted(src.join(target.alias(t_alias), cond, "left_anti"))
                 )
 
         if not outputs:
@@ -468,48 +518,25 @@ class MergeBuilder:
         adds = stage_files(
             new_data, t.path, list(snap.metadata.partitionColumns), schema=schema
         )
-        now = _utc_millis()
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="MERGE",
-                operationParameters={
-                    "predicate": str(self._condition),
-                    "matchedClauses": [c["kind"] for c in self._matched],
-                    "notMatchedClauses": [c["kind"] for c in self._not_matched],
-                    "notMatchedBySourceClauses": [
-                        c["kind"] for c in self._not_matched_by_source
-                    ],
-                    **(operation_parameters or {}),
-                },
-                readVersion=snap.version,
-                operationMetrics={
-                    "numTargetFilesRemoved": len(touched),
-                    "numTargetFilesAdded": len(adds),
-                },
-            ).to_action()
-        ]
-        if new_fields:
-            from .log import Metadata
-
-            actions.append(
-                Metadata(
-                    schemaString=schema.json(),
-                    partitionColumns=list(snap.metadata.partitionColumns),
-                    configuration=dict(snap.metadata.configuration),
-                    id=snap.metadata.id,
-                    name=snap.metadata.name,
-                    createdTime=snap.metadata.createdTime,
-                ).to_action()
-            )
-        actions.extend(t._rt_assign(snap, adds))
-        actions.extend(RemoveFile(p, deletionTimestamp=now).to_action() for p in touched)
-        actions.extend(a.to_action() for a in adds)
-        return t._commit_mutation(
-            actions,
-            touched,
+        return t._commit_rewrite(
             snap,
-            content_neutral=False,
-            rt_adds=adds if rt else None,
+            "MERGE",
+            {
+                "predicate": str(self._condition),
+                "matchedClauses": [c["kind"] for c in self._matched],
+                "notMatchedClauses": [c["kind"] for c in self._not_matched],
+                "notMatchedBySourceClauses": [
+                    c["kind"] for c in self._not_matched_by_source
+                ],
+                **(operation_parameters or {}),
+            },
+            touched,
+            adds,
+            extra_actions=(
+                [replace(snap.metadata, schemaString=schema.json()).to_action()]
+                if new_fields
+                else []
+            ),
         )
 
 
@@ -561,34 +588,6 @@ class DeltaTable:
 
     def version(self) -> int:
         return self._log.latest_version()
-
-    def _read_files(
-        self,
-        rel_files: list[str],
-        with_meta: bool = False,
-        row_ids: bool = False,
-    ) -> DataFrame:
-        """Read a subset of the current snapshot's files (deletion
-        vectors applied; optional FILE/ROW metadata columns;
-        ``row_ids=True`` appends _row_id/_row_commit_version for
-        rewrite paths that must preserve row identity)."""
-        snap = self._log.snapshot()
-        adds = [snap.files[f] for f in rel_files]
-        return scan_adds(
-            self.spark, self.path, adds, snap, with_meta=with_meta, row_ids=row_ids
-        )
-
-    def _rt_assign(self, snap, adds: list[AddFile]) -> list[dict[str, Any]]:
-        """Row tracking for a mutation commit: give staged files fresh
-        disjoint baseRowId ranges (the fallback id source for rows whose
-        materialized __dls_row_id is null, e.g. MERGE inserts) and
-        advance the high-water mark. Empty when the feature is off."""
-        if not rowtracking.enabled(snap) or not adds:
-            return []
-        acts, _ = rowtracking.assign_fresh_ids(
-            adds, rowtracking.high_water_mark(snap), snap.version + 1
-        )
-        return acts
 
     # ---------- metadata ----------
 
@@ -686,8 +685,11 @@ class DeltaTable:
         rt_adds: list[AddFile] | None = None,
     ) -> int:
         """Commit a mutation with conflict RESOLUTION, not just detection
-        (Delta's disjoint-file rule). On a lost commit race, rebase and
-        retry iff the winner provably cannot invalidate this mutation:
+        (Delta's disjoint-file rule). The first attempt targets the
+        version right after ``read_snap``, so every commit that landed
+        since the mutation read its snapshot is checked. On a lost
+        commit race, rebase and retry iff the winners provably cannot
+        invalidate this mutation:
 
           - table metadata (schema/partitioning/constraints) unchanged;
           - every file this mutation removes/re-adds is byte-identical
@@ -696,8 +698,9 @@ class DeltaTable:
           - for predicate mutations (content_neutral=False): the winner
             added no dataChange files — a concurrent append/update could
             contain rows our predicate should have affected, which must
-            serialize as a conflict — AND removed no file we read
-            (Delta's concurrent-delete-read rule): a remove-only winner
+            serialize as a conflict — AND removed no file we read, nor
+            re-added one with a new deletion vector (Delta's
+            concurrent-delete-read rule): a remove-only winner
             (DELETE dropping whole files, RESTORE) invalidates FIND /
             anti-join decisions made against those rows, e.g. a MERGE
             that skipped inserting a source row because it matched a
@@ -717,9 +720,10 @@ class DeltaTable:
         our_domains = {
             x["domainMetadata"]["domain"] for x in actions if "domainMetadata" in x
         }
+        version = read_snap.version + 1
         for attempt in range(4):
             try:
-                return self._log.commit_next(actions, retries=0)
+                return self._log.commit(version, actions)
             except ConcurrentModificationError:
                 if attempt == 3:
                     raise
@@ -746,11 +750,9 @@ class DeltaTable:
                             ):
                                 raise
                 if not content_neutral:
-                    for p, a in new_snap.files.items():
-                        if p not in read_snap.files and a.dataChange:
-                            raise
                     # concurrent-delete-read: a winner whose commit
-                    # REMOVED (dataChange=True) a file this txn read
+                    # REMOVED (dataChange=True) a file this txn read, or
+                    # re-added one with a new deletion vector,
                     # invalidates FIND / anti-join decisions made against
                     # those rows (e.g. a MERGE that skipped inserting a
                     # source row matched to a now-deleted target row).
@@ -764,6 +766,12 @@ class DeltaTable:
                         if read_paths is not None
                         else set(read_snap.files)
                     )
+                    for p, a in new_snap.files.items():
+                        if a.dataChange and (
+                            p not in read_snap.files
+                            or (p in read_set and read_snap.files[p] != a)
+                        ):
+                            raise
                     for v in range(
                         read_snap.version + 1, new_snap.version + 1
                     ):
@@ -795,34 +803,121 @@ class DeltaTable:
                     ]
                     actions.extend(rt_acts)
                     actions.extend(a.to_action() for a in rt_adds)
+                version = new_snap.version + 1
         raise AssertionError("unreachable")
 
-    def _touched_files(
-        self, cond: Column, cond_str: str | None = None
-    ) -> tuple[list[str], list[str]]:
-        """Exact touched-file discovery: one scan with _metadata.file_path,
-        pre-pruned by log stats when the condition is a simple SQL string
-        (data skipping — at scale the FIND scan touches only files whose
-        min/max ranges overlap the predicate). Returns (touched paths,
-        read paths): the second is the pruned scan set, which bounds the
-        concurrent-delete-read conflict check in _commit_mutation."""
-        from .skipping import prune_adds
-
-        from .writer import column_mapping
-
-        snap = self._log.snapshot()
-        adds = list(snap.files.values())
-        if cond_str:
-            adds, _ = prune_adds(
-                adds, cond_str, colmap=column_mapping(schema_of(snap))
+    def _commit_rewrite(
+        self,
+        snap,
+        operation: str,
+        params: dict[str, Any],
+        removed: list[str],
+        adds: list[AddFile],
+        data_change: bool = True,
+        read_paths: list[str] | None = None,
+        extra_actions: Iterable[dict[str, Any]] = (),
+    ) -> int:
+        """COMMIT of a rewrite read from ``snap``: one log entry that swaps
+        the ``removed`` files for the staged ``adds``, checked against
+        ``snap`` by _commit_mutation. Staged files get fresh disjoint
+        baseRowId ranges when row tracking is on (the id source for rows
+        whose materialized __dls_row_id is null, e.g. MERGE inserts).
+        ``data_change=False`` marks a layout-only rewrite (OPTIMIZE,
+        PURGE), which may rebase over concurrent appends."""
+        removed_key, added_key = _FILE_METRICS.get(
+            operation, ("numRemovedFiles", "numAddedFiles")
+        )
+        actions = [
+            CommitInfo(
+                operation=operation,
+                operationParameters=params,
+                readVersion=snap.version,
+                operationMetrics={removed_key: len(removed), added_key: len(adds)},
+            ).to_action(),
+            *extra_actions,
+        ]
+        rt = rowtracking.enabled(snap)
+        if rt and adds:
+            rt_acts, _ = rowtracking.assign_fresh_ids(
+                adds, rowtracking.high_water_mark(snap), snap.version + 1
             )
+            actions += rt_acts
+        now = _utc_millis()
+        actions += [
+            RemoveFile(p, deletionTimestamp=now, dataChange=data_change).to_action()
+            for p in removed
+        ]
+        actions += [a.to_action() for a in adds]
+        return self._commit_mutation(
+            actions,
+            removed,
+            snap,
+            content_neutral=not data_change,
+            read_paths=read_paths,
+            rt_adds=adds if rt else None,
+        )
+
+    def _restage(
+        self, snap, adds: list[AddFile], transform=None, data_change: bool = True
+    ) -> list[AddFile]:
+        """REWRITE: read ``adds`` as of ``snap`` (deletion vectors
+        applied), apply ``transform`` and stage the result as new files.
+        With row tracking the rows carry their ids into the new files."""
+        rt = rowtracking.enabled(snap)
+        df = scan_adds(self.spark, self.path, adds, snap, row_ids=rt)
+        if transform is not None:
+            df = transform(df)
+        if rt:
+            df = rowtracking.materialize(df)
+        return stage_files(
+            df,
+            self.path,
+            list(snap.metadata.partitionColumns),
+            data_change=data_change,
+            schema=schema_of(snap),
+        )
+
+    def _rewrite_matching(
+        self, snap, condition: str | Column, transform
+    ) -> tuple[list[str], list[str], list[AddFile]]:
+        """FIND -> REWRITE of a predicate mutation (DELETE, UPDATE,
+        replaceWhere), both against ``snap``: the files holding rows that
+        match ``condition`` are rewritten through ``transform(df, match)``,
+        where ``match`` is the condition with null read as false. Returns
+        (touched paths, read paths, staged adds); nothing is staged when
+        no row matches."""
+        cond = _as_column(condition)
+        touched, read_paths = self._touched_files(
+            snap, cond, condition if isinstance(condition, str) else None
+        )
+        if not touched:
+            return [], read_paths, []
+        match = F.coalesce(cond, F.lit(False))
+        adds = self._restage(
+            snap, [snap.files[p] for p in touched], lambda df: transform(df, match)
+        )
+        return touched, read_paths, adds
+
+    def _touched_files(
+        self, snap, cond: Column, cond_str: str | None = None
+    ) -> tuple[list[str], list[str]]:
+        """Exact touched-file discovery in ``snap``: one scan with
+        _metadata.file_path, pre-pruned by log stats when the condition
+        is a simple SQL string (data skipping — at scale the FIND scan
+        touches only files whose min/max ranges overlap the predicate).
+        Returns (touched paths, read paths): the second is the pruned scan
+        set, which bounds the concurrent-delete-read conflict check in
+        _commit_mutation."""
+        adds = _pruned_adds(snap, cond_str)
         if not adds:
             return [], []
-        read_paths = [a.path for a in adds]
-        df = self._read_files(read_paths, with_meta=True)
+        df = scan_adds(self.spark, self.path, adds, snap, with_meta=True)
         rows = df.filter(cond).select(_FILE_COL).distinct().collect()
         uri_to_log = {file_uri(self.path, a.path): a.path for a in adds}
-        return sorted(uri_to_log[r[_FILE_COL]] for r in rows), read_paths
+        return (
+            sorted(uri_to_log[r[_FILE_COL]] for r in rows),
+            [a.path for a in adds],
+        )
 
     def delete(
         self, condition: str | Column | None = None, use_dv: bool | None = None
@@ -843,57 +938,30 @@ class DeltaTable:
         """
         snap = self._log.snapshot()
         check_append_only(snap, "DELETE")
-        cond = _as_column(condition)
         if use_dv is None:
             use_dv = snap.metadata.configuration.get(DV_CONF, "").lower() == "true"
-        if use_dv and cond is not None:
-            return self._dv_delete(
-                cond, condition if isinstance(condition, str) else None, snap
-            )
-        now = _utc_millis()
-        rt = rowtracking.enabled(snap)
-        if cond is None:
-            touched = sorted(snap.files)
-            read_paths = touched
+        if condition is None:
+            touched = read_paths = sorted(snap.files)
             adds = []
+        elif use_dv:
+            return self._dv_delete(
+                _as_column(condition),
+                condition if isinstance(condition, str) else None,
+                snap,
+            )
         else:
-            touched, read_paths = self._touched_files(
-                cond, condition if isinstance(condition, str) else None
+            touched, read_paths, adds = self._rewrite_matching(
+                snap, condition, _keep_unmatched
             )
             if not touched:
                 return snap.version
-            kept = self._read_files(touched, row_ids=rt).filter(
-                ~F.coalesce(cond, F.lit(False))
-            )
-            if rt:
-                kept = rowtracking.materialize(kept)
-            adds = stage_files(
-                kept,
-                self.path,
-                list(snap.metadata.partitionColumns),
-                schema=schema_of(snap),
-            )
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="DELETE",
-                operationParameters={"predicate": str(condition)},
-                readVersion=snap.version,
-                operationMetrics={
-                    "numRemovedFiles": len(touched),
-                    "numAddedFiles": len(adds),
-                },
-            ).to_action()
-        ]
-        actions.extend(self._rt_assign(snap, adds))
-        actions.extend(RemoveFile(p, deletionTimestamp=now).to_action() for p in touched)
-        actions.extend(a.to_action() for a in adds)
-        return self._commit_mutation(
-            actions,
-            touched,
+        return self._commit_rewrite(
             snap,
-            content_neutral=False,
+            "DELETE",
+            {"predicate": str(condition)},
+            touched,
+            adds,
             read_paths=read_paths,
-            rt_adds=adds if rt else None,
         )
 
     def _dv_delete(self, cond: Column, cond_str: str | None, snap) -> int:
@@ -907,17 +975,7 @@ class DeltaTable:
         so old and new sets are disjoint and cardinalities add)."""
         import uuid as _uuid
 
-        from .skipping import prune_adds
-        from .writer import column_mapping
-
-        adds = list(snap.files.values())
-        if cond_str:
-            # colmap mirrors _touched_files: stats are keyed by PHYSICAL
-            # names, so under columnMapping a renamed logical column must
-            # translate before consulting min/max or pruning goes wrong
-            adds, _ = prune_adds(
-                adds, cond_str, colmap=column_mapping(schema_of(snap))
-            )
+        adds = _pruned_adds(snap, cond_str)
         if not adds:
             return snap.version
 
@@ -1023,40 +1081,9 @@ class DeltaTable:
         dv_adds = [a for a in snap.files.values() if a.deletionVector]
         if not dv_adds:
             return snap.version
-        rt = rowtracking.enabled(snap)
-        df = scan_adds(self.spark, self.path, dv_adds, snap, row_ids=rt)
-        if rt:
-            df = rowtracking.materialize(df)
-        adds = stage_files(
-            df,
-            self.path,
-            list(snap.metadata.partitionColumns),
-            data_change=False,
-            schema=schema_of(snap),
-        )
-        now = _utc_millis()
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="PURGE",
-                readVersion=snap.version,
-                operationMetrics={
-                    "numFilesPurged": len(dv_adds),
-                    "numFilesAdded": len(adds),
-                },
-            ).to_action()
-        ]
-        actions.extend(self._rt_assign(snap, adds))
-        actions.extend(
-            RemoveFile(a.path, deletionTimestamp=now, dataChange=False).to_action()
-            for a in dv_adds
-        )
-        actions.extend(a.to_action() for a in adds)
-        return self._commit_mutation(
-            actions,
-            [a.path for a in dv_adds],
-            snap,
-            content_neutral=True,
-            rt_adds=adds if rt else None,
+        adds = self._restage(snap, dv_adds, data_change=False)
+        return self._commit_rewrite(
+            snap, "PURGE", {}, [a.path for a in dv_adds], adds, data_change=False
         )
 
     def clone(self, target_path: str, shallow: bool = True) -> "DeltaTable":
@@ -1137,70 +1164,41 @@ class DeltaTable:
 
     def update(self, condition: str | Column, set: dict[str, str | Column]) -> int:
         """UPDATE t SET ... WHERE ... via touched-file rewrite."""
-        snap = self._log.snapshot()
-        check_append_only(snap, "UPDATE")
-        schema = schema_of(snap)
-        cond = _as_column(condition)
-        touched, read_paths = self._touched_files(
-            cond, condition if isinstance(condition, str) else None
-        )
-        if not touched:
-            return snap.version
-        rt = rowtracking.enabled(snap)
-        df = self._read_files(touched, row_ids=rt)
-        match = F.coalesce(cond, F.lit(False))
-        out_cols = []
-        for f in schema.fields:
-            if f.name in set:
-                new_v = _as_column(set[f.name]).cast(f.dataType)
-                out_cols.append(
-                    F.when(match, new_v).otherwise(F.col(f.name)).alias(f.name)
-                )
-            else:
-                out_cols.append(F.col(f.name))
-        if rt:
-            # updated rows keep their id but take THIS commit's version
-            # (materialized null -> falls back to the new file's
-            # defaultRowCommitVersion); untouched rows keep both
-            out_cols.append(F.col(rowtracking.ROW_ID).alias(rowtracking.MAT_ROW_ID))
-            out_cols.append(
-                F.when(match, F.lit(None).cast("long"))
-                .otherwise(F.col(rowtracking.ROW_COMMIT))
-                .alias(rowtracking.MAT_ROW_COMMIT)
-            )
-        rewritten = df.select(*out_cols)
         from .writer import apply_generated
 
-        rewritten = apply_generated(rewritten, snap.metadata.configuration)
-        enforce_constraints(rewritten, snap.metadata.configuration)
-        adds = stage_files(
-            rewritten,
-            self.path,
-            list(snap.metadata.partitionColumns),
-            schema=schema_of(snap),
-        )
-        now = _utc_millis()
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="UPDATE",
-                operationParameters={"predicate": str(condition)},
-                readVersion=snap.version,
-                operationMetrics={
-                    "numRemovedFiles": len(touched),
-                    "numAddedFiles": len(adds),
-                },
-            ).to_action()
-        ]
-        actions.extend(self._rt_assign(snap, adds))
-        actions.extend(RemoveFile(p, deletionTimestamp=now).to_action() for p in touched)
-        actions.extend(a.to_action() for a in adds)
-        return self._commit_mutation(
-            actions,
-            touched,
+        snap = self._log.snapshot()
+        check_append_only(snap, "UPDATE")
+        conf = snap.metadata.configuration
+
+        def assign(df: DataFrame, match: Column) -> DataFrame:
+            # one projection: every new value reads the row's old values
+            cols = {
+                f.name: F.when(match, _as_column(set[f.name]).cast(f.dataType))
+                .otherwise(F.col(f.name))
+                for f in schema_of(snap).fields
+                if f.name in set
+            }
+            if rowtracking.enabled(snap):
+                # updated rows keep their id but take THIS commit's
+                # version (materialized null -> falls back to the new
+                # file's defaultRowCommitVersion)
+                cols[rowtracking.ROW_COMMIT] = F.when(
+                    match, F.lit(None).cast("long")
+                ).otherwise(F.col(rowtracking.ROW_COMMIT))
+            out = apply_generated(df.withColumns(cols), conf)
+            enforce_constraints(out, conf)
+            return out
+
+        touched, read_paths, adds = self._rewrite_matching(snap, condition, assign)
+        if not touched:
+            return snap.version
+        return self._commit_rewrite(
             snap,
-            content_neutral=False,
+            "UPDATE",
+            {"predicate": str(condition)},
+            touched,
+            adds,
             read_paths=read_paths,
-            rt_adds=adds if rt else None,
         )
 
     def merge(
@@ -1382,72 +1380,49 @@ class DeltaTable:
         if zorder_by:
             from .zorder import zvalue_expr
 
-            zcol = zvalue_expr(self.toDF(), zorder_by, bits=zorder_bits)
+            zcol = zvalue_expr(
+                scan_adds(self.spark, self.path, list(snap.files.values()), snap),
+                zorder_by,
+                bits=zorder_bits,
+            )
 
-        rt = rowtracking.enabled(snap)
         removes: list[str] = []
-        all_adds = []
-        for _key, adds in by_part.items():
+        all_adds: list[AddFile] = []
+        for adds in by_part.values():
             if len(adds) < 2 and not clustering:
                 continue
             total = sum(a.size for a in adds)
             n_out = max(1, -(-total // target_file_bytes))
-            df = self._read_files([a.path for a in adds], row_ids=rt)
-            if rt:
-                df = rowtracking.materialize(df)
-            if zcol is not None:
-                df = (
-                    df.withColumn("__dls_z", zcol)
-                    .repartitionByRange(n_out, "__dls_z")
-                    .sortWithinPartitions("__dls_z")
-                    .drop("__dls_z")
-                )
-            elif cluster_by:
-                df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
-                    *cluster_by
-                )
-            else:
-                df = df.coalesce(n_out)
-            all_adds.extend(
-                stage_files(
-                    df,
-                    self.path,
-                    list(snap.metadata.partitionColumns),
-                    data_change=False,
-                    schema=schema_of(snap),
-                )
-            )
-            removes.extend(a.path for a in adds)
+
+            def layout(df: DataFrame) -> DataFrame:
+                if zcol is not None:
+                    return (
+                        df.withColumn("__dls_z", zcol)
+                        .repartitionByRange(n_out, "__dls_z")
+                        .sortWithinPartitions("__dls_z")
+                        .drop("__dls_z")
+                    )
+                if cluster_by:
+                    return df.repartitionByRange(
+                        n_out, *cluster_by
+                    ).sortWithinPartitions(*cluster_by)
+                return df.coalesce(n_out)
+
+            all_adds += self._restage(snap, adds, layout, data_change=False)
+            removes += [a.path for a in adds]
         if not removes:
             return snap.version
-        now = _utc_millis()
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="OPTIMIZE",
-                operationParameters={
-                    "targetFileBytes": target_file_bytes,
-                    "clusterBy": cluster_by or [],
-                    "zorderBy": zorder_by or [],
-                },
-                readVersion=snap.version,
-                operationMetrics={
-                    "numRemovedFiles": len(removes),
-                    "numAddedFiles": len(all_adds),
-                },
-            ).to_action()
-        ]
-        actions.extend(self._rt_assign(snap, all_adds))
-        actions.extend(
-            RemoveFile(p, deletionTimestamp=now, dataChange=False).to_action()
-            for p in removes
-        )
-        actions.extend(a.to_action() for a in all_adds)
-        return self._commit_mutation(
-            actions,
-            removes,
+        return self._commit_rewrite(
             snap,
-            content_neutral=True,
-            rt_adds=all_adds if rt else None,
+            "OPTIMIZE",
+            {
+                "targetFileBytes": target_file_bytes,
+                "clusterBy": cluster_by or [],
+                "zorderBy": zorder_by or [],
+            },
+            removes,
+            all_adds,
+            data_change=False,
         )
 
     # ---------- CHECK constraints ----------
@@ -1460,20 +1435,15 @@ class DeltaTable:
         key = f"constraint.{name}"
         if key in snap.metadata.configuration:
             raise ValueError(f"constraint {name} already exists")
-        enforce_constraints(self.toDF(), {key: expr})
-        meta = self._metadata_with_configuration(
-            snap, {**snap.metadata.configuration, key: expr}
+        enforce_constraints(
+            scan_adds(self.spark, self.path, list(snap.files.values()), snap),
+            {key: expr},
         )
-        return self._log.commit_next(
-            [
-                CommitInfo(
-                    operation="ADD CONSTRAINT",
-                    operationParameters={"name": name, "expr": expr},
-                    readVersion=snap.version,
-                ).to_action(),
-                meta.to_action(),
-            ],
-            retries=0,
+        return self._commit_schema(
+            snap,
+            "ADD CONSTRAINT",
+            {"name": name, "expr": expr},
+            configuration={**snap.metadata.configuration, key: expr},
         )
 
     def drop_constraint(self, name: str) -> int:
@@ -1482,57 +1452,46 @@ class DeltaTable:
         if key not in snap.metadata.configuration:
             raise ValueError(f"constraint {name} does not exist")
         conf = {k: v for k, v in snap.metadata.configuration.items() if k != key}
-        meta = self._metadata_with_configuration(snap, conf)
-        return self._log.commit_next(
-            [
-                CommitInfo(
-                    operation="DROP CONSTRAINT",
-                    operationParameters={"name": name},
-                    readVersion=snap.version,
-                ).to_action(),
-                meta.to_action(),
-            ],
-            retries=0,
+        return self._commit_schema(
+            snap, "DROP CONSTRAINT", {"name": name}, configuration=conf
         )
 
     # ---------- schema evolution (ALTER TABLE ... COLUMN) ----------
 
     def _commit_schema(
-        self, snap, new_schema, operation: str, params: dict[str, Any],
+        self,
+        snap,
+        operation: str,
+        params: dict[str, Any],
+        schema: StructType | None = None,
         configuration: dict[str, str] | None = None,
-        extra_actions: list[dict[str, Any]] | None = None,
-        at_version: int | None = None,
+        extra_actions: Iterable[dict[str, Any]] = (),
     ) -> int:
-        from .log import Metadata
-
+        """Metadata commit built from ``snap``: a new schema and/or
+        configuration (an unchanged schema keeps ``snap``'s schemaString
+        byte for byte), plus ``extra_actions`` such as protocol changes.
+        It lands at the version right after ``snap`` or raises
+        ConcurrentModificationError: a metadata change is never rebased,
+        since the caller validated it against ``snap`` (and version
+        provenance such as typeChanges' tableVersion names that version)."""
         snap.protocol.check_write_support(self.path)
-        meta = Metadata(
-            schemaString=new_schema.json(),
-            partitionColumns=list(snap.metadata.partitionColumns),
-            configuration=(
-                configuration
-                if configuration is not None
-                else snap.metadata.configuration
-            ),
-            id=snap.metadata.id,
-            name=snap.metadata.name,
-            createdTime=snap.metadata.createdTime,
+        changes: dict[str, Any] = {}
+        if schema is not None:
+            changes["schemaString"] = schema.json()
+        if configuration is not None:
+            changes["configuration"] = configuration
+        return self._log.commit(
+            snap.version + 1,
+            [
+                CommitInfo(
+                    operation=operation,
+                    operationParameters=params,
+                    readVersion=snap.version,
+                ).to_action(),
+                *extra_actions,
+                replace(snap.metadata, **changes).to_action(),
+            ],
         )
-        actions = [
-            CommitInfo(
-                operation=operation,
-                operationParameters=params,
-                readVersion=snap.version,
-            ).to_action(),
-            *(extra_actions or []),
-            meta.to_action(),
-        ]
-        if at_version is not None:
-            # pin the exact version: the caller embedded it in the
-            # metadata (e.g. typeChanges tableVersion provenance), so a
-            # concurrent commit must fail loudly, never land elsewhere
-            return self._log.commit(at_version, actions)
-        return self._log.commit_next(actions, retries=0)
 
     def _feature_upgrade(self, snap, feature: str) -> list[dict[str, Any]]:
         """Protocol action adding a reader feature, or [] when the table
@@ -1628,9 +1587,9 @@ class DeltaTable:
             }
         return self._commit_schema(
             snap,
-            new_schema,
             "ADD COLUMNS",
             {"columns": dict(columns), **({"defaults": dict(defaults)} if defaults else {})},
+            schema=new_schema,
             configuration=configuration,
         )
 
@@ -1675,18 +1634,12 @@ class DeltaTable:
             conf.pop("delta.inCommitTimestampEnablementTimestamp", None)
         elif feature == "rowTracking":
             conf.pop("delta.enableRowTracking", None)
-        meta = self._metadata_with_configuration(snap, conf)
-        return self._log.commit_next(
-            [
-                CommitInfo(
-                    operation="DROP FEATURE",
-                    operationParameters={"feature": feature},
-                    readVersion=snap.version,
-                ).to_action(),
-                snap.protocol.without_feature(feature).to_action(),
-                meta.to_action(),
-            ],
-            retries=0,
+        return self._commit_schema(
+            snap,
+            "DROP FEATURE",
+            {"feature": feature},
+            configuration=conf,
+            extra_actions=[snap.protocol.without_feature(feature).to_action()],
         )
 
     def alter_column_type(self, name: str, new_type_ddl: str) -> int:
@@ -1736,15 +1689,14 @@ class DeltaTable:
         )
         return self._commit_schema(
             snap,
-            new_schema,
             "ALTER COLUMN TYPE",
             {
                 "column": name,
                 "from": f0.dataType.simpleString(),
                 "to": new_dt.simpleString(),
             },
+            schema=new_schema,
             extra_actions=self._feature_upgrade(snap, "typeWidening"),
-            at_version=snap.version + 1,
         )
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1772,7 +1724,8 @@ class DeltaTable:
             ]
         )
         return self._commit_schema(
-            snap, new_schema, "RENAME COLUMN", {"from": old, "to": new},
+            snap, "RENAME COLUMN", {"from": old, "to": new},
+            schema=new_schema,
             configuration=conf,
             extra_actions=self._feature_upgrade(snap, "columnMapping"),
         )
@@ -1798,7 +1751,8 @@ class DeltaTable:
             [f for f in frozen.fields if f.name != match[0].name]
         )
         return self._commit_schema(
-            snap, new_schema, "DROP COLUMN", {"column": name},
+            snap, "DROP COLUMN", {"column": name},
+            schema=new_schema,
             configuration=conf,
             extra_actions=self._feature_upgrade(snap, "columnMapping"),
         )
@@ -1828,21 +1782,9 @@ class DeltaTable:
                 f"replace_where: incoming row violates predicate {predicate!r}: "
                 f"{bad[0]}"
             )
-        rt = rowtracking.enabled(snap)
-        touched, read_paths = self._touched_files(cond, predicate)
-        adds = []
-        if touched:
-            kept = self._read_files(touched, row_ids=rt).filter(
-                ~F.coalesce(cond, F.lit(False))
-            )
-            if rt:
-                kept = rowtracking.materialize(kept)
-            adds = stage_files(
-                kept,
-                self.path,
-                list(snap.metadata.partitionColumns),
-                schema=schema,
-            )
+        touched, read_paths, adds = self._rewrite_matching(
+            snap, predicate, _keep_unmatched
+        )
         new_df = apply_generated(
             df.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields
@@ -1857,34 +1799,13 @@ class DeltaTable:
             list(snap.metadata.partitionColumns),
             schema=schema,
         )
-        now = _utc_millis()
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="WRITE",
-                operationParameters={
-                    "mode": "Overwrite",
-                    "predicate": predicate,
-                },
-                readVersion=snap.version,
-                operationMetrics={
-                    "numRemovedFiles": len(touched),
-                    "numAddedFiles": len(adds) + len(new_adds),
-                },
-            ).to_action()
-        ]
-        actions.extend(self._rt_assign(snap, adds + new_adds))
-        actions.extend(
-            RemoveFile(p, deletionTimestamp=now).to_action() for p in touched
-        )
-        actions.extend(a.to_action() for a in adds)
-        actions.extend(a.to_action() for a in new_adds)
-        return self._commit_mutation(
-            actions,
-            touched,
+        return self._commit_rewrite(
             snap,
-            content_neutral=False,
+            "WRITE",
+            {"mode": "Overwrite", "predicate": predicate},
+            touched,
+            adds + new_adds,
             read_paths=read_paths,
-            rt_adds=(adds + new_adds) if rt else None,
         )
 
     def partitions(self) -> DataFrame:
@@ -2016,48 +1937,37 @@ class DeltaTable:
         (dataChange=False — a metadata-only commit, no bytes move) with
         a fresh disjoint ``baseRowId`` range, so ``_row_id`` is defined
         for pre-existing rows too."""
-        from . import rowtracking
+        from .log import _ict_enabled
 
         snap = self._log.snapshot()
         conf = {**snap.metadata.configuration, **{k: str(v) for k, v in props.items()}}
-        meta = self._metadata_with_configuration(snap, conf)
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="SET TBLPROPERTIES",
-                operationParameters={"properties": dict(props)},
-                readVersion=snap.version,
-            ).to_action(),
-            meta.to_action(),
-        ]
-        from .log import _ict_enabled
-
-        if _ict_enabled(conf) and not _ict_enabled(
-            snap.metadata.configuration
-        ):
-            actions.insert(
-                1,
-                snap.protocol.with_features(
-                    writer=["inCommitTimestamp"]
-                ).to_action(),
-            )
+        writer_features: list[str] = []
+        if _ict_enabled(conf) and not _ict_enabled(snap.metadata.configuration):
+            writer_features.append("inCommitTimestamp")
+        backfill_actions: list[dict[str, Any]] = []
         if rowtracking.enabled(conf) and not rowtracking.enabled(snap):
-            actions.insert(
-                1,
-                snap.protocol.with_features(
-                    writer=rowtracking.ROW_TRACKING_FEATURES
-                ).to_action(),
-            )
+            writer_features += rowtracking.ROW_TRACKING_FEATURES
             backfill = [
                 replace(a, dataChange=False)
                 for a in snap.files.values()
                 if a.baseRowId is None
             ]
-            rt_actions, _ = rowtracking.assign_fresh_ids(
+            backfill_actions, _ = rowtracking.assign_fresh_ids(
                 backfill, rowtracking.high_water_mark(snap), snap.version + 1
             )
-            actions.extend(rt_actions)
-            actions.extend(a.to_action() for a in backfill)
-        return self._log.commit_next(actions, retries=0)
+            backfill_actions += [a.to_action() for a in backfill]
+        protocol = (
+            [snap.protocol.with_features(writer=writer_features).to_action()]
+            if writer_features
+            else []
+        )
+        return self._commit_schema(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": dict(props)},
+            configuration=conf,
+            extra_actions=protocol + backfill_actions,
+        )
 
     def unset_properties(self, keys: list[str]) -> int:
         """ALTER TABLE UNSET TBLPROPERTIES."""
@@ -2065,34 +1975,19 @@ class DeltaTable:
         conf = {
             k: v for k, v in snap.metadata.configuration.items() if k not in set(keys)
         }
-        meta = self._metadata_with_configuration(snap, conf)
-        return self._log.commit_next(
-            [
-                CommitInfo(
-                    operation="UNSET TBLPROPERTIES",
-                    operationParameters={"properties": list(keys)},
-                    readVersion=snap.version,
-                ).to_action(),
-                meta.to_action(),
-            ],
-            retries=0,
-        )
-
-    def _metadata_with_configuration(self, snap, configuration):
-        from .log import Metadata
-
-        return Metadata(
-            schemaString=snap.metadata.schemaString,
-            partitionColumns=list(snap.metadata.partitionColumns),
-            configuration=configuration,
-            id=snap.metadata.id,
-            name=snap.metadata.name,
-            createdTime=snap.metadata.createdTime,
+        return self._commit_schema(
+            snap,
+            "UNSET TBLPROPERTIES",
+            {"properties": list(keys)},
+            configuration=conf,
         )
 
     def restore(self, version: int) -> int:
         """RESTORE to an earlier version: commit the file-set diff so the
-        table content equals that snapshot (history is preserved)."""
+        table content equals that snapshot (history is preserved). The
+        diff is taken against the current snapshot and committed against
+        it, so a concurrent data change makes RESTORE raise instead of
+        landing a mix of both."""
         old = self._log.snapshot(version)
         cur = self._log.snapshot()
         check_append_only(cur, "RESTORE")
@@ -2114,4 +2009,7 @@ class DeltaTable:
         ]
         actions.extend(RemoveFile(p, deletionTimestamp=now).to_action() for p in removes)
         actions.extend(a.to_action() for a in adds)
-        return self._log.commit_next(actions, retries=0)
+        # a re-added path replaces its current entry, so a winner that
+        # changed it conflicts just like one that changed a removed path
+        replaced = removes + [a.path for a in adds if a.path in cur.files]
+        return self._commit_mutation(actions, replaced, cur, content_neutral=False)

@@ -166,7 +166,7 @@ def test_skipping_translates_renamed_predicates(spark, table):
     )
     assert skipped > 0  # old files provably can't match -> pruned
     touched, read_paths = table._touched_files(
-        F.col("amount") >= 1000, "amount >= 1000"
+        snap, F.col("amount") >= 1000, "amount >= 1000"
     )
     assert len(touched) == 1  # only the new file
     assert len(read_paths) < len(snap.files)  # read set is the pruned scan

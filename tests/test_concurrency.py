@@ -3,6 +3,7 @@ create-if-absent commit; losers retry and land on later versions."""
 
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_spark import read_delta, write_delta
@@ -253,6 +254,35 @@ def test_mutation_racing_remove_only_delete_raises(spark, tmp_table):
         dt.update("id % 2 = 0", {"id": "id + 1000"})
 
 
+def test_mutation_racing_dv_delete_on_read_file_raises(spark, tmp_table):
+    """A winner that re-adds a file this mutation read with a new
+    deletion vector (a DV delete) conflicts like one that removed it:
+    rows FIND saw are gone, even in a file the mutation did not touch."""
+    from dataclasses import replace
+
+    from delta_lake_spark import DeltaTable, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+    from delta_lake_spark.log import CommitInfo
+
+    for start in (0, 10, 20):  # three files, one per commit
+        write_delta(spark.range(start, start + 10), tmp_table)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    snap = dt._log.snapshot()
+    victim = next(
+        a for a in snap.files.values() if a.stats["minValues"]["id"] == 20
+    )
+    competitor = [
+        CommitInfo(operation="DELETE").to_action(),
+        replace(
+            victim, deletionVector={"path": "deletion_vectors/x", "cardinality": 1}
+        ).to_action(),
+    ]
+    _inject_competitor_before_commit(dt._log, competitor)
+    # `%` defeats stats pruning: FIND reads all three files, touches one
+    with pytest.raises(ConcurrentModificationError):
+        dt.update("id % 100 = 5", {"id": "id + 1000"})
+
+
 def test_partition_disjoint_delete_rebases_over_remove(spark, tmp_table):
     """A remove-only winner in partition g=0 does NOT conflict with a
     delete whose pruned read set is partition g=3 only — the read-set
@@ -284,6 +314,64 @@ def test_partition_disjoint_delete_rebases_over_remove(spark, tmp_table):
     assert got.count() == 80 - n_victim
 
 
+@pytest.mark.parametrize("mutation", ["delete", "update", "replace_where"])
+def test_mutation_racing_optimize_after_find_raises(
+    spark, tmp_table, monkeypatch, mutation
+):
+    """A predicate mutation reads its touched files from the snapshot it
+    pinned and commits against it: an OPTIMIZE that compacts those files
+    between FIND and REWRITE surfaces as a conflict, and the table stays
+    at the OPTIMIZE's version."""
+    from delta_lake_spark import DeltaTable, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+
+    for start in (0, 10, 20):  # three files, one per commit
+        write_delta(spark.range(start, start + 10), tmp_table)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    find = DeltaTable._touched_files
+    optimized = []
+
+    def find_then_optimize(self, *args, **kwargs):
+        found = find(self, *args, **kwargs)
+        optimized.append(DeltaTable.forPath(spark, tmp_table).optimize())
+        return found
+
+    monkeypatch.setattr(DeltaTable, "_touched_files", find_then_optimize)
+    run = {
+        "delete": lambda: dt.delete("id < 5"),
+        "update": lambda: dt.update("id < 5", {"id": "id + 100"}),
+        "replace_where": lambda: dt.replace_where(spark.range(3), "id < 5"),
+    }[mutation]
+    with pytest.raises(ConcurrentModificationError):
+        run()
+    assert optimized == [3]
+    assert dt.version() == 3
+
+
+def test_restore_racing_append_raises(spark, tmp_table, monkeypatch):
+    """RESTORE commits its file diff against the snapshot it read: an
+    append that lands in between must conflict, never survive a
+    "restored" table whose content differs from the target version."""
+    import delta_lake_spark.table as T
+    from delta_lake_spark import DeltaTable, read_delta, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+
+    write_delta(spark.range(3), tmp_table)  # v0
+    write_delta(spark.range(3, 6), tmp_table)  # v1
+    check = T.check_append_only
+
+    def append_then_check(snap, operation):
+        write_delta(spark.range(100, 103), tmp_table)  # v2, after the read
+        check(snap, operation)
+
+    monkeypatch.setattr(T, "check_append_only", append_then_check)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    with pytest.raises(ConcurrentModificationError):
+        dt.restore(0)
+    assert dt.version() == 2  # nothing committed after the append
+    assert read_delta(spark, tmp_table).count() == 9
+
+
 def test_commit_store_seam_is_pluggable(spark, tmp_path):
     """The log's only storage primitive is put_if_absent: a store that
     vetoes a version makes commit raise ConcurrentModificationError; a
@@ -312,7 +400,7 @@ def test_commit_store_seam_is_pluggable(spark, tmp_path):
     import pytest
 
     with pytest.raises(ConcurrentModificationError):
-        vet.commit_next([CommitInfo(operation="WRITE").to_action()], retries=0)
+        vet.commit_next([CommitInfo(operation="WRITE").to_action()])
     # the real log is untouched by the vetoed attempt
     assert DeltaLog(path).latest_version() == 1
 

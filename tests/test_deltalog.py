@@ -66,8 +66,8 @@ def test_concurrent_commit_conflict(tmp_path):
     log.commit(1, actions)
     with pytest.raises(ConcurrentModificationError):
         log2.commit(1, actions)
-    # commit_next with retries re-resolves the version
-    assert log2.commit_next(actions, retries=3) == 2
+    # commit_next re-resolves the version from the log
+    assert log2.commit_next(actions) == 2
 
 
 def test_missing_version_raises(tmp_path):

@@ -61,11 +61,7 @@ def test_dv_delete_merges_existing_dv(spark, table, tmp_table):
 def test_dv_table_config_enables_by_default(spark, tmp_table):
     write_delta(_readings(spark), tmp_table)
     t = DeltaTable.forPath(spark, tmp_table)
-    snap = t._log.snapshot()
-    meta = t._metadata_with_configuration(
-        snap, {**snap.metadata.configuration, "deletionVectors": "true"}
-    )
-    t._log.commit_next([meta.to_action()])
+    t.set_properties({"deletionVectors": "true"})
     before_files = set(t._log.snapshot().files)
     t.delete("device_id < 10")  # no use_dv arg: config decides
     after = t._log.snapshot()

@@ -57,6 +57,7 @@ def test_unknown_reader_feature_refuses_read_and_write(spark, table):
 
 
 def test_unknown_writer_feature_blocks_writes_not_reads(spark, table):
+    table.add_constraint("positive", "id > 0")  # one for DROP CONSTRAINT
     _append_protocol(
         table.path,
         minReaderVersion=1,
@@ -67,8 +68,21 @@ def test_unknown_writer_feature_blocks_writes_not_reads(spark, table):
         writerFeatures=["icebergCompatV2"],
     )
     assert read_delta(spark, table.path).count() == 2  # reads fine
-    with pytest.raises(UnsupportedProtocolError):
-        table.update("id = 1", {"v": "0.0"})
+    version = table.version()
+    writes = [
+        lambda: table.update("id = 1", {"v": "0.0"}),
+        lambda: table.add_constraint("small", "id < 100"),
+        lambda: table.drop_constraint("positive"),
+        lambda: table.set_properties({"owner": "etl"}),
+        lambda: table.unset_properties(["owner"]),
+        lambda: table.drop_feature("icebergCompatV2"),
+        lambda: table.restore(0),
+    ]
+    for write in writes:
+        with pytest.raises(UnsupportedProtocolError):
+            write()
+    assert table.version() == version  # nothing committed
+    assert read_delta(spark, table.path).count() == 2
 
 
 def test_rename_upgrades_protocol_with_column_mapping(spark, table):

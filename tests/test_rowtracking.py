@@ -63,8 +63,15 @@ def test_append_assigns_unique_ids_and_advances_hwm(spark, rt_table):
 def test_enable_on_existing_table_backfills(spark, tmp_path):
     path = os.path.join(str(tmp_path), "plain")
     write_delta(spark.range(0, 40).select("id"), path)
-    DeltaTable(spark, path).set_properties({"delta.enableRowTracking": "true"})
+    # in-commit timestamps turned on in the same commit: one protocol
+    # action must carry both features
+    DeltaTable(spark, path).set_properties(
+        {"delta.enableRowTracking": "true", "delta.enableInCommitTimestamps": "true"}
+    )
     snap = DeltaLog(path).snapshot()
+    assert {"rowTracking", "domainMetadata", "inCommitTimestamp"} <= set(
+        snap.protocol.writerFeatures
+    )
     assert all(a.baseRowId is not None for a in snap.files.values())
     assert all(not a.dataChange for a in snap.files.values())  # metadata-only
     ids = _ids(spark, path)
