@@ -17,8 +17,10 @@ Design notes for scale:
     one checkpoint + a bounded tail instead of the whole history;
   - commit atomicity uses ``os.link`` create-if-absent, the local-FS
     analogue of an object store's put-if-absent — single serialization
-    point, optimistic concurrency (conflict -> ConcurrentModificationError,
-    caller may re-resolve and retry);
+    point, optimistic concurrency: every writer commits through
+    ``DeltaLog.commit_from``, which rebases a lost race only when the
+    winner cannot invalidate the transaction and otherwise raises
+    ConcurrentModificationError for the caller to re-run;
   - data files are recorded by table-relative path so the table directory
     is relocatable.
 
@@ -1059,12 +1061,140 @@ class DeltaLog:
                 return ci.get("inCommitTimestamp", ci.get("timestamp"))
         return None
 
-    def commit_next(self, actions: list[dict[str, Any]]) -> int:
-        """Commit at latest_version()+1 (or 0 for a new table). A lost
-        race raises ConcurrentModificationError: re-committing the same
-        actions at a later version would skip the conflict check."""
-        try:
-            version = self.latest_version() + 1
-        except TableNotFoundError:
-            version = 0
-        return self.commit(version, actions)
+    def commit_from(
+        self,
+        read_snap: Snapshot | None,
+        actions: list[dict[str, Any]],
+        removed_paths: Iterable[str] = (),
+        content_neutral: bool = True,
+        read_paths: list[str] | None = None,
+        rt_adds: list[AddFile] | None = None,
+    ) -> int:
+        """Commit a transaction that read ``read_snap``, with conflict
+        RESOLUTION, not just detection (Delta's disjoint-file rule). The
+        first attempt targets the version right after ``read_snap``, so
+        every commit that landed since the transaction read its snapshot
+        is checked. ``read_snap=None`` creates the table: the commit
+        lands at version 0 or raises, and is never rebased. On a lost
+        commit race, rebase and retry iff the winners provably cannot
+        invalidate this transaction:
+
+          - table metadata (schema/partitioning/constraints) unchanged;
+          - every file this transaction removes/re-adds is
+            byte-identical in the new snapshot (path, size, deletion
+            vector) — nobody rewrote what we rewrote;
+          - for predicate mutations and overwrites
+            (content_neutral=False): the winner added no dataChange
+            files — a concurrent append/update could contain rows our
+            predicate should have affected, which must serialize as a
+            conflict — AND removed no file we read, nor re-added one
+            with a new deletion vector (Delta's concurrent-delete-read
+            rule): a remove-only winner (DELETE dropping whole files,
+            RESTORE) invalidates FIND / anti-join decisions made
+            against those rows, e.g. a MERGE that skipped inserting a
+            source row because it matched a now-deleted target row.
+            Layout-only winners (OPTIMIZE, PURGE, metadata commits)
+            are always safe to rebase over. Content-neutral commits
+            (appends, OPTIMIZE, PURGE) rebase over appends too —
+            they ignore files they didn't read.
+
+        Domain metadata: a winner that wrote a domain this commit also
+        writes conflicts (last-writer-wins would silently drop the
+        winner's state) — EXCEPT the row-tracking high-water mark,
+        which is pure allocator state: when ``rt_adds`` (this commit's
+        staged files) is passed, the rebase reassigns their baseRowId
+        ranges against the winner's advanced mark instead of raising.
+        """
+        from . import rowtracking  # rowtracking imports this module
+
+        if read_snap is None:
+            return self.commit(0, actions)
+        read_snap.protocol.check_write_support(self.table_path)
+        our_domains = {
+            x["domainMetadata"]["domain"] for x in actions if "domainMetadata" in x
+        }
+        version = read_snap.version + 1
+        for attempt in range(4):
+            try:
+                return self.commit(version, actions)
+            except ConcurrentModificationError:
+                if attempt == 3:
+                    raise
+                new_snap = self.snapshot()
+                if (
+                    new_snap.metadata.to_action()
+                    != read_snap.metadata.to_action()
+                ):
+                    raise
+                for p in removed_paths:
+                    old = read_snap.files.get(p)
+                    new = new_snap.files.get(p)
+                    if old is None or new is None or old.to_action() != new.to_action():
+                        raise
+                if our_domains:
+                    for v in range(read_snap.version + 1, new_snap.version + 1):
+                        for action in self._read_actions(v):
+                            dm = action.get("domainMetadata")
+                            if not dm or dm["domain"] not in our_domains:
+                                continue
+                            if (
+                                dm["domain"] != rowtracking.ROW_TRACKING_DOMAIN
+                                or rt_adds is None
+                            ):
+                                raise
+                if not content_neutral:
+                    # concurrent-delete-read: a winner whose commit
+                    # REMOVED (dataChange=True) a file this txn read, or
+                    # re-added one with a new deletion vector,
+                    # invalidates FIND / anti-join decisions made against
+                    # those rows (e.g. a MERGE that skipped inserting a
+                    # source row matched to a now-deleted target row).
+                    # dataChange=False removals (OPTIMIZE/PURGE moves)
+                    # keep every row live in re-added files, so reads
+                    # stay valid. read_paths = the stats/partition-pruned
+                    # scan set when the caller tracked it; default is
+                    # conservative (everything in the read snapshot).
+                    read_set = (
+                        set(read_paths)
+                        if read_paths is not None
+                        else set(read_snap.files)
+                    )
+                    for p, a in new_snap.files.items():
+                        if a.dataChange and (
+                            p not in read_snap.files
+                            or (p in read_set and read_snap.files[p] != a)
+                        ):
+                            raise
+                    for v in range(
+                        read_snap.version + 1, new_snap.version + 1
+                    ):
+                        for action in self._read_actions(v):
+                            rm = action.get("remove")
+                            if (
+                                rm
+                                and rm.get("dataChange", True)
+                                and rm["path"] in read_set
+                            ):
+                                raise
+                if rt_adds is not None and rowtracking.enabled(new_snap):
+                    # the winner may have consumed our id range — rebase
+                    # reassigns fresh baseRowIds above its high-water mark
+                    rt_acts, _ = rowtracking.assign_fresh_ids(
+                        rt_adds,
+                        rowtracking.high_water_mark(new_snap),
+                        new_snap.version + 1,
+                    )
+                    add_paths = {a.path for a in rt_adds}
+                    actions = [
+                        x
+                        for x in actions
+                        if not (
+                            ("add" in x and x["add"]["path"] in add_paths)
+                            or x.get("domainMetadata", {}).get("domain")
+                            == rowtracking.ROW_TRACKING_DOMAIN
+                        )
+                    ]
+                    actions.extend(rt_acts)
+                    actions.extend(a.to_action() for a in rt_adds)
+                version = new_snap.version + 1
+        raise AssertionError("unreachable")

@@ -2,7 +2,7 @@
 
 PageRank (Page, Brin, Motwani & Winograd 1999) is the canonical member.
 Strategy mirrors the connected-components operator (dedup.py): a graph
-whose EDGE LIST fits comfortably on the driver (<= 1M edges) runs the
+whose EDGE LIST fits comfortably on the driver (<= 2M edges) runs the
 classic in-memory power iteration — five distributed join/agg rounds on
 a 2k-node graph would pay pure stage-scheduling latency; above the
 bound each iteration is one join + one aggregation, the loop's growing
@@ -58,8 +58,9 @@ def pagerank(
     standard stochastic-matrix completion, so sum(rank) stays 1.
 
     ``strategy``: 'driver' (in-memory power iteration), 'distributed'
-    (join/agg rounds), or 'auto' (driver iff |edges| <= 1M — the same
-    bounded-collect contract as dedup clustering's union-find).
+    (join/agg rounds), or 'auto' (driver iff |edges| <=
+    _DRIVER_EDGE_BOUND, 2M — the same bounded-collect contract as dedup
+    clustering's union-find).
 
     Distributed scale shape: the edge relation joins its static
     out-degree ONCE and is persisted; each iteration is one

@@ -19,13 +19,15 @@ latest one. Two helpers build every commit from it: _commit_rewrite
 (MERGE, DELETE, UPDATE, replaceWhere, OPTIMIZE, PURGE) and
 _commit_schema (schema, constraint, property and feature changes). Both
 commit at the version after the pinned one, never blindly at latest+1.
-Optimistic concurrency with conflict RESOLUTION (_commit_mutation):
-a lost commit race rebases and retries only when the winner provably
-cannot invalidate this mutation (metadata unchanged, our touched files
-byte-identical, and — for predicate mutations — no concurrent
-dataChange adds, since an append may hold rows the predicate should
-have seen); anything else surfaces as ConcurrentModificationError and
-the caller re-runs against the new snapshot.
+Optimistic concurrency with conflict RESOLUTION has one implementation,
+``DeltaLog.commit_from``, which also commits RESTORE, CLONE and every
+``write_delta``: a lost commit race rebases and retries only when the
+winner provably cannot invalidate this mutation (metadata unchanged, our
+touched files byte-identical, and — for predicate mutations — no
+concurrent dataChange adds, since an append may hold rows the predicate
+should have seen); anything else surfaces as
+ConcurrentModificationError and the caller re-runs against the new
+snapshot. _commit_schema alone commits directly and never rebases.
 Untouched files are never read or rewritten — at 100 TB a MERGE that
 touches 0.1% of files costs 0.1% of a table rewrite plus one scan of
 the join's pruned candidate set.
@@ -43,7 +45,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .errors import (
-    ConcurrentModificationError,
     MergeAmbiguityError,
     RetentionSafetyError,
     TableNotFoundError,
@@ -675,137 +676,6 @@ class DeltaTable:
 
     # ---------- mutations ----------
 
-    def _commit_mutation(
-        self,
-        actions: list[dict[str, Any]],
-        removed_paths: list[str],
-        read_snap,
-        content_neutral: bool,
-        read_paths: list[str] | None = None,
-        rt_adds: list[AddFile] | None = None,
-    ) -> int:
-        """Commit a mutation with conflict RESOLUTION, not just detection
-        (Delta's disjoint-file rule). The first attempt targets the
-        version right after ``read_snap``, so every commit that landed
-        since the mutation read its snapshot is checked. On a lost
-        commit race, rebase and retry iff the winners provably cannot
-        invalidate this mutation:
-
-          - table metadata (schema/partitioning/constraints) unchanged;
-          - every file this mutation removes/re-adds is byte-identical
-            in the new snapshot (path, size, deletion vector) — nobody
-            rewrote what we rewrote;
-          - for predicate mutations (content_neutral=False): the winner
-            added no dataChange files — a concurrent append/update could
-            contain rows our predicate should have affected, which must
-            serialize as a conflict — AND removed no file we read, nor
-            re-added one with a new deletion vector (Delta's
-            concurrent-delete-read rule): a remove-only winner
-            (DELETE dropping whole files, RESTORE) invalidates FIND /
-            anti-join decisions made against those rows, e.g. a MERGE
-            that skipped inserting a source row because it matched a
-            now-deleted target row. Layout-only winners (OPTIMIZE,
-            PURGE, metadata commits) are always safe to rebase over.
-            Content-neutral mutations (our own OPTIMIZE/PURGE) rebase
-            over appends too — compaction ignores files it didn't read.
-
-        Domain metadata: a winner that wrote a domain this commit also
-        writes conflicts (last-writer-wins would silently drop the
-        winner's state) — EXCEPT the row-tracking high-water mark,
-        which is pure allocator state: when ``rt_adds`` (this commit's
-        staged files) is passed, the rebase reassigns their baseRowId
-        ranges against the winner's advanced mark instead of raising.
-        """
-        read_snap.protocol.check_write_support(self.path)
-        our_domains = {
-            x["domainMetadata"]["domain"] for x in actions if "domainMetadata" in x
-        }
-        version = read_snap.version + 1
-        for attempt in range(4):
-            try:
-                return self._log.commit(version, actions)
-            except ConcurrentModificationError:
-                if attempt == 3:
-                    raise
-                new_snap = self._log.snapshot()
-                if (
-                    new_snap.metadata.to_action()
-                    != read_snap.metadata.to_action()
-                ):
-                    raise
-                for p in removed_paths:
-                    old = read_snap.files.get(p)
-                    new = new_snap.files.get(p)
-                    if old is None or new is None or old.to_action() != new.to_action():
-                        raise
-                if our_domains:
-                    for v in range(read_snap.version + 1, new_snap.version + 1):
-                        for action in self._log._read_actions(v):
-                            dm = action.get("domainMetadata")
-                            if not dm or dm["domain"] not in our_domains:
-                                continue
-                            if (
-                                dm["domain"] != rowtracking.ROW_TRACKING_DOMAIN
-                                or rt_adds is None
-                            ):
-                                raise
-                if not content_neutral:
-                    # concurrent-delete-read: a winner whose commit
-                    # REMOVED (dataChange=True) a file this txn read, or
-                    # re-added one with a new deletion vector,
-                    # invalidates FIND / anti-join decisions made against
-                    # those rows (e.g. a MERGE that skipped inserting a
-                    # source row matched to a now-deleted target row).
-                    # dataChange=False removals (OPTIMIZE/PURGE moves)
-                    # keep every row live in re-added files, so reads
-                    # stay valid. read_paths = the stats/partition-pruned
-                    # scan set when the caller tracked it; default is
-                    # conservative (everything in the read snapshot).
-                    read_set = (
-                        set(read_paths)
-                        if read_paths is not None
-                        else set(read_snap.files)
-                    )
-                    for p, a in new_snap.files.items():
-                        if a.dataChange and (
-                            p not in read_snap.files
-                            or (p in read_set and read_snap.files[p] != a)
-                        ):
-                            raise
-                    for v in range(
-                        read_snap.version + 1, new_snap.version + 1
-                    ):
-                        for action in self._log._read_actions(v):
-                            rm = action.get("remove")
-                            if (
-                                rm
-                                and rm.get("dataChange", True)
-                                and rm["path"] in read_set
-                            ):
-                                raise
-                if rt_adds is not None and rowtracking.enabled(new_snap):
-                    # the winner may have consumed our id range — rebase
-                    # reassigns fresh baseRowIds above its high-water mark
-                    rt_acts, _ = rowtracking.assign_fresh_ids(
-                        rt_adds,
-                        rowtracking.high_water_mark(new_snap),
-                        new_snap.version + 1,
-                    )
-                    add_paths = {a.path for a in rt_adds}
-                    actions = [
-                        x
-                        for x in actions
-                        if not (
-                            ("add" in x and x["add"]["path"] in add_paths)
-                            or x.get("domainMetadata", {}).get("domain")
-                            == rowtracking.ROW_TRACKING_DOMAIN
-                        )
-                    ]
-                    actions.extend(rt_acts)
-                    actions.extend(a.to_action() for a in rt_adds)
-                version = new_snap.version + 1
-        raise AssertionError("unreachable")
-
     def _commit_rewrite(
         self,
         snap,
@@ -819,7 +689,7 @@ class DeltaTable:
     ) -> int:
         """COMMIT of a rewrite read from ``snap``: one log entry that swaps
         the ``removed`` files for the staged ``adds``, checked against
-        ``snap`` by _commit_mutation. Staged files get fresh disjoint
+        ``snap`` by DeltaLog.commit_from. Staged files get fresh disjoint
         baseRowId ranges when row tracking is on (the id source for rows
         whose materialized __dls_row_id is null, e.g. MERGE inserts).
         ``data_change=False`` marks a layout-only rewrite (OPTIMIZE,
@@ -848,10 +718,10 @@ class DeltaTable:
             for p in removed
         ]
         actions += [a.to_action() for a in adds]
-        return self._commit_mutation(
+        return self._log.commit_from(
+            snap,
             actions,
             removed,
-            snap,
             content_neutral=not data_change,
             read_paths=read_paths,
             rt_adds=adds if rt else None,
@@ -907,7 +777,7 @@ class DeltaTable:
         touches only files whose min/max ranges overlap the predicate).
         Returns (touched paths, read paths): the second is the pruned scan
         set, which bounds the concurrent-delete-read conflict check in
-        _commit_mutation."""
+        DeltaLog.commit_from."""
         adds = _pruned_adds(snap, cond_str)
         if not adds:
             return [], []
@@ -1064,10 +934,10 @@ class DeltaTable:
                     defaultRowCommitVersion=a.defaultRowCommitVersion,
                 ).to_action()
             )
-        return self._commit_mutation(
+        return self._log.commit_from(
+            snap,
             actions,
             touched,
-            snap,
             content_neutral=False,
             read_paths=[a.path for a in adds],
         )
@@ -1159,7 +1029,7 @@ class DeltaTable:
                     deletionVector=dv,
                 ).to_action()
             )
-        target_log.commit(0, actions)
+        target_log.commit_from(None, actions)
         return DeltaTable(self.spark, target_path)
 
     def update(self, condition: str | Column, set: dict[str, str | Column]) -> int:
@@ -1863,15 +1733,16 @@ class DeltaTable:
         uses HyperLogLog approx_count_distinct — at 100 TB an exact
         distinct per column is a full shuffle per column, while HLL is
         one map-side pass; pass True when exact cardinalities matter
-        more than cost. Returns the committed version."""
+        more than cost. The scan and the commit use one snapshot: a
+        write that lands in between makes ANALYZE raise
+        ConcurrentModificationError rather than record stats of an older
+        version. Returns the committed version."""
         import json as _json
-
-        from .reader import read_delta
 
         snap = self._log.snapshot()
         schema = schema_of(snap)
         cols = columns or [f.name for f in schema.fields]
-        df = read_delta(self.spark, self.path)
+        df = scan_adds(self.spark, self.path, list(snap.files.values()), snap)
         ndv = (
             (lambda c: F.count_distinct(F.col(c)))
             if exact_ndv
@@ -1900,8 +1771,12 @@ class DeltaTable:
                 for c in cols
             },
         }
-        return self.set_properties(
-            {"dls.tableStats": _json.dumps(stats, separators=(",", ":"))}
+        props = {"dls.tableStats": _json.dumps(stats, separators=(",", ":"))}
+        return self._commit_schema(
+            snap,
+            "SET TBLPROPERTIES",
+            {"properties": props},
+            configuration={**snap.metadata.configuration, **props},
         )
 
     def statistics(self) -> DataFrame:
@@ -2012,4 +1887,4 @@ class DeltaTable:
         # a re-added path replaces its current entry, so a winner that
         # changed it conflicts just like one that changed a removed path
         replaced = removes + [a.path for a in adds if a.path in cur.files]
-        return self._commit_mutation(actions, replaced, cur, content_neutral=False)
+        return self._log.commit_from(cur, actions, replaced, content_neutral=False)

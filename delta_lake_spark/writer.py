@@ -20,16 +20,19 @@ against Spark 4.1: explicit-file reads do not infer partitions).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import uuid
-from typing import Any
+from dataclasses import replace
+from typing import Any, Callable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import rowtracking
 from .errors import (
     AppendOnlyTableError,
     ConcurrentModificationError,
@@ -43,6 +46,7 @@ from .log import (
     Metadata,
     Protocol,
     RemoveFile,
+    _ict_enabled,
     _utc_millis,
 )
 from .stats import file_stats
@@ -201,14 +205,12 @@ def assign_identity(
     for its identity columns. Returns (df, specs) — the caller records
     the new high water (read from staged file stats) in the same commit.
     Supplying the column explicitly is rejected (ALWAYS semantics)."""
-    import json as _json
-
     specs: dict[str, dict] = {}
     for key, raw in configuration.items():
         if not key.startswith(IDENTITY_PREFIX):
             continue
         col = key[len(IDENTITY_PREFIX):]
-        spec = _json.loads(raw)
+        spec = json.loads(raw)
         specs[col] = spec
         if col in df.columns:
             raise ConstraintViolationError(
@@ -262,7 +264,7 @@ def check_append_only(snapshot, operation: str) -> None:
 
 
 def schema_of(snapshot) -> StructType:
-    return StructType.fromJson(__import__("json").loads(snapshot.metadata.schemaString))
+    return StructType.fromJson(json.loads(snapshot.metadata.schemaString))
 
 
 def _nullable(schema: StructType) -> StructType:
@@ -353,17 +355,62 @@ def _evolve_schema(
 
 
 def _parse_partition_values(
-    rel_path: str, partition_by: list[str]
+    rel_path: str, partition_by: list[str], prefix: str = PV_DIR_PREFIX
 ) -> dict[str, str | None]:
-    """Recover partition values from ``__pv_col=value`` path segments."""
+    """Recover partition values from ``<prefix>col=value`` path segments
+    (``__pv_`` for staged files, none for converted Hive layouts)."""
     values: dict[str, str | None] = {}
     for seg in rel_path.split(os.sep):
-        if "=" in seg and seg.startswith(PV_DIR_PREFIX):
+        if "=" in seg and seg.startswith(prefix):
             k, _, v = seg.partition("=")
-            col = k[len(PV_DIR_PREFIX):]
+            col = k[len(prefix):]
             if col in partition_by:
                 values[col] = None if v == HIVE_NULL else unquote(v)
     return values
+
+
+def _sweep_adds(
+    table_path: str,
+    data_dir: str,
+    partition_values: Callable[[str], dict[str, str | None]],
+    data_change: bool = True,
+    collect_stats: bool = True,
+) -> list[AddFile]:
+    """One AddFile per parquet file under ``data_dir``, with its
+    table-relative path, ``partition_values(rel_path)`` and footer stats.
+    The footer sweep runs in a thread pool: pyarrow releases the GIL on
+    IO, and a commit of thousands of files must not pay per-file latency
+    serially on the driver."""
+    files: list[str] = []
+    for root, _dirs, names in os.walk(data_dir):
+        files.extend(
+            os.path.join(root, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith(".")
+        )
+    if collect_stats and files:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
+            all_stats = list(pool.map(file_stats, files))
+    else:
+        all_stats = [(None, None)] * len(files)
+
+    adds: list[AddFile] = []
+    for abs_file, (num_records, stats) in zip(files, all_stats):
+        rel_file = os.path.relpath(abs_file, table_path)
+        adds.append(
+            AddFile(
+                path=rel_file,
+                partitionValues=partition_values(rel_file),
+                size=os.path.getsize(abs_file),
+                numRecords=num_records,
+                stats=stats,
+                modificationTime=_utc_millis(),
+                dataChange=data_change,
+            )
+        )
+    return adds
 
 
 def stage_files(
@@ -408,38 +455,13 @@ def stage_files(
     else:
         df.write.parquet(abs_dir)
 
-    files: list[str] = []
-    for root, _dirs, names in os.walk(abs_dir):
-        files.extend(
-            os.path.join(root, n) for n in names if n.endswith(".parquet")
-        )
-
-    # footer sweep in a thread pool: pyarrow releases the GIL on IO, and a
-    # commit staging thousands of files must not pay per-file latency
-    # serially on the driver
-    if collect_stats and files:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(files))) as pool:
-            all_stats = list(pool.map(file_stats, files))
-    else:
-        all_stats = [(None, None)] * len(files)
-
-    adds: list[AddFile] = []
-    for abs_file, (num_records, stats) in zip(files, all_stats):
-        rel_file = os.path.relpath(abs_file, table_path)
-        adds.append(
-            AddFile(
-                path=rel_file,
-                partitionValues=_parse_partition_values(rel_file, partition_by),
-                size=os.path.getsize(abs_file),
-                numRecords=num_records,
-                stats=stats,
-                modificationTime=_utc_millis(),
-                dataChange=data_change,
-            )
-        )
-    return adds
+    return _sweep_adds(
+        table_path,
+        abs_dir,
+        lambda rel: _parse_partition_values(rel, partition_by),
+        data_change,
+        collect_stats,
+    )
 
 
 def write_delta(
@@ -463,6 +485,17 @@ def write_delta(
     live file (logical delete — the bytes stay for time travel until
     VACUUM).
 
+    Concurrency: the write is validated against one snapshot and
+    committed against that same snapshot (DeltaLog.commit_from), so its
+    history records the version it read. A lost commit race:
+      - append: rebases onto the winner when table metadata is
+        unchanged (the staged files stay valid), else raises;
+      - overwrite: raises when the winner added, removed or changed any
+        data file, or changed metadata — the overwrite replaced only the
+        files it read, so committing over a concurrent append would
+        leave that append's rows live beside the new ones;
+      - table creation: raises (the caller decides who wins).
+
     ``generated`` (table creation only): {column: sql expr} generated
     columns, recorded in table configuration; every write computes them
     when absent and validates them when supplied (apply_generated).
@@ -471,35 +504,33 @@ def write_delta(
     e.g. ``{"delta.enableRowTracking": "true"}`` — row tracking assigns
     every staged file a disjoint ``baseRowId`` range and advances the
     ``delta.rowTracking`` high-water mark in the same commit
-    (rowtracking.py); ids are recomputed per commit attempt, so append
-    races retry safely.
+    (rowtracking.py); a rebase reassigns the ranges above the winner's
+    mark, so append races retry safely.
 
     ``identity`` (table creation only): {column: {"start", "step"}}
     GENERATED ALWAYS AS IDENTITY columns; every append assigns fresh
     unique values above the recorded high-water mark (assign_identity)
-    and advances the mark in the same commit. Identity appends never
-    auto-retry a lost commit race (the winner may hold the same id
-    range), matching the mutation-path concurrency rule.
+    and advances the mark in the same commit's metadata. Two identity
+    appends never both commit: the winner's new mark changed the table
+    metadata, so the loser raises and its caller re-runs above the new
+    mark.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     log = DeltaLog(path)
-    table_exists = log.exists()
+    snap = log.snapshot() if log.exists() else None
 
     metadata: Metadata | None = None
-    removes: list[dict[str, Any]] = []
-    schema_changed = False
-
-    id_specs: dict[str, dict] = {}
-    if table_exists:
+    removed: list[str] = []
+    if snap is not None:
         if generated or identity or properties:
             raise ValueError(
                 "generated/identity/properties can only be set at table creation"
             )
-        snap = log.snapshot()
         snap.protocol.check_write_support(path)
         if mode == "overwrite":
             check_append_only(snap, "overwrite")
+            removed = list(snap.files)
         table_schema = schema_of(snap)
         df, id_specs = assign_identity(df, snap.metadata.configuration)
         df = apply_generated(df, snap.metadata.configuration)
@@ -509,10 +540,6 @@ def write_delta(
         final_schema, schema_changed = _evolve_schema(
             table_schema, _nullable(df.schema), merge_schema
         )
-        if schema_changed:
-            final_schema = with_physical_names(
-                final_schema, snap.metadata.configuration
-            )
         if partition_by is None:
             partition_by = list(snap.metadata.partitionColumns)
         elif list(partition_by) != list(snap.metadata.partitionColumns):
@@ -521,28 +548,19 @@ def write_delta(
                 f"{snap.metadata.partitionColumns}"
             )
         if schema_changed:
-            metadata = Metadata(
-                schemaString=final_schema.json(),
-                partitionColumns=partition_by,
-                configuration=snap.metadata.configuration,
-                id=snap.metadata.id,
-                createdTime=snap.metadata.createdTime,
+            final_schema = with_physical_names(
+                final_schema, snap.metadata.configuration
             )
-        if mode == "overwrite":
-            now = _utc_millis()
-            removes = [
-                RemoveFile(p, deletionTimestamp=now).to_action() for p in snap.files
-            ]
+            metadata = replace(snap.metadata, schemaString=final_schema.json())
     else:
-        import json as _json
-
         partition_by = list(partition_by or [])
+        final_schema = None
         configuration = {
             **{k: str(v) for k, v in (properties or {}).items()},
             **{GENERATED_PREFIX + c: e for c, e in (generated or {}).items()},
         }
         for c, spec in (identity or {}).items():
-            configuration[IDENTITY_PREFIX + c] = _json.dumps(
+            configuration[IDENTITY_PREFIX + c] = json.dumps(
                 {"start": int(spec.get("start", 1)), "step": int(spec.get("step", 1))}
             )
         df, id_specs = assign_identity(df, configuration)
@@ -553,25 +571,16 @@ def write_delta(
             configuration=configuration,
         )
 
-    adds = stage_files(
-        df, path, partition_by, schema=final_schema if table_exists else None
-    )
-    num_rows = sum(a.numRecords or 0 for a in adds)
+    adds = stage_files(df, path, partition_by, schema=final_schema)
 
     if id_specs:
         # advance each identity high-water mark to the max actually
         # written (read back from the staged files' footer stats) in the
         # SAME commit, so the next append starts above it
-        import json as _json
-
-        base_meta = metadata
-        if base_meta is None:
-            base_meta = snap.metadata
+        base_meta = metadata or snap.metadata
         conf = dict(base_meta.configuration)
-        import json as _json2
-
         id_map = column_mapping(
-            StructType.fromJson(_json2.loads(base_meta.schemaString))
+            StructType.fromJson(json.loads(base_meta.schemaString))
         )
         for col, spec in id_specs.items():
             step = int(spec.get("step", 1))
@@ -582,117 +591,74 @@ def write_delta(
                 for a in adds
                 if (a.stats or {}).get("maxValues", {}).get(pcol) is not None
             ]
-            conf[IDENTITY_PREFIX + col] = _json.dumps(
+            conf[IDENTITY_PREFIX + col] = json.dumps(
                 {
                     "start": int(spec.get("start", 1)),
                     "step": step,
                     "highWater": max(maxes + [prev_hw]),
                 }
             )
-        metadata = Metadata(
-            schemaString=base_meta.schemaString,
-            partitionColumns=list(base_meta.partitionColumns),
-            configuration=conf,
-            id=base_meta.id,
-            name=base_meta.name,
-            createdTime=base_meta.createdTime,
-        )
+        metadata = replace(base_meta, configuration=conf)
 
-    def build_actions(removes_now: list[dict[str, Any]]) -> list[dict[str, Any]]:
-        from . import rowtracking
-
-        cur_snap = log.snapshot() if log.exists() else None
-        commit_info = CommitInfo(
+    conf = (metadata or snap.metadata).configuration
+    actions: list[dict[str, Any]] = [
+        CommitInfo(
             operation=operation or ("WRITE" if mode == "overwrite" else "APPEND"),
             operationParameters=(operation_parameters or {"mode": mode, "partitionBy": partition_by}),
-            readVersion=cur_snap.version if cur_snap else None,
+            readVersion=snap.version if snap else None,
             operationMetrics={
                 "numFiles": len(adds),
-                "numOutputRows": num_rows,
-                "numRemovedFiles": len(removes_now),
+                "numOutputRows": sum(a.numRecords or 0 for a in adds),
+                "numRemovedFiles": len(removed),
             },
+        ).to_action()
+    ]
+    if snap is None:
+        proto = Protocol()
+        if rowtracking.enabled(conf):
+            proto = proto.with_features(writer=rowtracking.ROW_TRACKING_FEATURES)
+        if _ict_enabled(conf):
+            proto = proto.with_features(writer=["inCommitTimestamp"])
+        actions.append(proto.to_action())
+    if metadata is not None:
+        actions.append(metadata.to_action())
+    rt = rowtracking.enabled(conf)
+    if rt:
+        rt_actions, _ = rowtracking.assign_fresh_ids(
+            adds,
+            rowtracking.high_water_mark(snap),
+            (snap.version + 1) if snap else 0,
         )
-        conf_now = (
-            metadata.configuration
-            if metadata is not None
-            else snap.metadata.configuration
-        )
-        actions: list[dict[str, Any]] = [commit_info.to_action()]
-        if not table_exists:
-            from .log import _ict_enabled
+        actions.extend(rt_actions)
+    now = _utc_millis()
+    actions.extend(RemoveFile(p, deletionTimestamp=now).to_action() for p in removed)
+    actions.extend(a.to_action() for a in adds)
+    version = log.commit_from(
+        snap,
+        actions,
+        removed,
+        content_neutral=mode == "append",
+        rt_adds=adds if rt else None,
+    )
 
-            proto = Protocol()
-            if rowtracking.enabled(conf_now):
-                proto = proto.with_features(
-                    writer=rowtracking.ROW_TRACKING_FEATURES
-                )
-            if _ict_enabled(conf_now):
-                proto = proto.with_features(writer=["inCommitTimestamp"])
-            actions.append(proto.to_action())
-        if metadata is not None:
-            actions.append(metadata.to_action())
-        if rowtracking.enabled(conf_now):
-            # per-attempt: a lost race means the winner consumed the range
-            rt_actions, _ = rowtracking.assign_fresh_ids(
-                adds,
-                rowtracking.high_water_mark(cur_snap),
-                (cur_snap.version + 1) if cur_snap else 0,
-            )
-            actions.extend(rt_actions)
-        actions.extend(removes_now)
-        actions.extend(a.to_action() for a in adds)
-        return actions
-
-    def maybe_auto_compact(committed_version: int) -> None:
-        """Post-commit auto-compaction (``autoCompact = true`` table
-        property): when the number of live below-target files reaches
-        ``autoCompact.minNumFiles`` (default 50), fold them with a
-        dataChange=False OPTIMIZE — write paths stay fast (compaction is
-        a separate commit, never blocking the append) and readers stop
-        accumulating small-file overhead without a scheduled job."""
-        conf = (metadata.configuration if metadata is not None else snap.metadata.configuration)
-        if str(conf.get("autoCompact", "")).lower() != "true":
-            return
+    # post-commit auto-compaction (``autoCompact = true`` table property):
+    # when the number of live below-target files reaches
+    # ``autoCompact.minNumFiles`` (default 50), fold them with a
+    # dataChange=False OPTIMIZE — write paths stay fast (compaction is a
+    # separate commit, never blocking the append) and readers stop
+    # accumulating small-file overhead without a scheduled job
+    if str(conf.get("autoCompact", "")).lower() == "true":
         min_files = int(conf.get("autoCompact.minNumFiles", "50"))
         target = int(conf.get("autoCompact.targetFileBytes", str(64 * 1024 * 1024)))
-        post = log.snapshot(committed_version)
-        small = [a for a in post.files.values() if a.size < target]
-        if len(small) < min_files:
-            return
-        from .table import DeltaTable
+        small = [a for a in log.snapshot(version).files.values() if a.size < target]
+        if len(small) >= min_files:
+            from .table import DeltaTable
 
-        try:
-            DeltaTable(df.sparkSession, path).optimize(target_file_bytes=target)
-        except ConcurrentModificationError:
-            pass  # another writer compacted or mutated first; not our data
-
-    # optimistic-concurrency resolution on a lost commit race:
-    #   - append: retry only if table metadata (schema/partitioning/
-    #     constraints) is unchanged — the staged files stay valid;
-    #   - overwrite: recompute the remove set from the NEW snapshot
-    #     ("replace whatever is current"), same metadata condition.
-    prior_meta = snap.metadata.to_action() if table_exists else None
-    for attempt in range(4):
-        try:
-            version = log.commit_next(build_actions(removes))
-            maybe_auto_compact(version)
-            return version
-        except ConcurrentModificationError:
-            if id_specs:
-                raise  # winner may hold the same id range: caller re-runs
-            if attempt == 3:
-                raise
-            new_snap = log.snapshot()
-            if prior_meta is not None and new_snap.metadata.to_action() != prior_meta:
-                raise  # concurrent schema/constraint change: caller re-runs
-            if prior_meta is None:
-                raise  # raced on table creation: caller decides who wins
-            if mode == "overwrite":
-                now = _utc_millis()
-                removes = [
-                    RemoveFile(p, deletionTimestamp=now).to_action()
-                    for p in new_snap.files
-                ]
+            try:
+                DeltaTable(df.sparkSession, path).optimize(target_file_bytes=target)
+            except ConcurrentModificationError:
+                pass  # another writer compacted or mutated first; not our data
+    return version
 
 
 def copy_into(
@@ -771,41 +737,14 @@ def convert_to_delta(
     )
     part_cols = [f.name for f in part_struct.fields]
 
-    conv_files: list[str] = []
-    for root, _dirs, names in os.walk(parquet_path):
-        conv_files.extend(
-            os.path.join(root, n)
-            for n in names
-            if n.endswith(".parquet") and not n.startswith(".")
-        )
-    if not conv_files:
+    adds = _sweep_adds(
+        parquet_path,
+        parquet_path,
+        lambda rel: _parse_partition_values(rel, part_cols, prefix=""),
+    )
+    if not adds:
         raise SchemaMismatchError(f"no parquet files under {parquet_path}")
-    sample_file = conv_files[0]
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(16, len(conv_files))) as pool:
-        conv_stats = list(pool.map(file_stats, conv_files))
-
-    adds: list[AddFile] = []
-    for abs_file, (num_records, stats) in zip(conv_files, conv_stats):
-        rel_file = os.path.relpath(abs_file, parquet_path)
-        pvals: dict[str, str | None] = {}
-        for seg in rel_file.split(os.sep):
-            if "=" in seg:
-                k, _, v = seg.partition("=")
-                if k in part_cols:
-                    pvals[k] = None if v == HIVE_NULL else unquote(v)
-        adds.append(
-            AddFile(
-                path=rel_file,
-                partitionValues=pvals,
-                size=os.path.getsize(abs_file),
-                numRecords=num_records,
-                stats=stats,
-                modificationTime=_utc_millis(),
-            )
-        )
+    sample_file = os.path.join(parquet_path, adds[0].path)
 
     data_schema = spark.read.parquet(sample_file).schema
     full_schema = _nullable(StructType(list(data_schema.fields) + list(part_struct.fields)))
@@ -822,4 +761,4 @@ def convert_to_delta(
     )
     actions = [commit_info.to_action(), Protocol().to_action(), metadata.to_action()]
     actions.extend(a.to_action() for a in adds)
-    return log.commit(0, actions)
+    return log.commit_from(None, actions)

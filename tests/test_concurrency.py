@@ -64,11 +64,12 @@ def test_mutation_losing_race_raises_not_silent(spark, tmp_table):
     # drop the phantom competitor file so the table stays readable
     from delta_lake_spark.log import RemoveFile
 
-    dt2._log.commit_next(
+    dt2._log.commit(
+        dt2.version() + 1,
         [
             CommitInfo(operation="CLEANUP").to_action(),
             RemoveFile(path="data/competitor.parquet").to_action(),
-        ]
+        ],
     )
     DeltaTable.forPath(spark, tmp_table).delete("g = 3")
     assert read_delta(spark, tmp_table).count() == 80
@@ -372,6 +373,135 @@ def test_restore_racing_append_raises(spark, tmp_table, monkeypatch):
     assert read_delta(spark, tmp_table).count() == 9
 
 
+def _race_after_staging(monkeypatch, competitor):
+    """Wrap writer.stage_files so ``competitor`` commits once, right
+    after the racing write has staged its files and before it commits
+    (the competitor's own writes stage normally)."""
+    import delta_lake_spark.writer as W
+
+    stage = W.stage_files
+    state = {"raced": False}
+
+    def stage_then_race(*args, **kwargs):
+        adds = stage(*args, **kwargs)
+        if not state["raced"]:
+            state["raced"] = True
+            competitor()
+        return adds
+
+    monkeypatch.setattr(W, "stage_files", stage_then_race)
+    return state
+
+
+def test_append_racing_add_constraint_raises(spark, tmp_table, monkeypatch):
+    """An append validated against a snapshot without a constraint must
+    not commit after a concurrent ADD CONSTRAINT its rows break."""
+    from delta_lake_spark import DeltaTable, read_delta, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+
+    write_delta(spark.range(10), tmp_table)  # v0
+    dt = DeltaTable.forPath(spark, tmp_table)
+    state = _race_after_staging(
+        monkeypatch, lambda: dt.add_constraint("small", "id < 10")
+    )
+    with pytest.raises(ConcurrentModificationError):
+        write_delta(spark.range(10, 20), tmp_table)
+    assert state["raced"]
+    assert dt.version() == 1  # only the constraint committed
+    assert read_delta(spark, tmp_table).filter("id >= 10").count() == 0
+
+
+def test_overwrite_racing_append_raises(spark, tmp_table, monkeypatch):
+    """An overwrite replaces the files it read: a concurrent append must
+    conflict, never survive next to the overwrite's rows."""
+    from delta_lake_spark import read_delta, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+    from delta_lake_spark.log import DeltaLog
+
+    write_delta(spark.range(3), tmp_table)  # v0
+    _race_after_staging(
+        monkeypatch, lambda: write_delta(spark.range(10, 13), tmp_table)
+    )
+    with pytest.raises(ConcurrentModificationError):
+        write_delta(spark.range(100, 105), tmp_table, mode="overwrite")
+    assert DeltaLog(tmp_table).latest_version() == 1
+    got = sorted(r.id for r in read_delta(spark, tmp_table).collect())
+    assert got == [0, 1, 2, 10, 11, 12]  # v0 plus the append
+
+
+def test_write_read_version_is_validated_snapshot(spark, tmp_table, monkeypatch):
+    """A write that rebases over a concurrent append records, as its
+    readVersion, the version it validated against — not the version it
+    happened to land after."""
+    from delta_lake_spark import read_delta, write_delta
+    from delta_lake_spark.log import DeltaLog
+
+    write_delta(spark.range(3), tmp_table)  # v0
+    _race_after_staging(
+        monkeypatch, lambda: write_delta(spark.range(10, 13), tmp_table)
+    )
+    assert write_delta(spark.range(20, 23), tmp_table) == 2
+    history = {h["version"]: h for h in DeltaLog(tmp_table).history()}
+    assert history[1]["readVersion"] == 0  # the competitor
+    assert history[2]["readVersion"] == 0
+    assert read_delta(spark, tmp_table).count() == 9
+
+
+def test_identity_appends_race_loser_raises(spark, tmp_table, monkeypatch):
+    """Two identity appends staged against the same high-water mark hold
+    the same id range: the loser raises (the winner's new mark changed
+    the metadata), and every committed identity value stays unique."""
+    from delta_lake_spark import read_delta, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+    from delta_lake_spark.log import DeltaLog
+
+    write_delta(
+        spark.range(5).selectExpr("id AS v"),
+        tmp_table,
+        identity={"row_id": {"start": 1, "step": 1}},
+    )  # v0
+    _race_after_staging(
+        monkeypatch,
+        lambda: write_delta(spark.range(5, 10).selectExpr("id AS v"), tmp_table),
+    )
+    with pytest.raises(ConcurrentModificationError):
+        write_delta(spark.range(10, 15).selectExpr("id AS v"), tmp_table)
+    assert DeltaLog(tmp_table).latest_version() == 1
+    rows = read_delta(spark, tmp_table).collect()
+    assert sorted(r.v for r in rows) == list(range(10))
+    ids = [r.row_id for r in rows]
+    assert len(set(ids)) == len(ids) == 10
+
+
+def test_analyze_racing_append_raises(spark, tmp_table, monkeypatch):
+    """ANALYZE scans one snapshot and commits against it: an append that
+    lands between the stats scan and the commit makes it raise instead
+    of recording a rowCount that leaves the append out."""
+    from delta_lake_spark import DeltaTable, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+
+    write_delta(spark.range(10), tmp_table)  # v0
+    dt = DeltaTable.forPath(spark, tmp_table)
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+    state = {"raced": False}
+
+    def collect_then_append(self):
+        rows = collect(self)
+        if not state["raced"] and "__rows" in self.columns:  # the stats scan
+            state["raced"] = True
+            write_delta(spark.range(10, 13), tmp_table)  # v1
+        return rows
+
+    monkeypatch.setattr(frame, "collect", collect_then_append)
+    with pytest.raises(ConcurrentModificationError):
+        dt.analyze()
+    monkeypatch.undo()
+    assert state["raced"]
+    assert dt.version() == 1
+    assert "dls.tableStats" not in dt._log.snapshot().metadata.configuration
+
+
 def test_commit_store_seam_is_pluggable(spark, tmp_path):
     """The log's only storage primitive is put_if_absent: a store that
     vetoes a version makes commit raise ConcurrentModificationError; a
@@ -392,15 +522,15 @@ def test_commit_store_seam_is_pluggable(spark, tmp_path):
 
     path = str(tmp_path / "cs")
     log = DeltaLog(path, commit_store=Recording())
-    log.commit_next([CommitInfo(operation="CREATE").to_action()])
-    log.commit_next([CommitInfo(operation="WRITE").to_action()])
+    log.commit(0, [CommitInfo(operation="CREATE").to_action()])
+    log.commit(1, [CommitInfo(operation="WRITE").to_action()])
     assert len(calls) == 2 and calls[0].endswith("00000000000000000000.json")
 
     vet = DeltaLog(path, commit_store=Vetoing())
     import pytest
 
     with pytest.raises(ConcurrentModificationError):
-        vet.commit_next([CommitInfo(operation="WRITE").to_action()])
+        vet.commit(2, [CommitInfo(operation="WRITE").to_action()])
     # the real log is untouched by the vetoed attempt
     assert DeltaLog(path).latest_version() == 1
 

@@ -28,7 +28,7 @@ def _commit_v0(log: DeltaLog, files=("a.parquet", "b.parquet")):
         Metadata(schemaString=SCHEMA).to_action(),
     ]
     actions += [AddFile(path=p, numRecords=10, size=100).to_action() for p in files]
-    return log.commit_next(actions)
+    return log.commit(0, actions)
 
 
 def test_commit_and_snapshot(tmp_path):
@@ -45,7 +45,8 @@ def test_commit_and_snapshot(tmp_path):
 def test_version_monotonicity_and_replay(tmp_path):
     log = DeltaLog(str(tmp_path / "t"))
     _commit_v0(log)
-    v1 = log.commit_next(
+    v1 = log.commit(
+        1,
         [
             CommitInfo(operation="DELETE").to_action(),
             RemoveFile(path="a.parquet").to_action(),
@@ -66,8 +67,8 @@ def test_concurrent_commit_conflict(tmp_path):
     log.commit(1, actions)
     with pytest.raises(ConcurrentModificationError):
         log2.commit(1, actions)
-    # commit_next re-resolves the version from the log
-    assert log2.commit_next(actions) == 2
+    # re-resolving the version from the log lands the next one
+    assert log2.commit(log2.latest_version() + 1, actions) == 2
 
 
 def test_missing_version_raises(tmp_path):
@@ -86,7 +87,7 @@ def test_not_a_table(tmp_path):
 def test_history_newest_first(tmp_path):
     log = DeltaLog(str(tmp_path / "t"))
     _commit_v0(log)
-    log.commit_next([CommitInfo(operation="DELETE").to_action()])
+    log.commit(1, [CommitInfo(operation="DELETE").to_action()])
     hist = log.history()
     assert [h["version"] for h in hist] == [1, 0]
     assert hist[0]["operation"] == "DELETE"
@@ -98,7 +99,8 @@ def test_snapshot_cache_incremental(tmp_path):
     _commit_v0(log)
     log.snapshot()
     for i in range(5):
-        log.commit_next(
+        log.commit(
+            i + 1,
             [
                 CommitInfo(operation="APPEND").to_action(),
                 AddFile(path=f"x{i}.parquet", numRecords=1, size=10).to_action(),
@@ -123,7 +125,8 @@ def test_checkpoint_written_at_interval_and_used_cold(tmp_path):
     log = DeltaLog(str(tmp_path / "t"), checkpoint_interval=5)
     _commit_v0(log)
     for i in range(1, 13):
-        log.commit_next(
+        log.commit(
+            i,
             [
                 CommitInfo(operation="WRITE").to_action(),
                 AddFile(path=f"f{i}.parquet", numRecords=1, size=10).to_action(),
@@ -151,17 +154,19 @@ def test_checkpoint_written_at_interval_and_used_cold(tmp_path):
 def test_checkpoint_respects_removes_and_time_travel(tmp_path):
     log = DeltaLog(str(tmp_path / "t"), checkpoint_interval=2)
     _commit_v0(log)
-    log.commit_next(
+    log.commit(
+        1,
         [
             CommitInfo(operation="DELETE").to_action(),
             RemoveFile(path="a.parquet").to_action(),
-        ]
+        ],
     )
-    log.commit_next(
+    log.commit(
+        2,
         [
             CommitInfo(operation="WRITE").to_action(),
             AddFile(path="c.parquet", numRecords=5, size=50).to_action(),
-        ]
+        ],
     )
     cold = DeltaLog(str(tmp_path / "t"), checkpoint_interval=2)
     assert set(cold.snapshot().files) == {"b.parquet", "c.parquet"}
@@ -469,8 +474,8 @@ def test_multipart_checkpoint_auto_split_threshold(spark, tmp_path):
                  "partitionValues": {}}}
         for i in range(30)
     ]
-    log.commit_next(
-        [CommitInfo(operation="CREATE").to_action(), meta.to_action(), *adds]
+    log.commit(
+        0, [CommitInfo(operation="CREATE").to_action(), meta.to_action(), *adds]
     )
     log.CKPT_ROWS_PER_PART = 10
     v = log.write_checkpoint()

@@ -206,11 +206,11 @@ def test_domain_metadata_replay_and_removal(tmp_path, spark):
     path = os.path.join(str(tmp_path), "dm")
     write_delta(spark.range(3).select("id"), path)
     log = DeltaLog(path)
-    log.commit_next(
-        [DomainMetadata("my.domain", json.dumps({"k": 1})).to_action()]
+    log.commit(
+        1, [DomainMetadata("my.domain", json.dumps({"k": 1})).to_action()]
     )
     assert DeltaLog(path).snapshot().domains["my.domain"] == '{"k": 1}'
-    log.commit_next([DomainMetadata("my.domain", removed=True).to_action()])
+    log.commit(2, [DomainMetadata("my.domain", removed=True).to_action()])
     assert "my.domain" not in DeltaLog(path).snapshot().domains
 
 
@@ -239,7 +239,7 @@ def test_concurrent_domain_write_conflicts(spark, rt_table):
 
     log.commit = racing_commit
     with pytest.raises(ConcurrentModificationError):
-        dt._commit_mutation(actions, [], snap, content_neutral=True)
+        log.commit_from(snap, actions, [], content_neutral=True)
     log.commit = original
 
 
