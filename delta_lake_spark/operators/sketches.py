@@ -307,7 +307,11 @@ def _safe_state_overwrite(merged: DataFrame, state_path: str) -> None:
     stage = state_path.rstrip("/") + ".__stage__"
     merged.write.mode("overwrite").parquet(stage)
     try:
-        write_delta(spark.read.parquet(stage), state_path, mode="overwrite")
+        write_delta(
+            spark.read.schema(merged.schema).parquet(stage),
+            state_path,
+            mode="overwrite",
+        )
     finally:
         parsed = urlparse(stage)
         if parsed.scheme in ("", "file"):

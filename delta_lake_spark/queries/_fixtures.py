@@ -44,6 +44,7 @@ import threading
 from pyspark.sql import functions as F
 
 from ..operators._cache import get_or_build
+from .relational import _t
 
 _FIX_ROOT = f"/tmp/dls_query_tables/fixtures_{os.getpid()}"
 # (kind, sf_dir) -> claim entry whose value is the artifact directory
@@ -113,13 +114,13 @@ def clone_index(master_path: str) -> str:
 
 def _docs(spark, sf_dir: str):
     return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
     )
 
 
 def _emb(spark, sf_dir: str):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    return _t(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
 

@@ -774,7 +774,7 @@ def q126_streaming_corpus_dedup(spark, sf_dir):
 
     from ..streaming.incremental import stream_dedup_into_corpus
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
     src = _fresh("scd_src")
@@ -831,7 +831,7 @@ def q152_streaming_indexed_corpus(spark, sf_dir):
     from ..operators.text import query_text_index
     from ..streaming.incremental import stream_corpus_with_text_index
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     src = _fresh("sti_src")
@@ -883,7 +883,7 @@ def q167_streaming_vocab_sketch(spark, sf_dir):
     from ..operators.sketches import estimate_hll_state
     from ..streaming.incremental import stream_corpus_with_vocab_sketch
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
     src = _fresh("svs_src")
@@ -1456,7 +1456,7 @@ def q209_streaming_media_keyframes(spark, sf_dir):
 
     from ..operators.multimodal import synthesize_gif_corpus
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
     src = _fresh("smk_src")
     _os.makedirs(src, exist_ok=True)
     staging = _fresh("smk_stage")
@@ -1528,7 +1528,7 @@ def q237_streaming_span_screen(spark, sf_dir):
     from ..operators.dedup import build_substring_index
     from ..streaming.incremental import stream_docs_with_span_screen
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     idx = _fresh("sss_idx")
@@ -1625,7 +1625,7 @@ def q256_streaming_decayed_rates(spark, sf_dir):
         stream_decayed_event_state,
     )
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    events = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
     src = _fresh("decay_src")
@@ -1695,7 +1695,7 @@ def q284_streaming_warc_ingestion(spark, sf_dir):
     from ..operators.multimodal import synthesize_crawl_warc_corpus
     from ..streaming.incremental import stream_warc_ingestion
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     src = _fresh("warc_src")
@@ -1808,7 +1808,7 @@ def q310_streaming_chat_ingestion(spark, sf_dir):
         " || CAST(doc_id AS STRING) || '\"}', ''),"
         " ']')"
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(convo).alias("convo")
     )
     src = _fresh("chat_src")

@@ -37,14 +37,15 @@ from ..operators.text import (
     tfidf_top_terms,
     token_stats,
 )
+from .relational import _t
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return _t(spark, sf_dir, "documents")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _t(spark, sf_dir, "embeddings")
 
 
 # --------------------------------------------------------------------------
@@ -2542,32 +2543,26 @@ def _docs_rowcount(sf_dir: str) -> int | None:
         return pq.ParquetFile(
             f"{sf_dir}/documents.parquet"
         ).metadata.num_rows
-    except Exception:
-        return None
-
-
-def _corpus_size_hint(sf_dir: str) -> bool | None:
-    """Documents-table row count from the parquet footer (driver-side
-    metadata read, no Spark job), mapped to the ngram_jaccard_pairs
-    prefix-filter crossover. None = let the operator run its own count
-    probe."""
-    from ..operators.dedup import PREFIX_FILTER_MIN_DOCS
-
-    try:
-        import pyarrow.parquet as pq
-
-        n = pq.ParquetFile(f"{sf_dir}/documents.parquet").metadata.num_rows
     except Exception as e:
         # make a misconfigured path visible instead of silently paying
         # the count probe on every invocation
         import logging
 
         logging.getLogger(__name__).debug(
-            "corpus size hint unavailable for %s (%s: %s); falling back "
-            "to the operator's count probe", sf_dir, type(e).__name__, e
+            "documents row count unavailable for %s (%s: %s); falling "
+            "back to a count probe", sf_dir, type(e).__name__, e
         )
         return None
-    return n > PREFIX_FILTER_MIN_DOCS
+
+
+def _corpus_size_hint(sf_dir: str) -> bool | None:
+    """The footer row count (``_docs_rowcount``) mapped to the
+    ngram_jaccard_pairs prefix-filter crossover. None = let the operator
+    run its own count probe."""
+    from ..operators.dedup import PREFIX_FILTER_MIN_DOCS
+
+    n = _docs_rowcount(sf_dir)
+    return None if n is None else n > PREFIX_FILTER_MIN_DOCS
 
 
 import threading
@@ -5445,10 +5440,10 @@ def _trade_edges(spark, sf_dir):
     """Symmetrized customer <-> supplier edge list from orders x
     lineitem (shared by the graph-family queries); the numeric pair
     relation is persisted before the two-way union."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    lineitem = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
     pairs = register_persisted(
@@ -5476,8 +5471,8 @@ def q201_label_propagation(spark, sf_dir):
     from ..operators.graph import label_propagation
 
     edges = _trade_edges(spark, sf_dir)
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
     seeds = (
         customer.filter(F.col("c_custkey") % 10 == 0)
         .join(nation, customer["c_nationkey"] == nation["n_nationkey"])
@@ -6296,7 +6291,7 @@ def q217_event_rate_anomalies(spark, sf_dir):
     check. The oracle replays spine, bucketing, moments, and flag."""
     from ..operators.events import hourly_rate_anomalies
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _t(spark, sf_dir, "events")
     return hourly_rate_anomalies(ev, "ts", "event_type", z_threshold=2.0)
 
 
@@ -6348,8 +6343,8 @@ def q218_personalized_pagerank(spark, sf_dir):
     from ..operators.graph import pagerank
 
     edges = _trade_edges(spark, sf_dir)
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
     seeds = (
         customer.join(nation, customer["c_nationkey"] == nation["n_nationkey"])
         .filter(F.col("n_regionkey") == 0)
@@ -8120,7 +8115,7 @@ def q249_triangle_parts(spark, sf_dir):
     oracle closes triangles with a plain canonical 3-way join."""
     from ..operators.graph import triangle_count
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     a = li.select(
@@ -8180,7 +8175,7 @@ def q250_decayed_event_rates(spark, sf_dir):
     (operators/events.py decayed_event_rates)."""
     from ..operators.events import decayed_event_rates
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = _t(spark, sf_dir, "events")
     return decayed_event_rates(
         events, "event_type", "ts", half_life_days=7, horizon_halflives=40
     )
@@ -8347,8 +8342,8 @@ def q253_key_skew_audit(spark, sf_dir):
     never a global sort (operators/stats.py key_skew_audit)."""
     from ..operators.stats import key_skew_audit
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    li = _t(spark, sf_dir, "lineitem")
+    ev = _t(spark, sf_dir, "events")
     a = key_skew_audit(li, "l_orderkey").select(
         F.lit("lineitem.l_orderkey").alias("key"), "*"
     )
@@ -8797,7 +8792,7 @@ def q259_hilbert_index(spark, sf_dir):
     adds quantile bucketing + the range-partition write discipline)."""
     from ..zorder import hilbert_index_expr
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+    ev = _t(spark, sf_dir, "events").filter(
         F.col("event_id") < 50
     )
     return ev.select(

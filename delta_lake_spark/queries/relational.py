@@ -21,9 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..reader import read_parquet
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The one reader of query inputs: ``{sf_dir}/{name}.parquet`` with
+    its footer schema, so building a query runs no inference job."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 
@@ -32,10 +36,16 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which Spark's parquet reader rejects — read nanos as long and truncate
     to microseconds exactly as DuckDB does) and TIMESTAMP(MICROS) in others
     (directly readable). Adapt to whichever the file carries. Session tz
-    pinned to UTC so the ntz conversion is the identity on the instant."""
+    pinned to UTC so the ntz conversion is the identity on the instant.
+
+    The two pins are session-global and belong to session setup, but
+    the queries run on sessions built by their callers (the driver
+    contract in ``__spark_entry__.py`` passes in its own session), so
+    the reader cannot assume them; it sets them before the footer schema
+    is read, which then surfaces nanos as long."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = _t(spark, sf_dir, "events")
     ts_type = dict(raw.dtypes)["ts"]
     if ts_type == "bigint":  # nanos surfaced as long via the legacy conf
         return raw.withColumn(
@@ -1707,7 +1717,7 @@ def q120_length_histogram(spark, sf_dir):
     buckets over [0, 500) chars, map-only bucketing + one agg."""
     from ..operators.stats import numeric_histogram
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     return numeric_histogram(docs, "n_chars", n_buckets=20, lo=0.0, hi=500.0)
 
 

@@ -20,15 +20,27 @@ join on (file, parquet row position) — ``_metadata.row_index`` gives
 the position without reading extra columns, and the DV side is tiny
 relative to the data (AQE broadcasts it), so a table with deletion
 vectors reads at ≈ full scan cost + one small join, never a rewrite.
+
+Schemas: no read runs a Spark job before its action. Every read is
+handed its schema from what is already known:
+  - a table's schema comes from the log (``scan_adds``);
+  - a parquet input file's schema comes from its footer, read on the
+    driver and converted by Spark's own ``ParquetToSparkSchemaConverter``
+    (``parquet_schema`` / ``read_parquet``), so the session's parquet
+    settings apply exactly as in Spark's inference;
+  - staged data and sidecars are read with the schema their writer
+    used (``DV_SCHEMA`` for deletion vectors).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .errors import DataFileLostError
 from .log import AddFile, DeltaLog, Snapshot
@@ -37,6 +49,51 @@ from .writer import column_mapping, schema_of
 # metadata column names threaded through mutation plans
 FILE_COL = "__dls_file"
 ROW_COL = "__dls_row"
+# a deletion-vector sidecar row: (add path as the writing table keyed
+# it, parquet row position of the deleted row)
+DV_SCHEMA = "path string, row_index long"
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers for one parquet
+    file, without the Spark job inference runs: the footer is read on
+    the driver with Spark's footer reader and converted by
+    ``ParquetFileFormat.readSchemaFromFooter`` with a converter built
+    from the session's SQLConf, so Spark's row metadata, nanosAsLong,
+    inferTimestampNTZ, binaryAsString and INT96 settings apply as they
+    do in inference. Nullable throughout, as a file scan reports it."""
+    from py4j.java_gateway import JavaClass
+
+    gw = spark._jvm._gateway_client
+    state = spark._jsparkSession.sessionState()
+    jpath = JavaClass("org.apache.hadoop.fs.Path", gw)(path)
+    footer = JavaClass("org.apache.parquet.hadoop.Footer", gw)(
+        jpath,
+        JavaClass(_PARQUET + "ParquetFooterReader", gw).readFooter(
+            JavaClass("org.apache.parquet.hadoop.util.HadoopInputFile", gw).fromPath(
+                jpath, state.newHadoopConf()
+            ),
+            JavaClass(
+                "org.apache.parquet.format.converter.ParquetMetadataConverter", gw
+            ).SKIP_ROW_GROUPS,
+        ),
+    )
+    converter = JavaClass(_PARQUET + "ParquetToSparkSchemaConverter", gw)(
+        state.conf()
+    )
+    schema = JavaClass(_PARQUET + "ParquetFileFormat", gw).readSchemaFromFooter(
+        footer, converter
+    )
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read one parquet file with its footer schema (``parquet_schema``):
+    the same DataFrame as ``spark.read.parquet(path)``, built without a
+    Spark job."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def file_uri(table_path: str, log_path: str) -> str:
@@ -76,7 +133,8 @@ def _dv_rows(
             "path string, __dls_uri string",
         )
         parts.append(
-            spark.read.parquet(sc_abs)
+            spark.read.schema(DV_SCHEMA)
+            .parquet(sc_abs)
             .join(owners, "path")
             .select(
                 F.col("__dls_uri").alias(FILE_COL),
@@ -136,7 +194,7 @@ def scan_adds(
     if row_ids:
         # hidden materialized-id columns: present only in rewritten
         # files; schema-on-read fills them with null elsewhere
-        from pyspark.sql.types import LongType, StructField, StructType
+        from pyspark.sql.types import LongType, StructField
 
         read_schema = StructType(
             list(read_schema.fields)

@@ -287,7 +287,7 @@ def stream_delta_appends(
         .start()
     )
     q.awaitTermination(timeout_sec)
-    return spark.read.parquet(target_dir)
+    return spark.read.schema(src.schema).parquet(target_dir)
 
 
 def stream_table_changes(
@@ -316,6 +316,7 @@ def stream_table_changes(
     from ..cdf import table_changes
     from ..errors import VersionNotFoundError
     from ..log import DeltaLog
+    from ..writer import schema_of
 
     os.makedirs(target_dir, exist_ok=True)
     done = [
@@ -347,21 +348,18 @@ def stream_table_changes(
         for _r, _d, names in os.walk(target_dir)
         for n in names
     )
+    # the feed's schema is what table_changes writes: the table's
+    # columns, then the change type and version
+    schema = (
+        schema_of(log.snapshot())
+        .add("_change_type", "string")
+        .add("_commit_version", "long")
+    )
     if not has_files:  # only empty markers so far: typed empty feed
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(
-            _json.loads(log.snapshot().metadata.schemaString)
-        )
-        return (
-            spark.createDataFrame([], schema)
-            .withColumn("_change_type", F.lit(None).cast("string"))
-            .withColumn("_commit_version", F.lit(None).cast("long"))
-        )
+        return spark.createDataFrame([], schema)
     return (
-        spark.read.option("recursiveFileLookup", "true")
+        spark.read.schema(schema)
+        .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.parquet")
         .parquet(target_dir)
     )

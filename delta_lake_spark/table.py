@@ -53,7 +53,7 @@ from . import rowtracking
 from .log import ICT_PROP, AddFile, CommitInfo, DeltaLog, RemoveFile, _utc_millis
 from .reader import FILE_COL as _FILE_COL
 from .reader import ROW_COL as _ROW_COL
-from .reader import file_uri, read_delta, scan_adds
+from .reader import DV_SCHEMA, file_uri, read_delta, scan_adds
 from .writer import (
     check_append_only,
     column_mapping,
@@ -889,7 +889,8 @@ class DeltaTable:
                 keymap, "path string, __dls_newpath string"
             )
             carried.append(
-                self.spark.read.parquet(sc_abs)
+                self.spark.read.schema(DV_SCHEMA)
+                .parquet(sc_abs)
                 .join(F.broadcast(rekey), "path")
                 .select(F.col("__dls_newpath").alias("path"), "row_index")
             )

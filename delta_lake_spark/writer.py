@@ -698,6 +698,11 @@ def copy_into(
     new_files = sorted(f for f in found if f not in seen)
     if not new_files:
         return (log.latest_version() if log.exists() else -1), 0
+    if not schema and suffix == ".parquet":
+        from .reader import parquet_schema
+
+        # the first file in sorted order: the one Spark's inference reads
+        schema = parquet_schema(spark, new_files[0])
     reader = spark.read
     if schema:
         reader = reader.schema(schema)
@@ -746,7 +751,9 @@ def convert_to_delta(
         raise SchemaMismatchError(f"no parquet files under {parquet_path}")
     sample_file = os.path.join(parquet_path, adds[0].path)
 
-    data_schema = spark.read.parquet(sample_file).schema
+    from .reader import parquet_schema
+
+    data_schema = parquet_schema(spark, sample_file)
     full_schema = _nullable(StructType(list(data_schema.fields) + list(part_struct.fields)))
     configuration = {"layout": "hive"} if part_cols else {}
     metadata = Metadata(
