@@ -3,9 +3,16 @@
 A table is a directory of parquet data files plus ``_delta_log/`` holding
 one JSON-lines file per version: ``_delta_log/{version:020d}.json``. Each
 line is one action object with exactly one of the keys ``metaData``,
-``add``, ``remove``, ``commitInfo`` — the shape published in the Delta
-Lake protocol (VLDB 2020 paper; see PAPERS.md). This module is pure
-Python (no Spark import) so the ACID layer is unit-testable on its own.
+``protocol``, ``add``, ``remove``, ``domainMetadata``, ``txn``,
+``commitInfo`` — the shape published in the Delta Lake protocol (VLDB
+2020 paper; see PAPERS.md). This module is pure Python (no Spark
+import) so the ACID layer is unit-testable on its own.
+
+A ``txn`` action ``{"appId", "version", "lastUpdated"}`` records the
+newest version an idempotent writer (a streaming sink's epoch, a COPY
+INTO source file) committed. It is snapshot state (``Snapshot.txns``),
+so it survives checkpoints and log cleanup, and ``commit_from`` checks
+it inside the commit: exactly-once needs no history scan.
 
 Design notes for scale:
   - snapshot replay is O(actions since the last checkpoint), cached per
@@ -341,6 +348,7 @@ class Snapshot:
     files: dict[str, AddFile]  # table-relative path -> AddFile
     protocol: Protocol = field(default_factory=Protocol)
     domains: dict[str, str] = field(default_factory=dict)  # domain -> configuration
+    txns: dict[str, int] = field(default_factory=dict)  # appId -> version
 
     @property
     def num_files(self) -> int:
@@ -360,6 +368,76 @@ class Snapshot:
             if f.deletionVector is not None:
                 total -= int(f.deletionVector.get("cardinality", 0))
         return total
+
+
+@dataclass
+class _Replay:
+    """Table state while log actions are replayed onto it: the one
+    action dispatch shared by commit replay and legacy JSON
+    checkpoints."""
+
+    files: dict[str, AddFile] = field(default_factory=dict)
+    metadata: Metadata | None = None
+    protocol: Protocol = field(default_factory=Protocol)
+    domains: dict[str, str] = field(default_factory=dict)
+    txns: dict[str, int] = field(default_factory=dict)
+
+    @classmethod
+    def of(cls, snap: Snapshot) -> "_Replay":
+        return cls(
+            dict(snap.files),
+            snap.metadata,
+            snap.protocol,
+            dict(snap.domains),
+            dict(snap.txns),
+        )
+
+    def apply(self, action: dict[str, Any]) -> None:
+        if "add" in action:
+            add = AddFile.from_action(action["add"])
+            self.files[add.path] = add
+        elif "remove" in action:
+            self.files.pop(action["remove"]["path"], None)
+        elif "metaData" in action:
+            self.metadata = Metadata.from_action(action["metaData"])
+        elif "protocol" in action:
+            self.protocol = Protocol.from_action(action["protocol"])
+        elif "domainMetadata" in action:
+            dm = DomainMetadata.from_action(action["domainMetadata"])
+            if dm.removed:
+                self.domains.pop(dm.domain, None)
+            else:
+                self.domains[dm.domain] = dm.configuration
+        elif "txn" in action:
+            self.txns[action["txn"]["appId"]] = action["txn"]["version"]
+
+
+def copy_into_app_id(source_file: str) -> str:
+    """The txn appId that records a file COPY INTO loaded (version 0)."""
+    return f"copyInto:{source_file}"
+
+
+def _txn_actions(actions: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """The ``txn`` actions a commit records, derived from its commitInfo
+    parameters: a streaming sink's (``txnAppId``, ``txnVersion``) epoch,
+    and one ``copy_into_app_id`` at version 0 per file a COPY INTO
+    loaded (``sourceFiles``)."""
+    params = next(
+        (
+            a["commitInfo"].get("operationParameters") or {}
+            for a in actions
+            if "commitInfo" in a
+        ),
+        {},
+    )
+    txns = [(copy_into_app_id(f), 0) for f in params.get("sourceFiles", ())]
+    if "txnAppId" in params and "txnVersion" in params:
+        txns.append((params["txnAppId"], params["txnVersion"]))
+    now = _utc_millis()
+    return [
+        {"txn": {"appId": app_id, "version": v, "lastUpdated": now}}
+        for app_id, v in txns
+    ]
 
 
 class CommitStore:
@@ -475,55 +553,37 @@ class DeltaLog:
             raise VersionNotFoundError(f"negative version {version}")
 
         base_version = -1
-        files: dict[str, AddFile] = {}
-        metadata: Metadata | None = None
-        protocol = Protocol()
-        domains: dict[str, str] = {}
+        state: _Replay | None = None
         # find the nearest cached ancestor to replay from
         for v in sorted(self._snapshot_cache, reverse=True):
             if v < version:
-                cached = self._snapshot_cache[v]
+                state = _Replay.of(self._snapshot_cache[v])
                 base_version = v
-                files = dict(cached.files)
-                metadata = cached.metadata
-                protocol = cached.protocol
-                domains = dict(cached.domains)
                 break
         # cold cache: start from the nearest checkpoint at or below target
-        if base_version < 0:
+        if state is None:
             ckpt_v = self._nearest_checkpoint(version)
             if ckpt_v is not None:
-                metadata, files, protocol, domains = self._read_checkpoint(ckpt_v)
+                state = self._read_checkpoint(ckpt_v)
                 base_version = ckpt_v
+            else:
+                state = _Replay()
 
         for v in range(base_version + 1, version + 1):
             for action in self._read_actions(v):
-                if "add" in action:
-                    add = AddFile.from_action(action["add"])
-                    files[add.path] = add
-                elif "remove" in action:
-                    files.pop(action["remove"]["path"], None)
-                elif "metaData" in action:
-                    metadata = Metadata.from_action(action["metaData"])
-                elif "protocol" in action:
-                    protocol = Protocol.from_action(action["protocol"])
-                elif "domainMetadata" in action:
-                    dm = DomainMetadata.from_action(action["domainMetadata"])
-                    if dm.removed:
-                        domains.pop(dm.domain, None)
-                    else:
-                        domains[dm.domain] = dm.configuration
+                state.apply(action)
 
-        if metadata is None:
+        if state.metadata is None:
             raise TableNotFoundError(
                 f"no metaData action found in log of {self.table_path}"
             )
         snap = Snapshot(
             version=version,
-            metadata=metadata,
-            files=files,
-            protocol=protocol,
-            domains=domains,
+            metadata=state.metadata,
+            files=state.files,
+            protocol=state.protocol,
+            domains=state.domains,
+            txns=state.txns,
         )
         self._snapshot_cache[version] = snap
         return snap
@@ -539,7 +599,8 @@ class DeltaLog:
     # carry per-row JSON); the typed columns additionally allow partial
     # column reads (e.g. paths-only for VACUUM reachability). The single
     # metaData/protocol actions ride in the parquet footer's key-value
-    # metadata. Legacy .checkpoint.json files remain readable.
+    # metadata, beside the domainMetadata and txn maps. Legacy
+    # .checkpoint.json files remain readable.
 
     _CKPT_ADD_FIELDS = (
         "path", "partitionValues", "size", "numRecords", "stats",
@@ -651,18 +712,14 @@ class DeltaLog:
                     best = v
         return best
 
-    def _read_checkpoint(
-        self, version: int
-    ) -> tuple[Metadata, dict[str, AddFile], Protocol, dict[str, str]]:
+    def _read_checkpoint(self, version: int) -> _Replay:
         if os.path.exists(self._checkpoint_file(version)) or (
             self._checkpoint_part_files(version)
         ):
             return self._read_parquet_checkpoint(version)
         return self._read_json_checkpoint(version)
 
-    def _read_parquet_checkpoint(
-        self, version: int
-    ) -> tuple[Metadata, dict[str, AddFile], Protocol, dict[str, str]]:
+    def _read_parquet_checkpoint(self, version: int) -> _Replay:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -686,18 +743,17 @@ class DeltaLog:
             raise TableNotFoundError(
                 f"checkpoint {version} of {self.table_path} has no metaData"
             )
-        metadata = Metadata.from_action(json.loads(raw_md)["metaData"])
-        protocol = (
-            Protocol.from_action(json.loads(meta[b"delta.protocol"])["protocol"])
-            if b"delta.protocol" in meta
-            else Protocol()
+        state = _Replay(
+            metadata=Metadata.from_action(json.loads(raw_md)["metaData"]),
+            protocol=(
+                Protocol.from_action(json.loads(meta[b"delta.protocol"])["protocol"])
+                if b"delta.protocol" in meta
+                else Protocol()
+            ),
+            domains=json.loads(meta.get(b"delta.domainMetadata", b"{}")),
+            txns=json.loads(meta.get(b"delta.txns", b"{}")),
         )
-        domains: dict[str, str] = (
-            json.loads(meta[b"delta.domainMetadata"])
-            if b"delta.domainMetadata" in meta
-            else {}
-        )
-        files: dict[str, AddFile] = {}
+        files = state.files
         present = set(table.column_names)  # pre-rowTracking checkpoints lack columns
         cols = {
             name: table.column(name).to_pylist()
@@ -726,40 +782,21 @@ class DeltaLog:
                 )[i],
             )
             files[add.path] = add
-        return metadata, files, protocol, domains
+        return state
 
-    def _read_json_checkpoint(
-        self, version: int
-    ) -> tuple[Metadata, dict[str, AddFile], Protocol, dict[str, str]]:
-        files: dict[str, AddFile] = {}
-        metadata: Metadata | None = None
-        protocol = Protocol()
-        domains: dict[str, str] = {}
+    def _read_json_checkpoint(self, version: int) -> _Replay:
+        state = _Replay()
         with open(
             self._legacy_checkpoint_file(version), "r", encoding="utf-8"
         ) as fh:
             for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    add = AddFile.from_action(action["add"])
-                    files[add.path] = add
-                elif "metaData" in action:
-                    metadata = Metadata.from_action(action["metaData"])
-                elif "protocol" in action:
-                    protocol = Protocol.from_action(action["protocol"])
-                elif "domainMetadata" in action:
-                    dm = DomainMetadata.from_action(action["domainMetadata"])
-                    if dm.removed:
-                        domains.pop(dm.domain, None)
-                    else:
-                        domains[dm.domain] = dm.configuration
-        if metadata is None:
+                if line.strip():
+                    state.apply(json.loads(line))
+        if state.metadata is None:
             raise TableNotFoundError(
                 f"checkpoint {version} of {self.table_path} has no metaData"
             )
-        return metadata, files, protocol, domains
+        return state
 
     # multi-part threshold: at ~10^6 add entries (100 TB at 128 MB
     # files) a single checkpoint file serializes the whole write on one
@@ -828,6 +865,9 @@ class DeltaLog:
                 ).encode(),
                 b"delta.domainMetadata": json.dumps(
                     snap.domains, separators=(",", ":"), sort_keys=True
+                ).encode(),
+                b"delta.txns": json.dumps(
+                    snap.txns, separators=(",", ":"), sort_keys=True
                 ).encode(),
             }
         )
@@ -1104,12 +1144,29 @@ class DeltaLog:
         which is pure allocator state: when ``rt_adds`` (this commit's
         staged files) is passed, the rebase reassigns their baseRowId
         ranges against the winner's advanced mark instead of raising.
+
+        Transaction identifiers: the commit carries one ``txn`` action
+        per idempotent write it records (``_txn_actions``). It raises
+        when ``read_snap`` already holds that appId at or past the
+        version, and on rebase when a winner changed that appId's
+        version (Delta's concurrent-transaction rule): two writers of
+        one streaming epoch or one COPY INTO file never both commit.
         """
         from . import rowtracking  # rowtracking imports this module
 
+        actions = [*actions, *_txn_actions(actions)]
+        our_txns = {
+            x["txn"]["appId"]: x["txn"]["version"] for x in actions if "txn" in x
+        }
         if read_snap is None:
             return self.commit(0, actions)
         read_snap.protocol.check_write_support(self.table_path)
+        for app_id, txn_version in our_txns.items():
+            if read_snap.txns.get(app_id, -1) >= txn_version:
+                raise ConcurrentModificationError(
+                    f"{app_id} version {txn_version} is already committed "
+                    f"to {self.table_path}"
+                )
         our_domains = {
             x["domainMetadata"]["domain"] for x in actions if "domainMetadata" in x
         }
@@ -1131,6 +1188,10 @@ class DeltaLog:
                     new = new_snap.files.get(p)
                     if old is None or new is None or old.to_action() != new.to_action():
                         raise
+                if any(
+                    new_snap.txns.get(a) != read_snap.txns.get(a) for a in our_txns
+                ):
+                    raise
                 if our_domains:
                     for v in range(read_snap.version + 1, new_snap.version + 1):
                         for action in self._read_actions(v):

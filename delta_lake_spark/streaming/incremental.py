@@ -13,6 +13,18 @@ the slice away" loop, with exactly-once bookkeeping for free.
 
 ``windowed_event_counts`` adds the watermarked tumbling-window
 aggregation for late data.
+
+Every query here runs through ``_drain``: an availableNow trigger, then
+a bounded wait that stops the query and raises TimeoutError rather than
+hand back a half-drained sink.
+
+The versioned-table sinks are exactly-once through Delta's transaction
+identifiers. Each micro-batch commit records its (txnAppId, epoch) as a
+``txn`` action in the table's snapshot state (``Snapshot.txns``), which
+survives checkpoints and log cleanup. A replayed epoch finds its
+txnAppId already at or past the epoch and skips (``_committed``);
+``DeltaLog.commit_from`` checks the same state inside the commit, so two
+writers of one epoch (a zombie query and its restart) never both land.
 """
 
 from __future__ import annotations
@@ -21,6 +33,29 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..log import DeltaLog
+
+
+def _drain(writer: DataStreamWriter, timeout_sec: float) -> None:
+    """Start ``writer`` as an availableNow query and wait until it has
+    drained its backlog. A query still running after ``timeout_sec`` is
+    stopped and raises TimeoutError."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not drain in {timeout_sec}s"
+        )
+
+
+def _committed(table_path: str, txn_app_id: str, epoch_id: int) -> bool:
+    """True when the table already records ``txn_app_id`` at or past
+    ``epoch_id``: the epoch is a replay of a committed batch (Delta's
+    idempotent-sink rule over the snapshot's transaction identifiers)."""
+    log = DeltaLog(table_path)
+    return log.exists() and log.snapshot().txns.get(txn_app_id, -1) >= epoch_id
 
 
 def stream_table_to_table(
@@ -54,14 +89,12 @@ def stream_table_to_table(
     src = reader.parquet(source_dir)
     if transform is not None:
         src = transform(src)
-    q = (
+    _drain(
         src.writeStream.format("parquet")
         .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def windowed_event_counts(
@@ -113,12 +146,10 @@ def stream_static_enrich(
         joined.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
-        .trigger(availableNow=True)
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination(timeout_sec)
+    _drain(writer, timeout_sec)
     return spark.table(query_name)
 
 
@@ -135,15 +166,13 @@ def run_windowed_stream(
     as a DataFrame once the stream drains."""
     src = spark.readStream.schema(schema).parquet(source_dir)
     agg = windowed_event_counts(src)
-    q = (
+    _drain(
         agg.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return spark.table(query_name)
 
 
@@ -159,27 +188,16 @@ def stream_into_delta(
 ) -> None:
     """Versioned table as a streaming SINK with end-to-end exactly-once:
     foreachBatch appends each micro-batch transactionally, recording
-    (txnAppId, txnVersion=epoch) in the commit — the idempotent-write
-    pattern of Delta's streaming sink. A batch retried after a crash
-    between the table commit and the checkpoint write finds its epoch
-    already committed and skips, so replays never duplicate rows."""
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
+    (txnAppId, txnVersion=epoch) as the commit's ``txn`` action — the
+    idempotent-write pattern of Delta's streaming sink. A batch retried
+    after a crash between the table commit and the checkpoint write
+    finds its epoch in the snapshot's txns and skips, so replays never
+    duplicate rows."""
     from ..writer import write_delta
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(table_path)
-        try:
-            if log.exists():
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return  # crash-retry replay of a committed epoch
-        except TableNotFoundError:
-            pass
+        if _committed(table_path, txn_app_id, epoch_id):
+            return  # crash-retry replay of a committed epoch
         write_delta(
             batch_df,
             table_path,
@@ -195,13 +213,11 @@ def stream_into_delta(
     src = spark.readStream.schema(schema).parquet(source_dir)
     if transform is not None:
         src = transform(src)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def run_dedup_stream(
@@ -226,15 +242,13 @@ def run_dedup_stream(
     deduped = src.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
         list(key_cols)
     )
-    q = (
+    _drain(
         deduped.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return spark.table(query_name)
 
 
@@ -265,8 +279,6 @@ def stream_delta_appends(
 
     from pyspark.sql.types import StructType
 
-    from ..log import DeltaLog
-
     log = DeltaLog(table_path)
     snap = log.snapshot()
     schema = StructType.fromJson(_json.loads(snap.metadata.schemaString))
@@ -279,14 +291,12 @@ def stream_delta_appends(
     )
     if transform is not None:
         src = transform(src)
-    q = (
+    _drain(
         src.writeStream.format("parquet")
         .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return spark.read.schema(src.schema).parquet(target_dir)
 
 
@@ -315,7 +325,6 @@ def stream_table_changes(
 
     from ..cdf import table_changes
     from ..errors import VersionNotFoundError
-    from ..log import DeltaLog
     from ..writer import schema_of
 
     os.makedirs(target_dir, exist_ok=True)
@@ -467,15 +476,13 @@ def run_stream_stream_outer_join(
         .filter(F.col("event_type") == right_type)
     )
     joined = interval_join_events_outer(logins, purchases, within_minutes)
-    q = (
+    _drain(
         joined.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return spark.table(query_name).filter(F.col("user_id") >= 0)
 
 
@@ -504,15 +511,13 @@ def run_stream_stream_join(
         .filter(F.col("event_type") == right_type)
     )
     joined = interval_join_events(logins, purchases, within_minutes)
-    q = (
+    _drain(
         joined.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return spark.table(query_name)
 
 
@@ -542,26 +547,13 @@ def stream_merge_into_delta(
     orders by its FIRST field, so the event-time column is placed first
     explicitly; without ``ts_col`` the winner is max by the remaining
     columns in order (deterministic, but not time-based)."""
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..table import DeltaTable
     from ..writer import write_delta
 
     def _apply_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(table_path)
-        exists = False
-        try:
-            exists = log.exists()
-            if exists:
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return  # crash-retry replay of a committed epoch
-        except TableNotFoundError:
-            pass
+        if _committed(table_path, txn_app_id, epoch_id):
+            return  # crash-retry replay of a committed epoch
+        exists = DeltaLog(table_path).exists()
 
         cols = [c for c in batch_df.columns if c != key_col]
         if ts_col is not None and ts_col in cols:
@@ -604,13 +596,11 @@ def stream_merge_into_delta(
     src = spark.readStream.schema(schema).parquet(source_dir)
     if transform is not None:
         src = transform(src)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def stream_dedup_into_corpus(
@@ -643,27 +633,14 @@ def stream_dedup_into_corpus(
     """
     from pyspark.sql import Window
 
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.dedup import dedup_against_corpus, normalize_text
     from ..reader import read_delta
     from ..writer import write_delta
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(table_path)
-        exists = False
-        try:
-            if log.exists():
-                exists = True
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return  # replayed epoch
-        except TableNotFoundError:
-            pass
+        if _committed(table_path, txn_app_id, epoch_id):
+            return  # replayed epoch
+        exists = DeltaLog(table_path).exists()
 
         # within-batch exact dedup: min id per normalized text
         w = Window.partitionBy(normalize_text(text_col)).orderBy(
@@ -694,13 +671,11 @@ def stream_dedup_into_corpus(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, table_path)
 
 
@@ -735,27 +710,12 @@ def stream_corpus_with_text_index(
     (our tables always are) and the index is built lazily on the first
     batch. Returns the final corpus DataFrame."""
     from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.text import build_text_index, sync_text_index_from_cdf
     from ..reader import read_delta
     from ..writer import write_delta
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(table_path)
-        replayed = False
-        try:
-            if log.exists():
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        replayed = True
-                        break
-        except TableNotFoundError:
-            pass
-        if not replayed:
+        if not _committed(table_path, txn_app_id, epoch_id):
             write_delta(
                 batch_df,
                 table_path,
@@ -791,13 +751,11 @@ def stream_corpus_with_text_index(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, table_path)
 
 
@@ -828,7 +786,6 @@ def stream_corpus_with_vocab_sketch(
     aggregation (<= groups x 2^p rows shuffled) and a rewrite of the
     KB-sized state table. Returns the final corpus DataFrame."""
     from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.sketches import build_hll_state, update_hll_state
     from ..reader import read_delta
     from ..writer import write_delta
@@ -843,21 +800,7 @@ def stream_corpus_with_vocab_sketch(
         )
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(table_path)
-        replayed = False
-        try:
-            if log.exists():
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        replayed = True
-                        break
-        except TableNotFoundError:
-            pass
-        if not replayed:
+        if not _committed(table_path, txn_app_id, epoch_id):
             write_delta(
                 batch_df,
                 table_path,
@@ -890,13 +833,11 @@ def stream_corpus_with_vocab_sketch(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, table_path)
 
 
@@ -925,26 +866,9 @@ def stream_media_with_keyframes(
     At scale each epoch costs the batch's own decode (payloads stay on
     executors; Arrow batches) plus two log commits. Returns the final
     keyframe DataFrame."""
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.multimodal import gif_keyframes
     from ..reader import read_delta
     from ..writer import write_delta
-
-    def _replayed(path: str, epoch_id: int) -> bool:
-        log = DeltaLog(path)
-        try:
-            if log.exists():
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return True
-        except TableNotFoundError:
-            pass
-        return False
 
     def _write_batch(batch_df, epoch_id: int) -> None:
         params = {
@@ -952,7 +876,7 @@ def stream_media_with_keyframes(
             "txnVersion": epoch_id,
             "outputMode": "Append",
         }
-        if not _replayed(table_path, epoch_id):
+        if not _committed(table_path, txn_app_id, epoch_id):
             write_delta(
                 batch_df,
                 table_path,
@@ -960,7 +884,7 @@ def stream_media_with_keyframes(
                 operation="STREAMING MEDIA APPEND",
                 operation_parameters=params,
             )
-        if not _replayed(keyframe_path, epoch_id):
+        if not _committed(keyframe_path, txn_app_id, epoch_id):
             write_delta(
                 gif_keyframes(batch_df, threshold=threshold),
                 keyframe_path,
@@ -972,13 +896,11 @@ def stream_media_with_keyframes(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, keyframe_path)
 
 
@@ -1011,8 +933,6 @@ def stream_docs_with_span_screen(
     frozen k governs every epoch. At scale each epoch costs the
     batch's own gram pass plus postings pruned to the batch's gram
     set; the corpus never re-aggregates. Returns the spans table."""
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.dedup import (
         spans_against_index,
         update_substring_index,
@@ -1020,28 +940,13 @@ def stream_docs_with_span_screen(
     from ..reader import read_delta
     from ..writer import write_delta
 
-    def _replayed(path: str, epoch_id: int) -> bool:
-        log = DeltaLog(path)
-        try:
-            if log.exists():
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return True
-        except TableNotFoundError:
-            pass
-        return False
-
     def _write_batch(batch_df, epoch_id: int) -> None:
         params = {
             "txnAppId": txn_app_id,
             "txnVersion": epoch_id,
             "outputMode": "Append",
         }
-        if not _replayed(corpus_path, epoch_id):
+        if not _committed(corpus_path, txn_app_id, epoch_id):
             write_delta(
                 batch_df,
                 corpus_path,
@@ -1049,7 +954,7 @@ def stream_docs_with_span_screen(
                 operation="STREAMING DOC APPEND",
                 operation_parameters=params,
             )
-        if not _replayed(spans_path, epoch_id):
+        if not _committed(spans_path, txn_app_id, epoch_id):
             write_delta(
                 spans_against_index(
                     batch_df, "text", "doc_id", index_path
@@ -1066,13 +971,11 @@ def stream_docs_with_span_screen(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, spans_path)
 
 
@@ -1107,28 +1010,15 @@ def stream_warc_ingestion(
     not a full scan — the corpus grows append-only and stays
     time-travelable). Returns the verdicts table: (media_id, url_norm,
     registered_domain, n_chars, kept boolean, dup_source string)."""
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.multimodal import decode_warc_records
     from ..operators.web import html_extract_text, normalize_urls
     from ..reader import read_delta
     from ..writer import write_delta
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(verdicts_path)
-        exists = False
-        try:
-            if log.exists():
-                exists = True
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return  # replayed epoch
-        except TableNotFoundError:
-            pass
+        if _committed(verdicts_path, txn_app_id, epoch_id):
+            return  # replayed epoch
+        exists = DeltaLog(verdicts_path).exists()
 
         recs = decode_warc_records(
             batch_df, include_payload=True
@@ -1189,13 +1079,11 @@ def stream_warc_ingestion(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, verdicts_path)
 
 
@@ -1229,27 +1117,14 @@ def stream_chat_ingestion(
     at scale — collisions would hit both engines identically).
     Returns the verdicts table: (doc_id, conv_key, format_ok, kept,
     dup_source)."""
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..operators.chat import conversation_stats, serialize_conversations
     from ..reader import read_delta
     from ..writer import write_delta
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(verdicts_path)
-        exists = False
-        try:
-            if log.exists():
-                exists = True
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return  # replayed epoch
-        except TableNotFoundError:
-            pass
+        if _committed(verdicts_path, txn_app_id, epoch_id):
+            return  # replayed epoch
+        exists = DeltaLog(verdicts_path).exists()
 
         stats = conversation_stats(batch_df, "convo", "doc_id").select(
             "doc_id",
@@ -1311,13 +1186,11 @@ def stream_chat_ingestion(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return read_delta(spark, verdicts_path)
 
 
@@ -1345,24 +1218,12 @@ def stream_decayed_event_state(
     bucket at read time — a decayed score that never needs the raw
     events again.
     """
-    from ..errors import TableNotFoundError
-    from ..log import DeltaLog
     from ..writer import write_delta
     from pyspark.sql import functions as F
 
     def _write_batch(batch_df, epoch_id: int) -> None:
-        log = DeltaLog(state_path)
-        try:
-            if log.exists():
-                for h in log.history():
-                    op = h.get("operationParameters") or {}
-                    if (
-                        op.get("txnAppId") == txn_app_id
-                        and op.get("txnVersion") == epoch_id
-                    ):
-                        return  # replayed epoch: adds must not re-land
-        except TableNotFoundError:
-            pass
+        if _committed(state_path, txn_app_id, epoch_id):
+            return  # replayed epoch: adds must not re-land
         buckets = (
             batch_df.select(
                 F.col(type_col).alias("etype"),
@@ -1389,13 +1250,11 @@ def stream_decayed_event_state(
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(source_dir)
-    q = (
+    _drain(
         src.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def estimate_decayed_state(

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .incremental import _drain
+
 SESSION_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, total_value double"
@@ -196,13 +198,11 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
+    _drain(
         out.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
     return spark.table(query_name)

@@ -48,6 +48,7 @@ from .log import (
     RemoveFile,
     _ict_enabled,
     _utc_millis,
+    copy_into_app_id,
 )
 from .stats import file_stats
 
@@ -672,9 +673,12 @@ def copy_into(
     """Idempotent bulk ingest (COPY INTO): append only the source files
     no previous COPY INTO commit has loaded — re-running after a partial
     failure or on a growing landing directory never duplicates rows.
-    File-level bookkeeping lives in the commit log itself
-    (operationParameters.sourceFiles), so there is no side state to
-    drift. Returns (committed version, number of files loaded)."""
+    File-level bookkeeping is table state: each COPY INTO commit records
+    one transaction id (``copy_into_app_id``) per loaded file
+    (``Snapshot.txns``, derived by DeltaLog.commit_from from
+    operationParameters.sourceFiles), so it survives checkpoints and log
+    cleanup, and two concurrent loads of one file never both commit.
+    Returns (committed version, number of files loaded)."""
     source_path = os.path.abspath(source_path)
     suffix = "." + file_format.lower()
     found: list[str] = []
@@ -688,14 +692,8 @@ def copy_into(
                 if n.lower().endswith(suffix) and not n.startswith((".", "_"))
             )
     log = DeltaLog(table_path)
-    seen: set[str] = set()
-    if log.exists():
-        for h in log.history():
-            if h.get("operation") == "COPY INTO":
-                seen.update(
-                    (h.get("operationParameters") or {}).get("sourceFiles", [])
-                )
-    new_files = sorted(f for f in found if f not in seen)
+    seen = log.snapshot().txns if log.exists() else {}
+    new_files = sorted(f for f in found if copy_into_app_id(f) not in seen)
     if not new_files:
         return (log.latest_version() if log.exists() else -1), 0
     if not schema and suffix == ".parquet":

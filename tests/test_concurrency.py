@@ -447,6 +447,34 @@ def test_write_read_version_is_validated_snapshot(spark, tmp_table, monkeypatch)
     assert read_delta(spark, tmp_table).count() == 9
 
 
+def test_same_epoch_writers_race_loser_raises(spark, tmp_table, monkeypatch):
+    """Two writers of one streaming epoch (a zombie query and its
+    restart) both pass the replay check, then race: the winner records
+    the epoch in the table's txn state, so the loser's rebase raises
+    instead of appending the epoch twice. A writer that reads the
+    winner's snapshot raises before it commits."""
+    from delta_lake_spark import read_delta, write_delta
+    from delta_lake_spark.errors import ConcurrentModificationError
+    from delta_lake_spark.log import DeltaLog
+
+    epoch = {"txnAppId": "sink", "txnVersion": 5}
+    write_delta(spark.range(3), tmp_table)  # v0
+    state = _race_after_staging(
+        monkeypatch,
+        lambda: write_delta(
+            spark.range(10, 13), tmp_table, operation_parameters=epoch
+        ),
+    )
+    with pytest.raises(ConcurrentModificationError):
+        write_delta(spark.range(10, 13), tmp_table, operation_parameters=epoch)
+    assert state["raced"]
+    assert DeltaLog(tmp_table).latest_version() == 1  # only the winner
+    assert DeltaLog(tmp_table).snapshot().txns == {"sink": 5}
+    with pytest.raises(ConcurrentModificationError):
+        write_delta(spark.range(10, 13), tmp_table, operation_parameters=epoch)
+    assert read_delta(spark, tmp_table).count() == 6
+
+
 def test_identity_appends_race_loser_raises(spark, tmp_table, monkeypatch):
     """Two identity appends staged against the same high-water mark hold
     the same id range: the loser raises (the winner's new mark changed

@@ -188,7 +188,9 @@ def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_table):
 
     for i in range(4):
         write_delta(
-            spark.range(i * 10, i * 10 + 10).selectExpr("id"), tmp_table
+            spark.range(i * 10, i * 10 + 10).selectExpr("id"),
+            tmp_table,
+            operation_parameters={"txnAppId": f"app{i % 2}", "txnVersion": i},
         )
     log = DeltaLog(tmp_table)
     v = log.write_checkpoint()
@@ -203,6 +205,7 @@ def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_table):
     warm_files = {p: a.to_action() for p, a in log.snapshot().files.items()}
     cold_files = {p: a.to_action() for p, a in snap.files.items()}
     assert warm_files == cold_files
+    assert log.snapshot().txns == snap.txns == {"app0": 2, "app1": 3}
 
     # legacy JSON checkpoint (as written by round-1 tables) still reads
     legacy = os.path.join(
@@ -213,6 +216,11 @@ def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_table):
         fh.write(_json.dumps(snap.metadata.to_action()) + "\n")
         for a in snap.files.values():
             fh.write(_json.dumps(a.to_action()) + "\n")
+        for app_id, txn_version in snap.txns.items():
+            fh.write(
+                _json.dumps({"txn": {"appId": app_id, "version": txn_version}})
+                + "\n"
+            )
     os.remove(
         os.path.join(tmp_table, "_delta_log", f"{v:020d}.checkpoint.parquet")
     )
@@ -220,6 +228,7 @@ def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_table):
     assert {
         p: a.to_action() for p, a in legacy_cold.snapshot().files.items()
     } == warm_files
+    assert legacy_cold.snapshot().txns == {"app0": 2, "app1": 3}
 
 
 def test_cleanup_expired_logs(spark, tmp_table):
@@ -371,6 +380,7 @@ def test_multipart_checkpoint_roundtrip(spark, tmp_path):
         write_delta(
             spark.range(i * 10, i * 10 + 10).withColumnRenamed("id", "k"),
             path,
+            operation_parameters={"txnAppId": "sink", "txnVersion": i},
         )
     log = DeltaLog(path)
     expected_files = set(log.snapshot().files)
@@ -384,6 +394,7 @@ def test_multipart_checkpoint_roundtrip(spark, tmp_path):
     snap = fresh.snapshot()
     assert set(snap.files) == expected_files
     assert snap.metadata is not None
+    assert snap.txns == {"sink": 3}
     from delta_lake_spark import read_delta
 
     assert read_delta(spark, path).count() == 40
@@ -394,6 +405,7 @@ def test_multipart_checkpoint_roundtrip(spark, tmp_path):
     assert torn._checkpoint_part_files(v) == []
     assert torn._nearest_checkpoint(v) is None
     assert set(torn.snapshot().files) == expected_files  # replayed
+    assert torn.snapshot().txns == {"sink": 3}
 
 
 def test_multipart_checkpoint_rejects_mixed_generations(spark, tmp_path):

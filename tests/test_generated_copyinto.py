@@ -103,6 +103,30 @@ def test_copy_into_idempotent(spark, tmp_table, tmp_path):
     assert read_delta(spark, tmp_table).count() == 250
 
 
+def test_copy_into_loaded_files_survive_log_cleanup(spark, tmp_table, tmp_path):
+    """The loaded-file set is table state: after a checkpoint and log
+    cleanup drop the COPY INTO commit, a re-run still loads nothing."""
+    from delta_lake_spark.log import DeltaLog
+
+    src = str(tmp_path / "landing")
+    _orders(spark).limit(100).write.parquet(src)
+    _, n1 = copy_into(spark, tmp_table, src)  # v0
+    assert n1 > 0
+    extra = _orders(spark).limit(1)
+    for _ in range(10):  # v1..v10: the automatic checkpoint lands at v10
+        write_delta(extra, tmp_table)
+    log = DeltaLog(tmp_table)
+    assert log._nearest_checkpoint(log.latest_version()) == 10
+    log.cleanup_expired_logs(0)
+    assert "COPY INTO" not in [h["operation"] for h in log.history()]
+    rows = read_delta(spark, tmp_table).count()
+    assert rows == 110
+
+    v, n2 = copy_into(spark, tmp_table, src)
+    assert (v, n2) == (10, 0)
+    assert read_delta(spark, tmp_table).count() == rows
+
+
 def test_copy_into_sql(spark, tmp_table, tmp_path):
     from delta_lake_spark.catalog import Catalog
     from delta_lake_spark.sql import sql as dls_sql

@@ -192,6 +192,67 @@ def test_stream_into_delta_exactly_once(spark, tmp_path):
     assert read_delta(spark, tbl).count() == n2
 
 
+def test_stream_into_delta_replay_after_log_cleanup_skips(spark, tmp_path):
+    """Committed epochs are table state, not history: once a checkpoint
+    and log cleanup drop the commit JSONs, a replayed epoch still finds
+    its epoch recorded and skips, with no new rows and no new version."""
+    import shutil
+
+    from delta_lake_spark import read_delta
+    from delta_lake_spark.log import DeltaLog
+    from delta_lake_spark.streaming.incremental import stream_into_delta
+
+    events = _events(spark, SF_DIR).select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    src = str(tmp_path / "src")
+    tbl = str(tmp_path / "tbl")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "event_id long, user_id long, event_type string, value double"
+
+    _write_chunk(spark, events, src, 0, 300)
+    stream_into_delta(spark, src, tbl, ckpt, schema)  # epoch 0 -> v0
+    _write_chunk(spark, events, src, 300, 500)
+    stream_into_delta(spark, src, tbl, ckpt, schema)  # epoch 1 -> v1
+    log = DeltaLog(tbl)
+    log.write_checkpoint()
+    log.cleanup_expired_logs(0)
+    assert [h["version"] for h in log.history()] == [1]  # epoch 0's JSON gone
+    n, version = read_delta(spark, tbl).count(), log.latest_version()
+
+    shutil.rmtree(ckpt)  # restart from scratch: epoch 0 replays
+    stream_into_delta(spark, src, tbl, ckpt, schema)
+    assert read_delta(spark, tbl).count() == n
+    assert DeltaLog(tbl).latest_version() == version
+    assert DeltaLog(tbl).snapshot().txns == {"dls_stream": 1}
+
+
+def test_stream_drain_timeout_stops_query(spark, tmp_path):
+    """A drain that outlives its timeout stops its query and raises,
+    rather than returning while the query still writes the table."""
+    import pytest
+
+    from delta_lake_spark.streaming.incremental import stream_into_delta
+
+    events = _events(spark, SF_DIR).select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    src = str(tmp_path / "src")
+    for lo in range(0, 500, 100):
+        _write_chunk(spark, events, src, lo, lo + 100)
+    schema = "event_id long, user_id long, event_type string, value double"
+    with pytest.raises(TimeoutError):
+        stream_into_delta(
+            spark,
+            src,
+            str(tmp_path / "tbl"),
+            str(tmp_path / "ckpt"),
+            schema,
+            timeout_sec=0.001,
+        )
+    assert spark.streams.active == []
+
+
 def test_cdf_streaming_source_exactly_once(spark, tmp_path):
     """Incremental CDF drain: each call processes only new commits; the
     accumulated feed equals a full table_changes read; a drain with no
