@@ -4,8 +4,10 @@ host's CPU count) and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Usage: python bench.py [--all]  (--all benches every registered query;
-default is the headline subset used for round-over-round tracking).
+Usage: python bench.py [--all | QUERY ...]
+  (default: the headline subset used for round-over-round tracking;
+  --all benches every registered query; named queries are timed alone,
+  under the same rules as --all).
 """
 
 from __future__ import annotations
@@ -84,26 +86,21 @@ SECONDARY_HEAVY = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from delta_lake_spark.queries import QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    picked = [a for a in sys.argv[1:] if a != "--all"]
+    unknown = [name for name in picked if name not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
+    # named queries follow the --all rules: one "queries" map, no
+    # secondary rows
+    subset = bool(picked) or "--all" in sys.argv
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("delta_lake_spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session()
 
     # untimed warmup: exercise codegen, the scheduler, and a shuffle once
     # so the first timed query measures the query, not JVM cold-start
@@ -165,23 +162,20 @@ def main() -> None:
         print(f"# {name}: {t:.3f}s", file=sys.stderr)
         return t
 
-    # Under --all, composition-heavy queries (the SECONDARY set and the
-    # funnel family, whose _funnel_core now materializes stage sets
-    # eagerly at construction time) are timed END TO END — otherwise
-    # the t0 reset would exclude most of their work from the timed
-    # window and silently under-report them.
+    # Under --all or named queries, composition-heavy queries (the
+    # SECONDARY set and the funnel family, whose _funnel_core now
+    # materializes stage sets eagerly at construction time) are timed
+    # END TO END — otherwise the t0 reset would exclude most of their
+    # work from the timed window and silently under-report them.
     end_to_end = set(SECONDARY) | {
         "q137_pretrain_funnel",
         "q147_pretrain_funnel_full",
         "q159_pretrain_funnel_bigram",
         "q170_pretrain_funnel_minhash",
     }
-    names = list(QUERIES) if "--all" in sys.argv else HEADLINE
+    names = picked or (list(QUERIES) if subset else HEADLINE)
     timings = {
-        name: bench_one(
-            name,
-            include_build=("--all" in sys.argv and name in end_to_end),
-        )
+        name: bench_one(name, include_build=(subset and name in end_to_end))
         for name in names
     }
     total = round(sum(timings.values()), 3)
@@ -195,7 +189,7 @@ def main() -> None:
     # note).
     secondary = (
         {}
-        if "--all" in sys.argv
+        if subset
         else {
             name: bench_one(
                 name,
@@ -227,6 +221,26 @@ def main() -> None:
         )
     )
     spark.stop()
+
+
+def session():
+    """The benchmark session: local[$SPARK_GRAFT_CPUS] (default: the
+    host's CPU count) with one shuffle partition per core."""
+    from pyspark.sql import SparkSession
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("delta_lake_spark-bench")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.driver.memory", "16g")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 if __name__ == "__main__":

@@ -18,10 +18,12 @@ Design notes for scale:
   - snapshot replay is O(actions since the last checkpoint), cached per
     version, never per-row (BASELINE.md requirement): every
     ``checkpoint_interval`` commits the full live state is written to
-    ``{version:020d}.checkpoint.json`` with a ``_last_checkpoint``
-    pointer (the Delta protocol's parquet-checkpoint idea, VLDB 2020
-    §3.2, in JSON), so cold-cache replay of a long-lived table reads
-    one checkpoint + a bounded tail instead of the whole history;
+    ``{version:020d}.checkpoint.parquet`` (multi-part parquet above
+    ``CKPT_ROWS_PER_PART`` adds) with a ``_last_checkpoint`` pointer
+    (the Delta protocol's checkpoint, VLDB 2020 §3.2), so cold-cache
+    replay of a long-lived table reads one checkpoint + a bounded tail
+    instead of the whole history; ``.checkpoint.json`` files are read
+    as a legacy format and never written;
   - commit atomicity uses ``os.link`` create-if-absent, the local-FS
     analogue of an object store's put-if-absent — single serialization
     point, optimistic concurrency: every writer commits through

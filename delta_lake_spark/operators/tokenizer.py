@@ -443,10 +443,12 @@ MERGE_CHAIN_CHECKPOINT_EVERY = 64
 # MERGE in the expression shape (measured: 64 layers ~ 8 s on a
 # 15k-type relation; 1024 layers did not finish inside 9 minutes),
 # while the Python scan applies only the merges actually PRESENT in
-# each word (sub-second for the same table — see tools/bpe_bench.py
-# --merges). The relation crossing the Python boundary is the
-# vocabulary, never the corpus, which is exactly where the operator
-# catalog reserves Python (cf. pack_sequences_nextfit). Both shapes
+# each word (sub-second for the same table; at 100k docs and 1024
+# merges the vocab strategy encoded 454k tokens/s against 818 for the
+# inline chain, SCALING.md). The relation crossing the Python
+# boundary is the vocabulary, never the corpus, which is exactly
+# where the operator catalog reserves Python (cf.
+# pack_sequences_nextfit). Both shapes
 # are value-identical (rank-order replace-all; property-tested)
 MERGE_CHAIN_PY_MIN_MERGES = 129
 
@@ -1368,7 +1370,7 @@ def wordpiece_encode(
     Two value-identical strategies (the unigram_encode convention —
     HOF folds run interpreted per element, so per-TYPE work wins by
     the corpus' type/token ratio on natural text; measured 12k ->
-    ~1M tokens/s at 100k docs in tools/r9_bench.py):
+    ~1M tokens/s at 100k docs on a Zipfian vocabulary, SCALING.md):
 
     - ``"vocab"`` (default): run the greedy scan once per DISTINCT
       word, then posexplode the corpus, join the per-word

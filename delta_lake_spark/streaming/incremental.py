@@ -709,7 +709,6 @@ def stream_corpus_with_text_index(
     The corpus table must exist with the change feed readable from v0
     (our tables always are) and the index is built lazily on the first
     batch. Returns the final corpus DataFrame."""
-    from ..errors import TableNotFoundError
     from ..operators.text import build_text_index, sync_text_index_from_cdf
     from ..reader import read_delta
     from ..writer import write_delta
@@ -730,12 +729,7 @@ def stream_corpus_with_text_index(
         # index maintenance: build on first sight, then CDF-sync — the
         # sync is a no-op when the pin already covers the corpus head,
         # so replays cost one version compare
-        postings_log = DeltaLog(f"{index_path}/postings")
-        try:
-            index_exists = postings_log.exists()
-        except TableNotFoundError:
-            index_exists = False
-        if not index_exists:
+        if not DeltaLog(f"{index_path}/postings").exists():
             build_text_index(
                 read_delta(spark, table_path),
                 text_col,
@@ -785,7 +779,6 @@ def stream_corpus_with_vocab_sketch(
     At scale the maintenance cost per batch is the batch's own register
     aggregation (<= groups x 2^p rows shuffled) and a rewrite of the
     KB-sized state table. Returns the final corpus DataFrame."""
-    from ..errors import TableNotFoundError
     from ..operators.sketches import build_hll_state, update_hll_state
     from ..reader import read_delta
     from ..writer import write_delta
@@ -812,11 +805,7 @@ def stream_corpus_with_vocab_sketch(
                     "outputMode": "Append",
                 },
             )
-        try:
-            state_exists = DeltaLog(state_path).exists()
-        except TableNotFoundError:
-            state_exists = False
-        if not state_exists:
+        if not DeltaLog(state_path).exists():
             build_hll_state(
                 _toks(read_delta(spark, table_path)),
                 state_path,

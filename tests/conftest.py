@@ -8,9 +8,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 
-@pytest.fixture(scope="session")
-def spark():
-    s = (
+def local_session():
+    """The test session: local[4], 4 shuffle partitions."""
+    return (
         SparkSession.builder.master("local[4]")
         .appName("delta_lake_spark-tests")
         .config("spark.sql.shuffle.partitions", "4")
@@ -19,6 +19,11 @@ def spark():
         .config("spark.driver.memory", "4g")
         .getOrCreate()
     )
+
+
+@pytest.fixture(scope="session")
+def spark():
+    s = local_session()
     yield s
     s.stop()
 

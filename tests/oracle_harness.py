@@ -98,8 +98,8 @@ def type_drift(spark_df, con, oracle_sql: str) -> list[str]:
 
 
 def gate_record(spark_df, con, oracle_sql: str) -> tuple[dict, str]:
-    """Run one Spark-vs-DuckDB comparison and emit a record in the
-    driver's CORRECTNESS_r*.json per-query format:
+    """Run one Spark-vs-DuckDB comparison and emit the driver's
+    per-query correctness record:
     {rows_match, schema_match, hash_match, spark_rows, oracle_rows,
     err}. Mapping mirrors the driver's comparator: column-name
     mismatch -> schema_match false; dtype drift or value mismatch ->
@@ -150,9 +150,8 @@ def main():
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry_mod
 
-    # --json PATH: also write the driver-format artifact (the full-
-    # registry GATE_FULL_r*.json the judge diffs against the driver's
-    # sampled CORRECTNESS_r*.json — identical per-query schema)
+    # --json PATH: also write every query's record (gate_record's
+    # per-query format) to one JSON file, e.g. GATE_FULL_r14.json
     args = sys.argv[1:]
     json_out = None
     if "--json" in args:

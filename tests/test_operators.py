@@ -1776,22 +1776,50 @@ def test_resolve_clusters_driver_equals_distributed(spark):
     assert via_driver == want and via_dist == want
 
 
+DOC_WORDS = 30
+VOCAB = 50_000
+NEAR_DUP_EVERY = 97
+
+
+def synthetic_corpus(spark, n: int):
+    """(doc_id, text) relation of ``n`` documents of DOC_WORDS words
+    drawn deterministically from a VOCAB-word vocabulary (xxhash64
+    seeded, so independent of shard order); every NEAR_DUP_EVERY-th
+    document copies its predecessor's words plus one extra word, a
+    planted near-dup pair. Built from codegen'd expressions only, no
+    driver-side text."""
+    base = spark.range(n).select(F.col("id").alias("doc_id"))
+    # every NEAR_DUP_EVERY-th doc copies its predecessor's words
+    content_id = F.when(
+        (F.pmod(F.col("doc_id"), F.lit(NEAR_DUP_EVERY)) == 0)
+        & (F.col("doc_id") > 0),
+        F.col("doc_id") - 1,
+    ).otherwise(F.col("doc_id"))
+    words = F.transform(
+        F.sequence(F.lit(1), F.lit(DOC_WORDS)),
+        lambda i: F.concat(
+            F.lit("w"), F.pmod(F.xxhash64(F.col("__cid"), i), F.lit(VOCAB))
+        ),
+    )
+    extra = F.when(
+        (F.pmod(F.col("doc_id"), F.lit(NEAR_DUP_EVERY)) == 0)
+        & (F.col("doc_id") > 0),
+        F.concat(F.lit(" x"), F.col("doc_id")),
+    ).otherwise(F.lit(""))
+    return base.withColumn("__cid", content_id).select(
+        "doc_id",
+        F.concat(F.concat_ws(" ", words), extra).alias("text"),
+    )
+
+
 def test_minhash_candidate_count_stays_linear(spark):
-    """Scale-bench guard (tools/dedup_bench.py, SCALING.md): on the
+    """Scale guard (SCALING.md, MinHash-LSH linearity): on the
     synthetic corpus with ~n/97 planted near-dup pairs, MinHash-LSH
     candidate generation must produce O(planted) candidates — a
     quadratic bucket blowup (broken stop-shingle guard or bucket cap)
     would multiply this by orders of magnitude. Verified pairs must
     contain every planted pair (the 28/29-shingle overlap is far above
     threshold, and k=64/b=16 recall there is ~1)."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from tools.dedup_bench import NEAR_DUP_EVERY, synthetic_corpus
-
     from delta_lake_spark.operators.dedup import (
         minhash_lsh_candidates,
         minhash_lsh_pairs,
@@ -2954,7 +2982,7 @@ def test_trained_pq_production_budget_recall_and_parity(spark, tmp_path):
     )
     r_toy, r_trained = recall(toy), recall(trained)
     # at this fixture size both can saturate; the decisive gap (0.07
-    # vs >=0.9 at 1M clustered vectors) is tools/ann_bench.py's row —
+    # vs >=0.9 at 1M clustered vectors) is SCALING.md's ANN row —
     # here we pin the trained path's absolute recall + no regression
     assert r_trained >= 0.9, (r_toy, r_trained)
     assert r_trained >= r_toy

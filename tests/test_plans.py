@@ -1,19 +1,66 @@
 """Physical-plan regression tests: the properties that make the engine
 scale (SURVEY.md §4) must survive refactors — predicate pushdown and
 column pruning into our explicit-file delta scans, broadcast joins for
-dims, top-k as TakeOrdered, no cartesian products."""
+dims, top-k as TakeOrdered, no cartesian products.
 
+The exchange, scan and window operator counts of every bench.py
+HEADLINE + SECONDARY query are pinned in ``plan_shapes.json``.
+Regenerate it with ``python tests/test_plans.py`` only when a plan
+change is meant."""
+
+import json
+import os
 import re
+import sys
 
+import pytest
 from pyspark.sql import functions as F
 
-from delta_lake_spark import read_delta, write_delta
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
+
+from bench import HEADLINE, SECONDARY  # noqa: E402
+from delta_lake_spark import read_delta, write_delta  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+SHAPES = os.path.join(HERE, "plan_shapes.json")
+# the operator name on each plan-tree line, past the tree drawing and
+# any whole-stage-codegen "*(n) " prefix
+_OPERATOR = re.compile(r"^[ :|+-]*(?:\*\(\d+\) )?(\w+)", re.M)
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_shape(spark, name: str) -> dict:
+    """Exchange, scan and window operator lines in ``name``'s executed
+    plan, built on SF_DIR with the session's memos cleared. Cached
+    subplans print once per reference, and each line counts."""
+    from delta_lake_spark.operators._cache import clear_session_caches
+    from delta_lake_spark.queries import QUERIES
+    from delta_lake_spark.queries._fixtures import clear_fixture_memo
+    from delta_lake_spark.queries.llm import clear_funnel_memo
+
+    clear_funnel_memo(spark)
+    clear_session_caches(spark)
+    clear_fixture_memo()
+    # an input another test cached would plan as an InMemoryTableScan
+    # over its own scan
+    spark.catalog.clearCache()
+    ops = _OPERATOR.findall(_plan(QUERIES[name](spark, SF_DIR)))
+    return {
+        "exchange": sum(op.endswith("Exchange") for op in ops),
+        "scan": sum("Scan" in op for op in ops),
+        "window": sum("Window" in op for op in ops),
+    }
+
+
+@pytest.mark.parametrize("name", HEADLINE + SECONDARY)
+def test_plan_shape_is_pinned(spark, name):
+    with open(SHAPES) as fh:
+        pinned = json.load(fh)
+    assert plan_shape(spark, name) == pinned.get(name)
 
 
 def test_delta_scan_pushdown_and_pruning(spark, tmp_table):
@@ -1459,3 +1506,15 @@ def test_q313_bradley_terry_single_corpus_aggregation(spark):
     # scan everywhere: ZERO parquet scans in the returned plan
     assert sum(1 for n in names if "Scan parquet" in n) == 0, names
     assert "BroadcastHashJoin" in _plan(out) or "BroadcastNestedLoopJoin" in _plan(out)
+
+
+if __name__ == "__main__":
+    from conftest import local_session
+
+    spark = local_session()
+    shapes = {name: plan_shape(spark, name) for name in HEADLINE + SECONDARY}
+    with open(SHAPES, "w") as fh:
+        json.dump(shapes, fh, indent=2)
+        fh.write("\n")
+    print(json.dumps(shapes))
+    spark.stop()

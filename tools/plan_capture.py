@@ -1,11 +1,11 @@
-"""Capture .explain("formatted") for the headline + secondary bench
-queries into plans/r13/<query>_<tag>.txt — the before/after plan
-evidence for the optimization rounds.
+"""Capture .explain("formatted") for bench queries into OUT_DIR/<query>.txt,
+built on bench.py's session so the captured plan is the benched plan.
 
-Usage: python tools/plan_capture.py <tag> [query ...]
-(tag = "before" / "after"; default query set = bench.py HEADLINE +
-SECONDARY). Construction runs with the same session shape bench.py
-uses so the captured plan is the benched plan.
+Usage: python tools/plan_capture.py OUT_DIR [query ...]
+(default query set = bench.py HEADLINE + SECONDARY; inputs from
+$SPARK_GRAFT_SF_DIR, with bench.py's default). A per-query summary of
+exchanges, Python nodes and joins goes to stderr. The pinned plan
+shapes the tests check are in tests/plan_shapes.json.
 """
 
 from __future__ import annotations
@@ -17,36 +17,20 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, SECONDARY  # noqa: E402
+from bench import HEADLINE, SECONDARY, session  # noqa: E402
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
     from delta_lake_spark.queries import QUERIES
 
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    out_dir = sys.argv[1]
     names = sys.argv[2:] or (HEADLINE + SECONDARY)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("PLAN_ROUND", "r14"),
-    )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("delta_lake_spark-plan-capture")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session()
 
     for name in names:
         fn = QUERIES[name]
@@ -58,7 +42,7 @@ def main() -> None:
             text = buf.getvalue()
         except Exception as e:  # capture the failure, keep going
             text = f"PLAN CAPTURE FAILED: {e!r}\n"
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(text)
         n_exch = text.count("Exchange")
