@@ -2,7 +2,7 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
 host's CPU count) and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "runs": {name: repeats, ...}, "sf": ...}.
 
 Usage: python bench.py [--all | QUERY ...]
   (default: the headline subset used for round-over-round tracking;
@@ -132,8 +132,11 @@ def main() -> None:
     from delta_lake_spark.operators._cache import clear_session_caches
     from delta_lake_spark.queries._fixtures import clear_fixture_memo
 
+    runs_used = {}
+
     def bench_one(name: str, runs: int = 3, include_build: bool = False) -> float:
         runs += extra if include_build else headline_extra
+        runs_used[name] = runs
         fn = QUERIES[name]
         # best of 3: the first run pays Janino codegen + cache fill, the
         # second still part-warms the JIT for wide-agg plans; the minimum
@@ -213,9 +216,7 @@ def main() -> None:
                 "secondary": secondary,
                 "loadavg": [round(x, 2) for x in loadavg],
                 "loadavg_end": [round(x, 2) for x in loadavg_end],
-                "runs_per_query": 3 + headline_extra,
-                "runs_per_secondary": 5 + extra,
-                "runs_per_secondary_heavy": 3 + extra,
+                "runs": runs_used,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }
         )

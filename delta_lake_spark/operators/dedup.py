@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._index import delete_ids, pin, pinned, sync_from_cdf
+
 # Spark's CacheManager holds DataFrame caches until an explicit
 # unpersist — NOT until the Python object is garbage-collected — so a
 # long-lived session running dedup repeatedly would accumulate one
@@ -1049,7 +1051,8 @@ def cross_corpus_near_dups(
 # --------------------------------------------------------------------------
 # Persistent incremental LSH signature index: compute corpus signatures
 # ONCE, maintain them on append, and run every daily batch against the
-# stored index — at 100 TB the corpus side is never re-shingled.
+# stored index — at 100 TB the corpus side is never re-shingled. The
+# maintenance lifecycle is operators/_index.py's.
 # --------------------------------------------------------------------------
 
 _IDX_PROP = "dls.lshIndex."  # table-property prefix on the buckets table
@@ -1063,15 +1066,6 @@ def _index_tables(index_path: str) -> tuple[str, str, str]:
     )
 
 
-def _index_params(spark, index_path: str) -> dict:
-    from ..log import DeltaLog
-
-    conf = DeltaLog(_index_tables(index_path)[0]).snapshot().metadata.configuration
-    return {
-        key: int(conf[_IDX_PROP + key]) for key in ("n", "k", "bands", "seed")
-    }
-
-
 def build_signature_index(
     corpus: DataFrame,
     text_col: str,
@@ -1082,7 +1076,7 @@ def build_signature_index(
     bands: int = 16,
     seed: int = 42,
     max_doc_freq: float | None = 0.1,
-    corpus_version: int | None = None,
+    corpus_version: int = 0,
 ) -> None:
     """Build the persistent LSH signature index for ``corpus``: three
     versioned tables under ``index_path`` (banded bucket rows, per-doc
@@ -1116,16 +1110,11 @@ def build_signature_index(
     hot_stored = read_delta(spark, t_hot)
     hashed = hashed.join(F.broadcast(hot_stored), "__h", "left_anti")
     buckets = _banded_bucket_rows(hashed, id_col, id_col, k, bands, seed)
-    props = {
-        _IDX_PROP + "n": str(n),
-        _IDX_PROP + "k": str(k),
-        _IDX_PROP + "bands": str(bands),
-        _IDX_PROP + "seed": str(seed),
-    }
-    if corpus_version is not None:
-        # for CDF-driven maintenance: the corpus Delta version this
-        # build reflects (sync_signature_index_from_cdf starts there)
-        props[_IDX_PROP + "syncedVersion"] = str(corpus_version)
+    props = pin(
+        _IDX_PROP,
+        {"n": n, "k": k, "bands": bands, "seed": seed},
+        corpus_version,
+    )
     write_delta(buckets, t_buckets, mode="overwrite", properties=props)
     write_delta(
         sh.groupBy(id_col).agg(F.count("*").alias("n_sh")),
@@ -1157,7 +1146,7 @@ def update_signature_index(
 
     spark = new_docs.sparkSession
     t_buckets, t_sizes, t_hot = _index_tables(index_path)
-    p = _index_params(spark, index_path)
+    p = pinned(t_buckets, _IDX_PROP)
 
     known = read_delta(spark, t_sizes).select(id_col)
     fresh = new_docs.join(known, id_col, "left_anti")
@@ -1180,43 +1169,12 @@ def update_signature_index(
 def delete_from_signature_index(
     ids: DataFrame, index_path: str, id_col: str = "doc_id"
 ) -> None:
-    """GDPR delete propagation into the persistent LSH index — the
-    compliance companion of ``update_signature_index`` (cf. the
-    reference's MERGE-delete scrub, `05_compliance.py:100-138`): when
-    documents are deleted from the corpus, their ``buckets`` and
-    ``sizes`` rows must go too, or the index keeps generating candidate
-    pairs for ghosts (harmless to correctness ONLY because verification
-    re-reads the corpus, but each probe then wastes a join against ids
-    that can never verify — and the sizes table would block re-adding
-    a same-id document forever). Deletes are MERGE-delete transactions
-    (one per table) against the broadcast-small id set.
-
-    Crash ordering — sizes FIRST, buckets second (the mirror of the
-    append path's buckets-first):
-      - crash after the sizes delete: the id's bucket rows survive as
-        ghosts — probes stay correct (verification derives everything
-        from the corpus), and replaying the delete removes them
-        (MERGE-delete of absent rows is a no-op, so replay is
-        idempotent); if the id is re-appended first instead, update
-        sees it as UNKNOWN (sizes row gone), re-signs it, and the
-        duplicate bucket rows are absorbed by candidate ``.distinct()``.
-      - buckets-first would instead strand a crash as "known but
-        bucketless": the sizes row survives, so a future re-append
-        skips the id and it becomes permanently unfindable.
-    """
-    from ..table import DeltaTable
-
-    spark = ids.sparkSession
+    """GDPR delete propagation: MERGE-delete the ids' ``sizes`` rows,
+    then their ``buckets`` rows (ordering: operators/_index.py). Ghost
+    bucket rows from a torn delete only cost a probe wasted candidates:
+    verification re-reads the corpus, where the id is gone."""
     t_buckets, t_sizes, _ = _index_tables(index_path)
-    doomed = ids.select(id_col).distinct()
-    for path in (t_sizes, t_buckets):  # sizes FIRST — see ordering note
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(doomed, f"t.{id_col} = s.{id_col}", source_alias="s")
-            .whenMatchedDelete()
-            .execute()
-        )
+    delete_ids(ids, id_col, t_sizes, t_buckets)
 
 
 def sync_signature_index_from_cdf(
@@ -1226,69 +1184,20 @@ def sync_signature_index_from_cdf(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Maintain the signature index from the corpus Delta table's CHANGE
-    FEED — the production loop that keeps dedup infrastructure aligned
-    with a mutating 100 TB corpus (appends, repricing updates, GDPR
-    MERGE-deletes) without re-shingling anything but what the mutations
-    touched:
+    """Maintain the signature index from the corpus Delta table's change
+    feed (``_index.sync_from_cdf``): re-sign only the docs the commits
+    since the pinned ``syncedVersion`` touched (appends, updates, GDPR
+    deletes), under the frozen params. Returns the number of touched
+    ids (0 = already in sync)."""
 
-      1. read ``table_changes(corpus, syncedVersion + 1, current)`` —
-         bounded by what changed, not by table size;
-      2. ``delete_from_signature_index`` for every touched id (drops
-         stale signatures of updated AND deleted docs; no-op replay);
-      3. ``update_signature_index`` over the current corpus semi-joined
-         to the touched ids (re-signs survivors — their sizes rows are
-         gone after step 2, so they are re-signed under the frozen
-         params; ids deleted from the corpus simply aren't there);
-      4. pin ``syncedVersion = current`` on the buckets table (a
-         transactional property commit, the LAST step — a crash
-         anywhere earlier replays 1-3 from the old version, and both
-         mutation steps are idempotent).
+    def reindex(touched: DataFrame, docs: DataFrame) -> None:
+        delete_from_signature_index(touched, index_path, id_col)
+        update_signature_index(docs, text_col, id_col, index_path)
 
-    The build must record its baseline (``build_signature_index(...,
-    corpus_version=v)``); an index built from a non-versioned DataFrame
-    defaults to 0, which is only correct if it was built from the v0
-    snapshot. Returns the number of touched ids (0 = already in sync).
-    """
-    from ..cdf import table_changes
-    from ..log import DeltaLog
-    from ..reader import read_delta
-    from ..table import DeltaTable
-
-    t_buckets, _, _ = _index_tables(index_path)
-    conf = DeltaLog(t_buckets).snapshot().metadata.configuration
-    synced = int(conf.get(_IDX_PROP + "syncedVersion", "0"))
-    current = DeltaLog(corpus_path).latest_version()
-    if current <= synced:
-        return 0
-    # persist the touched-ids set: the CDF file-multiset diff is the
-    # expensive scan here, and without the cache every consumer (the
-    # count, each index table's MERGE-delete, the re-sign semi-join)
-    # would recompute it — ids-only, so the cache is mutation-sized,
-    # never corpus-sized
-    touched = (
-        table_changes(spark, corpus_path, synced + 1, current)
-        .select(id_col)
-        .distinct()
-    ).persist()
-    try:
-        n_touched = touched.count()
-        if n_touched:
-            delete_from_signature_index(touched, index_path, id_col)
-            update_signature_index(
-                read_delta(spark, corpus_path).join(
-                    touched, id_col, "left_semi"
-                ),
-                text_col,
-                id_col,
-                index_path,
-            )
-        DeltaTable.forPath(spark, t_buckets).set_properties(
-            {_IDX_PROP + "syncedVersion": str(current)}
-        )
-    finally:
-        touched.unpersist()
-    return n_touched
+    return sync_from_cdf(
+        spark, corpus_path, _index_tables(index_path)[0], _IDX_PROP,
+        id_col, reindex,
+    )
 
 
 def near_dups_against_index(
@@ -1316,7 +1225,7 @@ def near_dups_against_index(
     # bookkeeping ONLY — verification derives corpus set sizes from the
     # corpus itself so a torn update can never silently drop pairs
     t_buckets, _, t_hot = _index_tables(index_path)
-    p = _index_params(spark, index_path)
+    p = pinned(t_buckets, _IDX_PROP)
 
     sh_b = _cache_shingles(word_shingles(batch, text_col, id_col, p["n"]))
     hashed_b = _hash_shingles(sh_b, id_col).join(
@@ -1506,11 +1415,9 @@ def winnow_dup_pairs(
 
 # ---------------------------------------------------------------------------
 # Persistent winnowing fingerprint index — the copy-detection member of
-# the index-maintenance family (LSH signatures: build/update/delete/
-# sync above; BM25 postings: operators/text.py; PQ codes:
-# operators/similarity.py). Same lifecycle contracts: frozen params
-# pinned as table properties, idempotent replays, MERGE-delete GDPR
-# propagation, CDF-driven repair with a last-step version pin.
+# the index-maintenance family, whose lifecycle (pinned params,
+# idempotent replays, MERGE-delete GDPR propagation, CDF sync with a
+# last-step version pin) lives once in operators/_index.py.
 # ---------------------------------------------------------------------------
 
 _WIN_PROP = "dls.winnowIndex."  # table-property prefix on the fps table
@@ -1524,13 +1431,6 @@ def _winnow_tables(index_path: str) -> tuple[str, str, str]:
     )
 
 
-def _winnow_params(spark, index_path: str) -> dict:
-    from ..log import DeltaLog
-
-    conf = DeltaLog(_winnow_tables(index_path)[0]).snapshot().metadata.configuration
-    return {key: int(conf[_WIN_PROP + key]) for key in ("k", "w", "maxDf")}
-
-
 def build_winnow_index(
     corpus: DataFrame,
     text_col: str,
@@ -1539,7 +1439,7 @@ def build_winnow_index(
     k: int = 5,
     w: int = 4,
     max_df: int = 100,
-    corpus_version: int | None = None,
+    corpus_version: int = 0,
 ) -> None:
     """Build the persistent winnowing index: three versioned tables
     under ``index_path`` — fingerprint rows, per-doc capped fingerprint
@@ -1570,13 +1470,7 @@ def build_winnow_index(
     kept = fps.join(
         F.broadcast(read_delta(spark, t_hot)), "fp", "left_anti"
     )
-    props = {
-        _WIN_PROP + "k": str(k),
-        _WIN_PROP + "w": str(w),
-        _WIN_PROP + "maxDf": str(max_df),
-    }
-    if corpus_version is not None:
-        props[_WIN_PROP + "syncedVersion"] = str(corpus_version)
+    props = pin(_WIN_PROP, {"k": k, "w": w, "maxDf": max_df}, corpus_version)
     write_delta(kept, t_fps, mode="overwrite", properties=props)
     write_delta(
         kept.groupBy(id_col).agg(F.count("*").alias("n_fp")),
@@ -1605,7 +1499,7 @@ def update_winnow_index(
 
     spark = new_docs.sparkSession
     t_fps, t_sizes, t_hot = _winnow_tables(index_path)
-    p = _winnow_params(spark, index_path)
+    p = pinned(t_fps, _WIN_PROP)
     known = read_delta(spark, t_sizes).select(id_col)
     fresh = new_docs.join(known, id_col, "left_anti")
     from ._cache import register_persisted
@@ -1627,25 +1521,12 @@ def update_winnow_index(
 def delete_from_winnow_index(
     ids: DataFrame, index_path: str, id_col: str = "doc_id"
 ) -> None:
-    """GDPR delete propagation: MERGE-delete the ids' rows from both
-    tables, sizes FIRST (the mirror of the append path — a crash after
-    the sizes delete leaves ghost fps rows that a replay removes and
-    that countDistinct probes tolerate; fps-first would strand the ids
-    as known-but-fingerprintless, permanently unfindable after
-    re-append)."""
-    from ..table import DeltaTable
-
-    spark = ids.sparkSession
+    """GDPR delete propagation: MERGE-delete the ids' ``sizes`` rows,
+    then their ``fps`` rows (ordering: operators/_index.py). Ghost or
+    duplicate fps rows from a torn delete or append cannot inflate a
+    probe's score: n_shared is countDistinct(fp)."""
     t_fps, t_sizes, _ = _winnow_tables(index_path)
-    doomed = ids.select(id_col).distinct()
-    for path in (t_sizes, t_fps):  # sizes FIRST — see ordering note
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(doomed, f"t.{id_col} = s.{id_col}", source_alias="s")
-            .whenMatchedDelete()
-            .execute()
-        )
+    delete_ids(ids, id_col, t_sizes, t_fps)
 
 
 def sync_winnow_index_from_cdf(
@@ -1655,47 +1536,18 @@ def sync_winnow_index_from_cdf(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Maintain the winnow index from the corpus change feed — the
-    copy-detection twin of ``sync_signature_index_from_cdf`` and the
-    same four-step loop: (1) table_changes bounded by what changed,
-    (2) delete stale rows for every touched id, (3) re-fingerprint the
-    surviving touched docs from the current corpus, (4) pin
-    ``syncedVersion`` LAST so a crash anywhere replays idempotent
-    steps. Returns the number of touched ids."""
-    from ..cdf import table_changes
-    from ..log import DeltaLog
-    from ..reader import read_delta
-    from ..table import DeltaTable
+    """Maintain the winnow index from the corpus change feed
+    (``_index.sync_from_cdf``): re-fingerprint only the touched docs.
+    Returns the number of touched ids."""
 
-    t_fps, _, _ = _winnow_tables(index_path)
-    conf = DeltaLog(t_fps).snapshot().metadata.configuration
-    synced = int(conf.get(_WIN_PROP + "syncedVersion", "0"))
-    current = DeltaLog(corpus_path).latest_version()
-    if current <= synced:
-        return 0
-    touched = (
-        table_changes(spark, corpus_path, synced + 1, current)
-        .select(id_col)
-        .distinct()
-    ).persist()
-    try:
-        n_touched = touched.count()
-        if n_touched:
-            delete_from_winnow_index(touched, index_path, id_col)
-            update_winnow_index(
-                read_delta(spark, corpus_path).join(
-                    touched, id_col, "left_semi"
-                ),
-                text_col,
-                id_col,
-                index_path,
-            )
-        DeltaTable.forPath(spark, t_fps).set_properties(
-            {_WIN_PROP + "syncedVersion": str(current)}
-        )
-    finally:
-        touched.unpersist()
-    return n_touched
+    def reindex(touched: DataFrame, docs: DataFrame) -> None:
+        delete_from_winnow_index(touched, index_path, id_col)
+        update_winnow_index(docs, text_col, id_col, index_path)
+
+    return sync_from_cdf(
+        spark, corpus_path, _winnow_tables(index_path)[0], _WIN_PROP,
+        id_col, reindex,
+    )
 
 
 def near_dups_against_winnow_index(
@@ -1717,7 +1569,7 @@ def near_dups_against_winnow_index(
 
     spark = batch.sparkSession
     t_fps, t_sizes, t_hot = _winnow_tables(index_path)
-    p = _winnow_params(spark, index_path)
+    p = pinned(t_fps, _WIN_PROP)
     bfps = register_persisted(
         winnow_fingerprints(batch, text_col, id_col, p["k"], p["w"])
         .join(F.broadcast(read_delta(spark, t_hot)), "fp", "left_anti")
@@ -2127,7 +1979,7 @@ def exact_substring_scrub(
 # ---------------------------------------------------------------------------
 # Persistent exact-substring gram index — the incremental tier of the
 # exact-substring dedup above, joining the index-maintenance family
-# (LSH signatures, winnow fingerprints, BM25 postings, PQ codes).
+# (lifecycle: operators/_index.py).
 # Postings-only design: the index stores positional k-gram rows plus
 # per-doc sizes; NO count table is maintained, because the probe only
 # ever needs (a) EXISTENCE of a gram in the indexed corpus and (b)
@@ -2147,20 +1999,13 @@ def _substring_tables(index_path: str) -> tuple[str, str]:
     )
 
 
-def _substring_params(spark, index_path: str) -> dict:
-    from ..log import DeltaLog
-
-    conf = DeltaLog(_substring_tables(index_path)[0]).snapshot().metadata.configuration
-    return {"k": int(conf[_SUB_PROP + "k"])}
-
-
 def build_substring_index(
     corpus: DataFrame,
     text_col: str,
     id_col: str,
     index_path: str,
     k: int = 8,
-    corpus_version: int | None = None,
+    corpus_version: int = 0,
 ) -> None:
     """Build the persistent gram index: positional k-gram postings and
     the per-doc size registry, with ``k`` pinned as a table property
@@ -2172,9 +2017,7 @@ def build_substring_index(
         raise ValueError(f"k must be >= 1, got {k}")
     t_grams, t_sizes = _substring_tables(index_path)
     grams = _position_grams(corpus, text_col, id_col, k)
-    props = {_SUB_PROP + "k": str(k)}
-    if corpus_version is not None:
-        props[_SUB_PROP + "syncedVersion"] = str(corpus_version)
+    props = pin(_SUB_PROP, {"k": k}, corpus_version)
     write_delta(grams, t_grams, mode="overwrite", properties=props)
     write_delta(
         grams.groupBy(id_col).agg(F.count("*").alias("n_grams")),
@@ -2198,7 +2041,7 @@ def update_substring_index(
 
     spark = new_docs.sparkSession
     t_grams, t_sizes = _substring_tables(index_path)
-    k = _substring_params(spark, index_path)["k"]
+    k = pinned(t_grams, _SUB_PROP)["k"]
     known = read_delta(spark, t_sizes).select(id_col)
     fresh = new_docs.join(known, id_col, "left_anti")
     from ._cache import register_persisted
@@ -2218,24 +2061,12 @@ def update_substring_index(
 def delete_from_substring_index(
     ids: DataFrame, index_path: str, id_col: str = "doc_id"
 ) -> None:
-    """GDPR delete propagation: MERGE-delete the ids' rows from both
-    tables, sizes FIRST (mirror of the append ordering — a crash after
-    the sizes delete leaves ghost gram rows that a replay removes and
-    that existence probes tolerate; grams-first would strand the ids
-    as known-but-gramless, unfindable after re-append)."""
-    from ..table import DeltaTable
-
-    spark = ids.sparkSession
+    """GDPR delete propagation: MERGE-delete the ids' ``sizes`` rows,
+    then their ``grams`` rows (ordering: operators/_index.py). Ghost or
+    duplicate gram rows cannot change a verdict: the probe only asks
+    whether a gram exists in the index."""
     t_grams, t_sizes = _substring_tables(index_path)
-    doomed = ids.select(id_col).distinct()
-    for path in (t_sizes, t_grams):  # sizes FIRST — see ordering note
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(doomed, f"t.{id_col} = s.{id_col}", source_alias="s")
-            .whenMatchedDelete()
-            .execute()
-        )
+    delete_ids(ids, id_col, t_sizes, t_grams)
 
 
 def sync_substring_index_from_cdf(
@@ -2245,46 +2076,18 @@ def sync_substring_index_from_cdf(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Maintain the gram index from the corpus change feed — the same
-    four-step loop as the LSH/winnow twins: (1) table_changes bounded
-    by what changed, (2) delete stale rows for every touched id,
-    (3) re-gram the surviving touched docs from the current corpus,
-    (4) pin ``syncedVersion`` LAST so a crash anywhere replays
-    idempotent steps. Returns the number of touched ids."""
-    from ..cdf import table_changes
-    from ..log import DeltaLog
-    from ..reader import read_delta
-    from ..table import DeltaTable
+    """Maintain the gram index from the corpus change feed
+    (``_index.sync_from_cdf``): re-gram only the touched docs. Returns
+    the number of touched ids."""
 
-    t_grams, _ = _substring_tables(index_path)
-    conf = DeltaLog(t_grams).snapshot().metadata.configuration
-    synced = int(conf.get(_SUB_PROP + "syncedVersion", "0"))
-    current = DeltaLog(corpus_path).latest_version()
-    if current <= synced:
-        return 0
-    touched = (
-        table_changes(spark, corpus_path, synced + 1, current)
-        .select(id_col)
-        .distinct()
-    ).persist()
-    try:
-        n_touched = touched.count()
-        if n_touched:
-            delete_from_substring_index(touched, index_path, id_col)
-            update_substring_index(
-                read_delta(spark, corpus_path).join(
-                    touched, id_col, "left_semi"
-                ),
-                text_col,
-                id_col,
-                index_path,
-            )
-        DeltaTable.forPath(spark, t_grams).set_properties(
-            {_SUB_PROP + "syncedVersion": str(current)}
-        )
-    finally:
-        touched.unpersist()
-    return n_touched
+    def reindex(touched: DataFrame, docs: DataFrame) -> None:
+        delete_from_substring_index(touched, index_path, id_col)
+        update_substring_index(docs, text_col, id_col, index_path)
+
+    return sync_from_cdf(
+        spark, corpus_path, _substring_tables(index_path)[0], _SUB_PROP,
+        id_col, reindex,
+    )
 
 
 def spans_against_index(
@@ -2307,7 +2110,7 @@ def spans_against_index(
 
     spark = batch.sparkSession
     t_grams, _ = _substring_tables(index_path)
-    k = _substring_params(spark, index_path)["k"]
+    k = pinned(t_grams, _SUB_PROP)["k"]
     from ._cache import register_persisted
 
     grams = register_persisted(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._cache import register_persisted
+from ._index import delete_ids, pin, pinned, sync_from_cdf
 
 
 def _dot(a, b):
@@ -1251,7 +1252,8 @@ def pq_topk(
 # Persistent IVFPQ index: quantizers trained once and FROZEN as Delta
 # tables, every vector encoded once into (cell, m codes) rows — at 10^9
 # vectors the corpus is never re-encoded per query batch, and the whole
-# searchable index is m bytes + a cell id per vector.
+# searchable index is m bytes + a cell id per vector. Maintenance
+# lifecycle: operators/_index.py.
 # --------------------------------------------------------------------------
 
 _PQ_PROP = "dls.pqIndex."  # table-property prefix on the codes table
@@ -1263,19 +1265,6 @@ def _pq_index_tables(index_path: str) -> tuple[str, str, str]:
         f"{index_path}/codebook",  # (s, code, cv) frozen PQ centroids
         f"{index_path}/cells",     # (cell, cv) frozen coarse centroids
     )
-
-
-def _pq_index_params(spark, index_path: str) -> dict:
-    from ..log import DeltaLog
-
-    conf = DeltaLog(_pq_index_tables(index_path)[0]).snapshot().metadata.configuration
-    params = {
-        key: int(conf[_PQ_PROP + key])
-        for key in ("n_cells", "m", "k_codes", "dim")
-    }
-    # pre-residual indexes carry no flag: raw-vector encoding
-    params["residual"] = conf.get(_PQ_PROP + "residual", "false") == "true"
-    return params
 
 
 def _one_row(df: DataFrame, *cols: str) -> DataFrame:
@@ -1649,10 +1638,8 @@ def build_pq_index(
     conventions with the stored codes.
 
     ``corpus_version`` records the Delta version of the corpus this
-    build reflects (the ``sync_pq_index_from_cdf`` baseline — cf.
-    build_signature_index); an index built from a non-versioned
-    DataFrame defaults to 0, which is only correct if that DataFrame
-    was the corpus's v0 snapshot.
+    build reflects (the ``sync_pq_index_from_cdf`` baseline; see
+    operators/_index.py).
 
     ``train_iters`` > 0 switches the quantizers to k-means TRAINED
     centroids (coarse + per-subspace codebooks) on a bounded
@@ -1769,15 +1756,14 @@ def build_pq_index(
         encoded,
         t_codes,
         mode="overwrite",
-        properties={
-            _PQ_PROP + "n_cells": str(n_cells),
-            _PQ_PROP + "m": str(m),
-            _PQ_PROP + "k_codes": str(k_codes),
-            _PQ_PROP + "dim": str(dim),
-            _PQ_PROP + "residual": str(residual).lower(),
-            _PQ_PROP + "trainIters": str(train_iters),
-            _PQ_PROP + "syncedVersion": str(corpus_version),
-        },
+        properties=pin(
+            _PQ_PROP,
+            dict(
+                n_cells=n_cells, m=m, k_codes=k_codes, dim=dim,
+                residual=residual, trainIters=train_iters,
+            ),
+            corpus_version,
+        ),
     )
 
 
@@ -1801,7 +1787,8 @@ def update_pq_index(
 
     spark = new_vectors.sparkSession
     t_codes, t_codebook, t_cells = _pq_index_tables(index_path)
-    p = _pq_index_params(spark, index_path)
+    p = pinned(t_codes, _PQ_PROP)
+    p.setdefault("residual", False)  # pre-residual indexes: raw vectors
     subdim = p["dim"] // p["m"]
 
     known = read_delta(spark, t_codes).select(id_col)
@@ -1836,25 +1823,10 @@ def update_pq_index(
 def delete_from_pq_index(
     ids: DataFrame, index_path: str, id_col: str = "vec_id"
 ) -> None:
-    """GDPR delete propagation: MERGE-delete the ids' codes rows (one
-    atomic transaction; replay of absent ids is a no-op, and a deleted
-    id can be re-appended because idempotence keys on the codes table
-    itself)."""
-    from ..table import DeltaTable
-
-    spark = ids.sparkSession
-    t_codes, _, _ = _pq_index_tables(index_path)
-    (
-        DeltaTable.forPath(spark, t_codes)
-        .alias("t")
-        .merge(
-            ids.select(id_col).distinct(),
-            f"t.{id_col} = s.{id_col}",
-            source_alias="s",
-        )
-        .whenMatchedDelete()
-        .execute()
-    )
+    """GDPR delete propagation: MERGE-delete the ids' codes rows, one
+    atomic transaction (the codes table is its own registry, so a torn
+    state cannot arise and a deleted id can be re-appended)."""
+    delete_ids(ids, id_col, _pq_index_tables(index_path)[0])
 
 
 def sync_pq_index_from_cdf(
@@ -1865,74 +1837,22 @@ def sync_pq_index_from_cdf(
     vec_col: str = "embedding",
     method: str = "arrow",
 ) -> int:
-    """Maintain the PQ index from the corpus Delta table's CHANGE FEED
-    — the ANN twin of ``sync_signature_index_from_cdf`` (dedup.py): the
-    production loop that keeps the searchable codes aligned with a
-    mutating corpus (appends, embedding refreshes, GDPR MERGE-deletes)
-    without re-encoding anything but what the mutations touched:
+    """Maintain the PQ index from the corpus Delta table's change feed
+    (``_index.sync_from_cdf``): re-encode only the touched vectors under
+    the frozen quantizers (appends, embedding refreshes, GDPR deletes).
+    A crash between the delete and the update leaves the touched ids
+    absent until the replayed sync re-encodes them, never present with
+    stale codes. Returns the number of touched ids (0 = already in
+    sync)."""
 
-      1. read ``table_changes(corpus, syncedVersion + 1, current)`` —
-         bounded by what changed, not by table size;
-      2. ``delete_from_pq_index`` for every touched id (drops stale
-         codes of updated AND deleted vectors; no-op replay);
-      3. ``update_pq_index`` over the current corpus semi-joined to the
-         touched ids (re-encodes survivors under the FROZEN quantizers
-         — their codes rows are gone after step 2, so the known-id skip
-         doesn't mask them; ids deleted from the corpus simply aren't
-         there);
-      4. pin ``syncedVersion = current`` on the codes table (a
-         transactional property commit, the LAST step — a crash
-         anywhere earlier replays 1-3 from the old version, and both
-         mutation steps are idempotent).
+    def reindex(touched: DataFrame, docs: DataFrame) -> None:
+        delete_from_pq_index(touched, index_path, id_col)
+        update_pq_index(docs, index_path, id_col, vec_col, method=method)
 
-    Ordering note: delete-before-update is the crash-safe order here
-    for the same reason the LSH index deletes sizes first — a crash
-    between the steps leaves the touched ids ABSENT (queries simply
-    don't see them until the replayed sync re-encodes), never present
-    with stale codes the frozen quantizers no longer describe.
-
-    The build records its baseline via ``build_pq_index(...,
-    corpus_version=v)``. Returns the number of touched ids (0 = already
-    in sync)."""
-    from ..cdf import table_changes
-    from ..log import DeltaLog
-    from ..reader import read_delta
-    from ..table import DeltaTable
-
-    t_codes, _, _ = _pq_index_tables(index_path)
-    conf = DeltaLog(t_codes).snapshot().metadata.configuration
-    synced = int(conf.get(_PQ_PROP + "syncedVersion", "0"))
-    current = DeltaLog(corpus_path).latest_version()
-    if current <= synced:
-        return 0
-    # persist the touched-ids set: the CDF diff would otherwise be
-    # recomputed by the count, each MERGE-delete, and the re-encode
-    # semi-join (cf. sync_signature_index_from_cdf) — ids-only cache,
-    # mutation-sized, never corpus-sized
-    touched = (
-        table_changes(spark, corpus_path, synced + 1, current)
-        .select(id_col)
-        .distinct()
-    ).persist()
-    try:
-        n_touched = touched.count()
-        if n_touched:
-            delete_from_pq_index(touched, index_path, id_col)
-            update_pq_index(
-                read_delta(spark, corpus_path).join(
-                    touched, id_col, "left_semi"
-                ),
-                index_path,
-                id_col,
-                vec_col,
-                method=method,
-            )
-        DeltaTable.forPath(spark, t_codes).set_properties(
-            {_PQ_PROP + "syncedVersion": str(current)}
-        )
-    finally:
-        touched.unpersist()
-    return n_touched
+    return sync_from_cdf(
+        spark, corpus_path, _pq_index_tables(index_path)[0], _PQ_PROP,
+        id_col, reindex,
+    )
 
 
 def query_pq_index(
@@ -1971,7 +1891,8 @@ def query_pq_index(
 
     spark = queries.sparkSession
     t_codes, t_codebook, t_cells = _pq_index_tables(index_path)
-    p = _pq_index_params(spark, index_path)
+    p = pinned(t_codes, _PQ_PROP)
+    p.setdefault("residual", False)  # pre-residual indexes: raw vectors
     m, k_codes = p["m"], p["k_codes"]
     subdim = p["dim"] // m
 

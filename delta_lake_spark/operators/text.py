@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 # summaries stay persisted so lazy consumers built before a
 # materialization never lose their cache
 from ._cache import register_persisted
+from ._index import delete_ids, pin, sync_from_cdf
 
 # token pattern: word | number | single non-space symbol (BPE-ish split)
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -1428,8 +1429,9 @@ def bigram_lm_score(
 # Persistent BM25 text index: the keyword-retrieval third of the
 # persistent corpus-state story (LSH signature index for dedup,
 # IVFPQ index for ANN, THIS for lexical search) — the inverted index
-# is computed once and maintained incrementally, so every query batch
-# touches stored posting rows instead of re-tokenizing 100 TB of text.
+# is computed once and maintained incrementally (lifecycle:
+# operators/_index.py), so every query batch touches stored posting
+# rows instead of re-tokenizing 100 TB of text.
 # --------------------------------------------------------------------------
 
 _TXT_PROP = "dls.textIndex."  # table-property prefix on the postings table
@@ -1469,9 +1471,8 @@ def build_text_index(
     """Build the persistent inverted index: two versioned Delta tables
     under ``index_path`` — per-(term, doc) term frequencies and per-doc
     token lengths — with the tokenizer convention and the corpus
-    baseline version pinned as table properties (``corpus_version`` is
-    the ``sync_text_index_from_cdf`` baseline, cf.
-    build_signature_index / build_pq_index).
+    baseline version (``corpus_version``, see operators/_index.py)
+    pinned as table properties.
 
     The postings table is range-partitioned AND sorted by term at
     write, so every file carries a tight term min/max — a query's
@@ -1490,10 +1491,9 @@ def build_text_index(
         ),
         t_postings,
         mode="overwrite",
-        properties={
-            _TXT_PROP + "tokenizer": _TXT_TOKENIZER,
-            _TXT_PROP + "syncedVersion": str(corpus_version),
-        },
+        properties=pin(
+            _TXT_PROP, {"tokenizer": _TXT_TOKENIZER}, corpus_version
+        ),
     )
     write_delta(lengths, t_lengths, mode="overwrite")
 
@@ -1526,29 +1526,13 @@ def update_text_index(
 def delete_from_text_index(
     ids: DataFrame, index_path: str, id_col: str = "doc_id"
 ) -> None:
-    """GDPR delete propagation: MERGE-delete the ids' lengths rows
-    FIRST, postings second (the mirror of the append path's
-    postings-first, and the same crash reasoning as the LSH index's
-    sizes-first): a crash after the lengths delete leaves ghost posting
-    rows that scoring's inner lengths-join makes invisible — results,
-    document frequencies, and N/avgdl are already exactly the surviving
-    corpus's — and replaying the delete removes them (MERGE-delete of
-    absent rows is a no-op). A re-appended id is re-indexed because its
-    lengths row is gone, with the duplicate postings absorbed by the
-    query-side max."""
-    from ..table import DeltaTable
-
-    spark = ids.sparkSession
+    """GDPR delete propagation: MERGE-delete the ids' ``lengths`` rows,
+    then their ``postings`` rows (ordering: operators/_index.py). Ghost
+    postings from a torn delete are invisible: scoring inner-joins the
+    lengths table, so results, document frequencies and N/avgdl are
+    already exactly the surviving corpus's."""
     t_postings, t_lengths = _text_index_tables(index_path)
-    doomed = ids.select(id_col).distinct()
-    for path in (t_lengths, t_postings):  # lengths FIRST — see above
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(doomed, f"t.{id_col} = s.{id_col}", source_alias="s")
-            .whenMatchedDelete()
-            .execute()
-        )
+    delete_ids(ids, id_col, t_lengths, t_postings)
 
 
 def sync_text_index_from_cdf(
@@ -1558,54 +1542,19 @@ def sync_text_index_from_cdf(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> int:
-    """Maintain the inverted index from the corpus Delta table's CHANGE
-    FEED — the lexical twin of sync_signature_index_from_cdf /
-    sync_pq_index_from_cdf: read ``table_changes(corpus,
-    syncedVersion + 1, current)``, delete every touched id's index rows
-    (stale postings of updated AND deleted docs), re-index the touched
-    survivors from the current corpus, and pin ``syncedVersion =
-    current`` on the postings table LAST (a crash anywhere earlier
-    replays the loop from the old version; both mutation steps are
-    idempotent). Maintenance cost scales with the mutations' touched
-    documents, never the corpus. Returns the number of touched ids."""
-    from ..cdf import table_changes
-    from ..log import DeltaLog
-    from ..reader import read_delta
-    from ..table import DeltaTable
+    """Maintain the inverted index from the corpus Delta table's change
+    feed (``_index.sync_from_cdf``): re-tokenize only the touched docs,
+    so maintenance cost scales with the mutations, never the corpus.
+    Returns the number of touched ids."""
 
-    t_postings, _ = _text_index_tables(index_path)
-    conf = DeltaLog(t_postings).snapshot().metadata.configuration
-    synced = int(conf.get(_TXT_PROP + "syncedVersion", "0"))
-    current = DeltaLog(corpus_path).latest_version()
-    if current <= synced:
-        return 0
-    # persist the touched-ids set: the CDF diff would otherwise be
-    # recomputed by the count, both MERGE-deletes, and the reindex
-    # semi-join (cf. sync_signature_index_from_cdf) — ids-only cache,
-    # mutation-sized, never corpus-sized
-    touched = (
-        table_changes(spark, corpus_path, synced + 1, current)
-        .select(id_col)
-        .distinct()
-    ).persist()
-    try:
-        n_touched = touched.count()
-        if n_touched:
-            delete_from_text_index(touched, index_path, id_col)
-            update_text_index(
-                read_delta(spark, corpus_path).join(
-                    touched, id_col, "left_semi"
-                ),
-                text_col,
-                id_col,
-                index_path,
-            )
-        DeltaTable.forPath(spark, t_postings).set_properties(
-            {_TXT_PROP + "syncedVersion": str(current)}
-        )
-    finally:
-        touched.unpersist()
-    return n_touched
+    def reindex(touched: DataFrame, docs: DataFrame) -> None:
+        delete_from_text_index(touched, index_path, id_col)
+        update_text_index(docs, text_col, id_col, index_path)
+
+    return sync_from_cdf(
+        spark, corpus_path, _text_index_tables(index_path)[0], _TXT_PROP,
+        id_col, reindex,
+    )
 
 
 def query_text_index(

@@ -730,12 +730,15 @@ def stream_corpus_with_text_index(
         # sync is a no-op when the pin already covers the corpus head,
         # so replays cost one version compare
         if not DeltaLog(f"{index_path}/postings").exists():
+            # build from the version it pins: a commit landing between
+            # a latest read and a later pin would never be indexed
+            v = DeltaLog(table_path).latest_version()
             build_text_index(
-                read_delta(spark, table_path),
+                read_delta(spark, table_path, version=v),
                 text_col,
                 id_col,
                 index_path,
-                corpus_version=DeltaLog(table_path).latest_version(),
+                corpus_version=v,
             )
         else:
             sync_text_index_from_cdf(

@@ -7,6 +7,7 @@ directly:  python tests/oracle_harness.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 TABLES = [
@@ -147,7 +148,9 @@ def compare(name: str, spark_df, con, oracle_sql: str) -> tuple[bool, str]:
 def main():
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    # gate this checkout's queries, wherever it is cloned
+    here = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.dirname(here))
     import __spark_entry__ as entry_mod
 
     # --json PATH: also write every query's record (gate_record's

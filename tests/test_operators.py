@@ -24,12 +24,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dedup_idempotent(spark, docs):
@@ -5143,6 +5147,149 @@ def test_substring_index_cdf_sync(spark, tmp_path):
     )
     assert get(idx, 0) == get(rebuilt, 0)
     assert get(idx, 1) == get(rebuilt, 1)
+
+
+def _index_family(name):
+    """(build(corpus, index_path), sync(spark, corpus_path, index_path),
+    primary table, property prefix) of one persistent index family."""
+    from delta_lake_spark.operators import dedup, similarity, text
+
+    if name == "pq":
+        return (
+            lambda c, i: similarity.build_pq_index(
+                c, i, n_cells=2, m=4, k_codes=4, id_col="doc_id", dim=16
+            ),
+            lambda s, p, i: similarity.sync_pq_index_from_cdf(
+                s, p, i, id_col="doc_id"
+            ),
+            "codes",
+            similarity._PQ_PROP,
+        )
+    mod, kw, primary, prefix = {
+        "signature": (dedup, {"max_doc_freq": None}, "buckets", dedup._IDX_PROP),
+        "winnow": (dedup, {}, "fps", dedup._WIN_PROP),
+        "substring": (dedup, {"k": 5}, "grams", dedup._SUB_PROP),
+        "text": (text, {}, "postings", text._TXT_PROP),
+    }[name]
+    build = getattr(mod, f"build_{name}_index")
+    return (
+        lambda c, i: build(c, "text", "doc_id", i, **kw),
+        getattr(mod, f"sync_{name}_index_from_cdf"),
+        primary,
+        prefix,
+    )
+
+
+@pytest.mark.parametrize(
+    "family", ["signature", "winnow", "substring", "text", "pq"]
+)
+def test_index_sync_contract(spark, tmp_path, family):
+    """Every persistent index syncs the same way: build at v0; append,
+    update and delete in the corpus; one sync re-indexes exactly the
+    touched ids, a replay is a no-op, the pin reaches the corpus head,
+    and the primary table holds exactly the live corpus ids."""
+    from delta_lake_spark.log import DeltaLog
+    from delta_lake_spark.operators._index import pinned
+    from delta_lake_spark.reader import read_delta
+    from delta_lake_spark.table import DeltaTable
+    from delta_lake_spark.writer import write_delta
+
+    build, sync, primary, prefix = _index_family(family)
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+
+    def rows(ids, tag):
+        return spark.createDataFrame(
+            [
+                (
+                    i,
+                    f"{tag} {i} " + " ".join(words[i % 10:] + words[: i % 10]),
+                    [float((i * 7 + j) % 5) for j in range(16)],
+                )
+                for i in ids
+            ],
+            "doc_id long, text string, embedding array<double>",
+        )
+
+    corpus = str(tmp_path / "corpus")
+    write_delta(rows(range(8), "doc"), corpus)  # v0
+    idx = str(tmp_path / "idx")
+    build(read_delta(spark, corpus), idx)
+    write_delta(rows(range(100, 103), "new"), corpus, mode="append")  # v1
+    table = DeltaTable.forPath(spark, corpus)
+    table.update(
+        "doc_id = 1",
+        {"text": "'one rewritten with entirely different words in it now'"},
+    )  # v2
+    table.delete("doc_id = 2")  # v3
+
+    assert sync(spark, corpus, idx) == 5  # 3 appended, 1 updated, 1 deleted
+    assert sync(spark, corpus, idx) == 0
+    assert (
+        pinned(f"{idx}/{primary}", prefix)["syncedVersion"]
+        == DeltaLog(corpus).latest_version()
+    )
+    live = {r.doc_id for r in read_delta(spark, corpus).collect()}
+    indexed = {
+        r.doc_id
+        for r in read_delta(spark, f"{idx}/{primary}")
+        .select("doc_id")
+        .distinct()
+        .collect()
+    }
+    assert indexed == live
+
+
+def test_index_sync_reindexes_the_version_it_pins(spark, tmp_path, monkeypatch):
+    """A commit that lands while a sync runs is left to the next sync:
+    the first sync indexes the touched doc's text as of the version it
+    pins, not whatever is latest when it re-reads the corpus, and the
+    second sync picks the competitor's change up."""
+    import delta_lake_spark.cdf as cdf
+    from delta_lake_spark.operators.text import (
+        _text_index_tables,
+        build_text_index,
+        sync_text_index_from_cdf,
+    )
+    from delta_lake_spark.reader import read_delta
+    from delta_lake_spark.table import DeltaTable
+    from delta_lake_spark.writer import write_delta
+
+    corpus = str(tmp_path / "corpus")
+    write_delta(
+        spark.createDataFrame(
+            [(i, f"alpha doc {i}") for i in range(4)],
+            "doc_id long, text string",
+        ),
+        corpus,
+    )  # v0
+    idx = str(tmp_path / "idx")
+    build_text_index(read_delta(spark, corpus), "text", "doc_id", idx)
+    table = DeltaTable.forPath(spark, corpus)
+    table.update("doc_id = 1", {"text": "'bravo pinned'"})  # v1
+
+    real = cdf.table_changes
+    raced = []
+
+    def racing(*args, **kwargs):
+        changes = real(*args, **kwargs)
+        if not raced:  # the competitor commits v2 once, mid-sync
+            raced.append(True)
+            table.update("doc_id = 1", {"text": "'charlie competitor'"})
+        return changes
+
+    monkeypatch.setattr(cdf, "table_changes", racing)
+    postings = _text_index_tables(idx)[0]
+
+    def terms():
+        return {
+            r.term
+            for r in read_delta(spark, postings).filter("doc_id = 1").collect()
+        }
+
+    assert sync_text_index_from_cdf(spark, corpus, idx) == 1
+    assert terms() == {"bravo", "pinned"}
+    assert sync_text_index_from_cdf(spark, corpus, idx) == 1
+    assert terms() == {"charlie", "competitor"}
 
 
 def test_mixture_plan_arithmetic(spark):

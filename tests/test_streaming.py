@@ -732,6 +732,57 @@ def test_stream_corpus_with_text_index_stays_searchable(spark, tmp_path):
     assert DeltaLog(table).latest_version() == v_before  # drained: no-op
 
 
+def test_stream_corpus_with_text_index_pins_the_version_it_builds(
+    spark, tmp_path, monkeypatch
+):
+    """The sink builds the index from the corpus version it pins: a doc
+    committed between the build's corpus read and the pin reaches the
+    index through the next batch's sync instead of being skipped."""
+    import os
+
+    import delta_lake_spark.reader as reader
+    from delta_lake_spark.operators.text import _text_index_tables
+    from delta_lake_spark.streaming.incremental import (
+        stream_corpus_with_text_index,
+    )
+    from delta_lake_spark.writer import write_delta
+
+    schema = "doc_id long, text string"
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    stage = str(tmp_path / "stage")
+    for i in range(2):
+        d = f"{stage}/b{i}"
+        spark.createDataFrame(
+            [(10 * i + j, f"batch {i} doc {j} words") for j in range(3)], schema
+        ).coalesce(1).write.parquet(d)
+        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
+        os.replace(f"{d}/{part}", f"{src}/b{i}.parquet")
+
+    table = str(tmp_path / "corpus")
+    idx = str(tmp_path / "index")
+    real = reader.read_delta
+    raced = []
+
+    def racing(session, path, *args, **kwargs):
+        df = real(session, path, *args, **kwargs)
+        if path == table and not raced:  # a competitor commits once
+            raced.append(True)
+            write_delta(
+                spark.createDataFrame([(999, "competitor doc words")], schema),
+                table,
+                mode="append",
+            )
+        return df
+
+    monkeypatch.setattr(reader, "read_delta", racing)
+    stream_corpus_with_text_index(
+        spark, src, table, idx, str(tmp_path / "ckpt"), schema=schema
+    )
+    lengths = real(spark, _text_index_tables(idx)[1])
+    assert raced and 999 in {r.doc_id for r in lengths.collect()}
+
+
 def test_stream_corpus_with_vocab_sketch_tracks_and_is_replay_safe(
     spark, tmp_path
 ):
