@@ -55,8 +55,10 @@ def read_batch_delta(spark: SparkSession, delta_path: str) -> DataFrame:
 
 
 def read_batch_bronze(spark: SparkSession, bronze_path: str) -> DataFrame:
-    """Bronze rows still awaiting load (reference operations.py:52-53)."""
-    return read_delta(spark, bronze_path).filter("status = 'new'")
+    """Bronze rows still awaiting load (reference operations.py:52-53).
+    The predicate also prunes, by log stats, the files with no such row."""
+    new = "status = 'new'"
+    return read_delta(spark, bronze_path, predicate=new).filter(new)
 
 
 def transform_raw(df: DataFrame) -> DataFrame:
@@ -144,9 +146,8 @@ def repair_quarantined(
     """Re-parse quarantined bronze rows and recover the missing user_id
     by joining the (broadcast) user dimension on the event key
     (reference J1/J5 repair join, 03_silver_update.py:161-228)."""
-    quarantined = (
-        read_delta(spark, bronze_path).filter("status = 'quarantined'")
-    )
+    held = "status = 'quarantined'"
+    quarantined = read_delta(spark, bronze_path, predicate=held).filter(held)
     parsed = (
         quarantined.withColumn("nested_json", F.from_json("value", EVENT_JSON_SCHEMA))
         .select("value", "nested_json.*")

@@ -60,6 +60,7 @@ from .writer import (
     enforce_constraints,
     schema_of,
     stage_files,
+    write_order,
 )
 
 DEFAULT_RETENTION_HOURS = 168  # 7 days, matching Delta's default
@@ -153,15 +154,19 @@ class MergeBuilder:
     per Delta semantics.
 
     A MERGE with a matched update clause runs in two passes. FIND is one
-    job: the target, with file and row ids, joined to the source; matches
-    are counted per row and folded to the largest count per file, which
-    gives the touched files and the multi-match check
-    (``MergeAmbiguityError``) in one collect. REWRITE is one outer join of
-    the touched files with the source (``left``, or ``full`` when insert
-    clauses exist); each row takes the first clause that fires among the
-    matched, by-source and insert clauses. COMMIT swaps the touched files
-    for the staged ones. Without an update clause a target row may match
-    several source rows, so the rewrite keeps each matched row once
+    collect over one exchange: the target, with file and row ids, joined
+    to the source and hash-partitioned on the file column; matches are
+    counted per row and folded to the largest count per file, both on
+    that partitioning, which gives the touched files and the multi-match
+    check (``MergeAmbiguityError``) together. REWRITE is one outer join
+    of the touched files with the source (``left``, or ``full`` when
+    insert clauses exist); each row takes the first clause that fires
+    among the matched, by-source and insert clauses. Without insert
+    clauses every rewritten row comes from a touched file, so a MERGE
+    whose touched files share one partition value is written without a
+    partition shuffle (see ``stage_files``). COMMIT swaps the touched
+    files for the staged ones. Without an update clause a target row may
+    match several source rows, so the rewrite keeps each matched row once
     through a semi join, and an anti join handles the rest.
     """
 
@@ -363,8 +368,9 @@ class MergeBuilder:
             uri_to_log = {file_uri(t.path, p): p for p in snap.files}
             file_col = F.col(f"{t_alias}.{_FILE_COL}").alias(_FILE_COL)
             if updates:
-                # FIND, one job: the matches per target row, folded to
-                # the largest per file. A file is touched when it holds a
+                # FIND, one exchange: the matches per target row, folded
+                # to the largest per file; both groupings run on the one
+                # hash partitioning by file. A file is touched when it holds a
                 # matched row (or, with by-source clauses, an unmatched
                 # row one of them fires on); any row matched twice is
                 # ambiguous under an update clause.
@@ -376,6 +382,7 @@ class MergeBuilder:
                     per_file.append(F.max(unmatched_fire).alias("fire"))
                 found = (
                     with_file.join(src, cond, "left" if bys else "inner")
+                    .repartition(F.col(f"{t_alias}.{_FILE_COL}"))
                     .groupBy(*keys)
                     .agg(F.count(_SRC_COL).alias("n"))
                     .groupBy(_FILE_COL)
@@ -517,7 +524,12 @@ class MergeBuilder:
 
         schema = with_physical_names(schema, snap.metadata.configuration)
         adds = stage_files(
-            new_data, t.path, list(snap.metadata.partitionColumns), schema=schema
+            new_data,
+            t.path,
+            list(snap.metadata.partitionColumns),
+            schema=schema,
+            # without inserts every row comes from a touched file
+            sources=None if inserts else [snap.files[p] for p in touched],
         )
         return t._commit_rewrite(
             snap,
@@ -731,7 +743,8 @@ class DeltaTable:
         self, snap, adds: list[AddFile], transform=None, data_change: bool = True
     ) -> list[AddFile]:
         """REWRITE: read ``adds`` as of ``snap`` (deletion vectors
-        applied), apply ``transform`` and stage the result as new files.
+        applied), apply ``transform`` and stage the result as new files,
+        in ``transform``'s layout when ``adds`` share one partition value.
         With row tracking the rows carry their ids into the new files."""
         rt = rowtracking.enabled(snap)
         df = scan_adds(self.spark, self.path, adds, snap, row_ids=rt)
@@ -745,6 +758,7 @@ class DeltaTable:
             list(snap.metadata.partitionColumns),
             data_change=data_change,
             schema=schema_of(snap),
+            sources=adds,
         )
 
     def _rewrite_matching(
@@ -1257,6 +1271,9 @@ class DeltaTable:
                 bits=zorder_bits,
             )
 
+        # constant within one partition's rewrite; leading with it keeps
+        # the in-file sort through the partitioned write
+        pv_order = write_order(list(snap.metadata.partitionColumns))
         removes: list[str] = []
         all_adds: list[AddFile] = []
         for adds in by_part.values():
@@ -1270,13 +1287,13 @@ class DeltaTable:
                     return (
                         df.withColumn("__dls_z", zcol)
                         .repartitionByRange(n_out, "__dls_z")
-                        .sortWithinPartitions("__dls_z")
+                        .sortWithinPartitions(*pv_order, "__dls_z")
                         .drop("__dls_z")
                     )
                 if cluster_by:
                     return df.repartitionByRange(
                         n_out, *cluster_by
-                    ).sortWithinPartitions(*cluster_by)
+                    ).sortWithinPartitions(*pv_order, *cluster_by)
                 return df.coalesce(n_out)
 
             all_adds += self._restage(snap, adds, layout, data_change=False)

@@ -28,7 +28,7 @@ from dataclasses import replace
 from typing import Any, Callable
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -414,6 +414,13 @@ def _sweep_adds(
     return adds
 
 
+def write_order(partition_by: list[str]) -> list[Column]:
+    """The partition-directory strings a partitioned ``stage_files``
+    write sorts each task's rows by. A layout that sorts within tasks
+    leads with these, or Spark replaces its sort with the write's."""
+    return [F.col(c).cast("string") for c in partition_by]
+
+
 def stage_files(
     df: DataFrame,
     table_path: str,
@@ -421,21 +428,28 @@ def stage_files(
     data_change: bool = True,
     collect_stats: bool = True,
     schema: StructType | None = None,
-    optimized_write: bool = True,
+    sources: list[AddFile] | None = None,
 ) -> list[AddFile]:
     """Write df's data as parquet under data/<commit-id>/ and return the
     AddFile actions (not yet committed). The Spark write is fully
     distributed; only the footer-stat sweep runs on the driver.
 
-    ``optimized_write`` (default on, Delta's optimizedWrite): partitioned
-    stages hash-shuffle on the partition columns first, so each partition
-    value is written by one task — without it, every upstream task writes
-    a sliver into every partition it holds, and a 200-task write into 365
-    date partitions stages 73k files per commit. The shuffle is on the
-    compact pre-write rows and AQE coalesces small partitions. Disable
-    for single-partition-value writes where the extra shuffle buys
-    nothing. Skewed partition values remain one-task writes — split such
-    tables by a finer partition key or compact afterwards.
+    Partitioned stages hash-shuffle on the partition columns first
+    (Delta's optimizedWrite), so each partition value is written by one
+    task — without it, every upstream task writes a sliver into every
+    partition it holds, and a 200-task write into 365 date partitions
+    stages 73k files per commit. The shuffle is on the compact pre-write
+    rows and AQE coalesces small partitions. Skewed partition values
+    remain one-task writes — split such tables by a finer partition key
+    or compact afterwards.
+
+    ``sources``: for a rewrite, the live files every row of df comes
+    from (None for new rows). When they all share one set of partition
+    values there are no slivers to prevent, so the shuffle is skipped
+    and df's own layout is written as it is: a MERGE without insert
+    clauses, DELETE, UPDATE and PURGE save one pass, and OPTIMIZE keeps
+    its bin-packed or clustered files. The shuffle only ever changes the
+    file layout, never the rows.
 
     ``schema`` (the table schema) enables column mapping: logical column
     names are rewritten to their physical parquet names before staging,
@@ -446,10 +460,11 @@ def stage_files(
     abs_dir = os.path.join(table_path, commit_rel)
     if partition_by:
         staged = df
-        if optimized_write:
+        pvs = {tuple(sorted(a.partitionValues.items())) for a in sources or []}
+        if len(pvs) != 1:
             staged = staged.repartition(*[F.col(c) for c in partition_by])
-        for c in partition_by:
-            staged = staged.withColumn(PV_DIR_PREFIX + c, F.col(c).cast("string"))
+        for c, pv in zip(partition_by, write_order(partition_by)):
+            staged = staged.withColumn(PV_DIR_PREFIX + c, pv)
         staged.write.partitionBy(*[PV_DIR_PREFIX + c for c in partition_by]).parquet(
             abs_dir
         )

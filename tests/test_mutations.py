@@ -73,6 +73,36 @@ def test_merge_update_only(spark, table, tmp_table):
     assert got.count() == 100
 
 
+def test_update_only_merge_in_one_partition_runs_five_jobs(spark, tmp_table):
+    """An update-only MERGE whose touched files share one partition value
+    runs five Spark jobs: FIND groups by row and then by file over one
+    exchange on the file column, and the rewrite writes the touched rows
+    without a partition shuffle, one new file per touched file."""
+    from test_build_jobs import jobs_during
+
+    one_part = _readings(spark).filter("p_device_id = 0")
+    write_delta(one_part.filter("device_id < 50"), tmp_table, partition_by=["p_device_id"])
+    write_delta(one_part.filter("device_id >= 50"), tmp_table)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    before = set(dt._log.snapshot().files)
+    assert len(before) == 2
+    src = spark.range(2).select(
+        (F.col("id") * 50 + 5).alias("device_id"), F.lit("loaded").alias("new_status")
+    )  # one matched row in each file
+    merge = (
+        dt.alias("t")
+        .merge(src, "t.device_id = s.device_id", source_alias="s")
+        .whenMatchedUpdate(set={"status": "s.new_status"})
+    )
+    _, jobs = jobs_during(spark, "update_only_merge", merge.execute)
+    assert jobs == 5
+    after = set(dt._log.snapshot().files)
+    assert len(after) == 2 and not after & before
+    got = read_delta(spark, tmp_table)
+    assert {r.device_id for r in got.filter("status = 'loaded'").collect()} == {5, 55}
+    assert got.count() == 20
+
+
 def test_merge_delete_only(spark, table, tmp_table):
     """M2: whenMatchedDelete, the utilities.py:61-73 shape."""
     landed = spark.range(30).select(F.col("id").alias("device_id"))
@@ -460,6 +490,62 @@ def test_optimize_partition_scoped(spark, tmp_table):
         if a.partitionValues.get("p") == "2"
     }.isdisjoint(before.files.keys() - other)
     assert read_delta(spark, tmp_table).count() == 2000
+
+
+def test_optimize_cluster_by_keeps_ranges_on_partitioned_table(spark, tmp_table):
+    """cluster_by on a partitioned table: each partition's rows are
+    range-partitioned and sorted on the clustering column and written in
+    that layout, so a partition holds several sorted files with disjoint
+    ranges rather than one file spanning all of them."""
+    import pyarrow.parquet as pq
+
+    df = spark.range(200_000).select(
+        F.col("id"),
+        (F.col("id") % 2).cast("int").alias("g"),
+        (F.col("id") * 7919 % 200_000).alias("k"),  # a permutation of the ids
+    )
+    write_delta(df, tmp_table, partition_by=["g"])
+    dt = DeltaTable.forPath(spark, tmp_table)
+    dt.optimize(target_file_bytes=200_000, cluster_by=["k"])
+    ranges: dict[str, list] = {}
+    for a in dt._log.snapshot().files.values():
+        ranges.setdefault(a.partitionValues["g"], []).append(
+            (a.stats["minValues"]["k"], a.stats["maxValues"]["k"])
+        )
+        k = pq.read_table(os.path.join(tmp_table, a.path), columns=["k"])["k"]
+        assert k.to_pylist() == sorted(k.to_pylist())
+    assert sorted(ranges) == ["0", "1"]
+    for spans in ranges.values():
+        spans.sort()
+        assert len(spans) > 1
+        assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+    assert read_delta(spark, tmp_table).count() == 200_000
+
+
+def test_optimize_bin_pack_writes_target_sized_files_per_partition(spark, tmp_table):
+    """Bin-packing a partition's small files writes ceil(total / target)
+    files into that partition, not one."""
+    for i in range(6):
+        write_delta(
+            spark.range(i * 1000, (i + 1) * 1000).select(
+                "id", (F.col("id") % 2).cast("int").alias("g")
+            ),
+            tmp_table,
+            partition_by=["g"],
+        )
+    dt = DeltaTable.forPath(spark, tmp_table)
+    sizes: dict[str, list[int]] = {}
+    for a in dt._log.snapshot().files.values():
+        sizes.setdefault(a.partitionValues["g"], []).append(a.size)
+    target = 2 * max(max(v) for v in sizes.values()) + 2  # every file is small
+    dt.optimize(target_file_bytes=target)
+    counts: dict[str, int] = {}
+    for a in dt._log.snapshot().files.values():
+        counts[a.partitionValues["g"]] = counts.get(a.partitionValues["g"], 0) + 1
+    want = {g: -(-sum(v) // target) for g, v in sizes.items()}
+    assert all(n > 1 for n in want.values())
+    assert counts == want
+    assert read_delta(spark, tmp_table).count() == 6000
 
 
 def test_auto_compact_on_write(spark, tmp_path):

@@ -6,6 +6,12 @@ from pyspark.sql import functions as F
 
 from delta_lake_spark import read_delta
 from delta_lake_spark.pipeline.medallion import run_pipeline
+from delta_lake_spark.pipeline.operations import (
+    batch_writer,
+    read_batch_bronze,
+    repair_quarantined,
+    transform_raw,
+)
 from delta_lake_spark.queries.relational import _events
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -44,3 +50,22 @@ def test_full_medallion_pipeline(spark, tmp_path):
     assert set(gold.columns) == {
         "event_type", "n", "avg_reading", "max_reading", "std_reading",
     }
+
+
+def test_bronze_reads_skip_fully_loaded_files(spark, tmp_path):
+    """Once a day's bronze rows are all loaded, the log's status stats
+    prune that day's files from the new-row and quarantine reads."""
+    events = _events(spark, SF_DIR).filter("event_id < 200")
+    paths = run_pipeline(spark, events, str(tmp_path / "medallion"))
+    day0 = set(read_delta(spark, paths["bronze"]).inputFiles())
+    assert day0
+
+    day1 = spark.createDataFrame([('{"event_id": 100000}',)], "value string")
+    batch_writer(transform_raw(day1), partition_column="p_ingestdate")(paths["bronze"])
+    new_rows = read_batch_bronze(spark, paths["bronze"])
+    assert new_rows.count() == 1
+    assert new_rows.inputFiles() and not day0 & set(new_rows.inputFiles())
+    bronze = set(read_delta(spark, paths["bronze"]).inputFiles())
+    user_dim = events.select("event_id", "user_id")
+    repair = repair_quarantined(spark, paths["bronze"], user_dim)
+    assert not bronze & set(repair.inputFiles())
